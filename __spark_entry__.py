@@ -47,16 +47,74 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from ocr_image_to_text_spark import queries as q
 
-    # Dict order matters: the driver certifies a budget-limited PREFIX of
-    # this registry (r1: 40, r2: 46, r3/r4: 50). r5 front block
-    # (tools/cert_ledger.py BUDGET=50), in order: (A) the 5 queries added
-    # or code-changed this round; (B) the 31 queries VERDICT r4 lists as
-    # judge-verified but never driver-certified (cheapest-first); (C) 14
-    # flagship re-certs whose driver certificates date from r1-r3 (the
-    # bench suite + oldest-cert docs queries). tests/test_cert_ledger.py
-    # enforces that drifted/uncertified queries sit inside this prefix.
+    # Dict order matters: each CORRECTNESS run certifies a budget-limited
+    # PREFIX of this registry (r1: 40, r2: 46, r3-r5: 50;
+    # tools/cert_ledger.py BUDGET=50). The r5 front block was (A) the 12
+    # queries added or code-changed in r5, (B) the 31 queries VERDICT r4
+    # lists as judge-verified but never certified by a CORRECTNESS run
+    # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
+    # certified all 50, and they now follow the prefix in those blocks.
+    # The current prefix, in order: (A) the 21 queries whose code drifted
+    # since r5; (B) the 29 oldest remaining certificates.
+    # tests/test_cert_ledger.py enforces that drifted/uncertified queries
+    # sit inside this prefix.
     return {
-        # --- (A) r5 new / code-changed ---
+        # --- (A) drifted since r5: every query that reaches extract_turns
+        #     or spans_table (span offsets computed in the dispatch UDF) ---
+        "chunk_cosine_topk": q.chunk_cosine_topk,
+        "extract_rollup": q.extract_rollup,
+        "extract_spans": q.extract_spans,
+        "conversation_stitch": q.conversation_stitch,
+        "chunks_modern": q.chunks_modern,
+        "conversation_preview_t4": q.conversation_preview_t4,
+        "extract_variant_agreement": q.extract_variant_agreement,
+        "extract_boxes_xycut": q.extract_boxes_xycut,
+        "conversation_quality_trend": q.conversation_quality_trend,
+        "chunk_l2_topk": q.chunk_l2_topk,
+        "extract_boxes_v1": q.extract_boxes_v1,
+        "extract_boxes_v3": q.extract_boxes_v3,
+        "extract_kind_metrics": q.extract_kind_metrics,
+        "conversation_stitch_v1": q.conversation_stitch_v1,
+        "conversation_dedup_seeded": q.conversation_dedup_seeded,
+        "extract_flat": q.extract_flat,
+        "boxes_table_flags": q.boxes_table_flags,
+        "extract_similarity_x16": q.extract_similarity_x16,
+        "boxes_avg_conf": q.boxes_avg_conf,
+        "extract_metrics_cube": q.extract_metrics_cube,
+        "extract_conv_quality": q.extract_conv_quality,
+        # --- (B) the oldest remaining certificates: r2, then r3 in
+        #     registry order ---
+        "events_hourly": q.events_hourly,
+        "events_sessions": q.events_sessions,
+        "media_image_features": q.media_image_features,
+        "media_audio_features": q.media_audio_features,
+        "doc_token_counts": q.doc_token_counts,
+        "doc_fingerprints": q.doc_fingerprints,
+        "doc_entities": q.doc_entities,
+        "doc_quality_v2": q.doc_quality_v2,
+        "ann_cosine_topk": q.ann_cosine_topk,
+        "doc_entities_seeded": q.doc_entities_seeded,
+        "doc_redact": q.doc_redact,
+        "doc_lang": q.doc_lang,
+        "doc_lang_ngram": q.doc_lang_ngram,
+        "doc_stats": q.doc_stats,
+        "doc_quality_v1": q.doc_quality_v1,
+        "doc_best_engine": q.doc_best_engine,
+        "doc_engine_fallback": q.doc_engine_fallback,
+        "doc_chunks_legacy": q.doc_chunks_legacy,
+        "doc_keyword_score_x5": q.doc_keyword_score_x5,
+        "doc_topk_keyword_x6": q.doc_topk_keyword_x6,
+        "doc_sentences": q.doc_sentences,
+        "doc_markdown": q.doc_markdown,
+        "doc_html": q.doc_html,
+        "qa_fallback_x15": q.qa_fallback_x15,
+        "qa_answer_x14": q.qa_answer_x14,
+        "rag_fallback_pipeline": q.rag_fallback_pipeline,
+        "extract_angle_mode": q.extract_angle_mode,
+        "conversation_turn_latency": q.conversation_turn_latency,
+        "doc_keyword_topk_x5": q.doc_keyword_topk_x5,
+        # ---- end of the 50-entry certified prefix ----
+        # --- r5 (A): 12 added or code-changed in r5 (CORRECTNESS_r05) ---
         "conversation_salted_join": q.conversation_salted_join,
         "extract_layout_analysis": q.extract_layout_analysis,
         "dedup_simhash_pairs": q.dedup_simhash_pairs,
@@ -69,7 +127,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
         "dedup_apply_minhash": q.dedup_apply_minhash,
-        # --- (B) never in any CORRECTNESS_r*.json (VERDICT r4 list) ---
+        # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05) ---
         "doc_length_histogram": q.doc_length_histogram,
         "corpus_length_quantiles": q.corpus_length_quantiles,
         "corpus_sample_stratified": q.corpus_sample_stratified,
@@ -100,23 +158,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semdedup_prune": q.semdedup_prune,
         "dedup_dup_spans": q.dedup_dup_spans,
         "dedup_c4_spans": q.dedup_c4_spans,
-        "chunk_cosine_topk": q.chunk_cosine_topk,
-        # --- (C) flagship re-certs (driver certificates from r1-r3) ---
-        "extract_rollup": q.extract_rollup,
-        "extract_spans": q.extract_spans,
-        "conversation_stitch": q.conversation_stitch,
-        "chunks_modern": q.chunks_modern,
+        # --- r5 (C): 7 flagship re-certs (CORRECTNESS_r05) ---
         "dedup_exact": q.dedup_exact,
         "dedup_minhash_lsh": q.dedup_minhash_lsh,
         "doc_simhash": q.doc_simhash,
-        # ---- end of the 50-entry certified prefix ----
-        "doc_token_counts": q.doc_token_counts,
-        "doc_fingerprints": q.doc_fingerprints,
-        "doc_entities": q.doc_entities,
-        "doc_quality_v2": q.doc_quality_v2,
-        "ann_cosine_topk": q.ann_cosine_topk,
-        "events_hourly": q.events_hourly,
-        "events_sessions": q.events_sessions,
         # --- r4-certified block (CORRECTNESS_r04, green) ---
         "tpch_top_supplier": q.tpch_top_supplier,
         "tpch_priority_returns": q.tpch_priority_returns,
@@ -127,13 +172,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_custdist": q.tpch_custdist,
         "tpch_large_orders": q.tpch_large_orders,
         "doc_quality_deciles": q.doc_quality_deciles,
-        "conversation_preview_t4": q.conversation_preview_t4,
         "conversation_latency_quantiles": q.conversation_latency_quantiles,
         "conversation_role_transitions": q.conversation_role_transitions,
         "conversation_tool_stats": q.conversation_tool_stats,
         "turn_link_density": q.turn_link_density,
         "corpus_source_stats": q.corpus_source_stats,
-        "extract_variant_agreement": q.extract_variant_agreement,
         "corpus_boilerplate_lines": q.corpus_boilerplate_lines,
         "doc_strip_boilerplate": q.doc_strip_boilerplate,
         "corpus_sample_weighted": q.corpus_sample_weighted,
@@ -150,7 +193,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivfpq_adc_topk": q.ann_ivfpq_adc_topk,
         "ann_ivf_lloyd_topk": q.ann_ivf_lloyd_topk,
         "ann_ivf_recall": q.ann_ivf_recall,
-        "extract_boxes_xycut": q.extract_boxes_xycut,
         "doc_lang_agreement": q.doc_lang_agreement,
         "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
         "extract_box_overlaps": q.extract_box_overlaps,
@@ -159,50 +201,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_nation_volume": q.tpch_nation_volume,
         "tpch_market_share": q.tpch_market_share,
         "events_retention": q.events_retention,
-        "conversation_quality_trend": q.conversation_quality_trend,
         "dedup_fingerprint_pairs": q.dedup_fingerprint_pairs,
         "doc_char_entropy": q.doc_char_entropy,
         "events_trailing_value": q.events_trailing_value,
         "events_funnel": q.events_funnel,
         "tpch_pricing_summary": q.tpch_pricing_summary,
         "tpch_top_revenue": q.tpch_top_revenue,
-        # --- r3-certified remainder ---
-        "media_image_features": q.media_image_features,
-        "media_audio_features": q.media_audio_features,
-        "chunk_l2_topk": q.chunk_l2_topk,
-        # --- extraction pipeline (driver-green r01-r03) ---
-        "extract_boxes_v1": q.extract_boxes_v1,
-        "extract_boxes_v3": q.extract_boxes_v3,
-        "extract_kind_metrics": q.extract_kind_metrics,
-        "conversation_stitch_v1": q.conversation_stitch_v1,
-        "conversation_dedup_seeded": q.conversation_dedup_seeded,
-        "extract_flat": q.extract_flat,
-        "boxes_table_flags": q.boxes_table_flags,
-        "extract_similarity_x16": q.extract_similarity_x16,
         # --- documents analytics (SURVEY §2.8) ---
-        "doc_entities_seeded": q.doc_entities_seeded,
-        "doc_redact": q.doc_redact,
-        "doc_lang": q.doc_lang,
-        "doc_lang_ngram": q.doc_lang_ngram,
-        "doc_stats": q.doc_stats,
-        "doc_quality_v1": q.doc_quality_v1,
-        "doc_best_engine": q.doc_best_engine,
-        "doc_engine_fallback": q.doc_engine_fallback,
-        "doc_chunks_legacy": q.doc_chunks_legacy,
-        "doc_keyword_score_x5": q.doc_keyword_score_x5,
-        "doc_topk_keyword_x6": q.doc_topk_keyword_x6,
-        "doc_sentences": q.doc_sentences,
-        "doc_markdown": q.doc_markdown,
-        "doc_html": q.doc_html,
-        "qa_fallback_x15": q.qa_fallback_x15,
-        "qa_answer_x14": q.qa_answer_x14,
-        "rag_fallback_pipeline": q.rag_fallback_pipeline,
-        "boxes_avg_conf": q.boxes_avg_conf,
-        "extract_angle_mode": q.extract_angle_mode,
-        "extract_metrics_cube": q.extract_metrics_cube,
-        "extract_conv_quality": q.extract_conv_quality,
-        "conversation_turn_latency": q.conversation_turn_latency,
-        "doc_keyword_topk_x5": q.doc_keyword_topk_x5,
         "doc_txt_envelope": q.doc_txt_envelope,
         # --- training-data pipeline ops ---
         "dedup_ngram_jaccard": q.dedup_ngram_jaccard,

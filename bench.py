@@ -4,8 +4,11 @@
 Prints exactly ONE JSON line:
 
     {"metric": "total_bench_sec", "value": N, "unit": "sec",
-     "queries": {"extract_rollup": sec, ...}, "sf": 0.1,
+     "queries": {"extract_rollup": sec, ...}, "failed": [...], "sf": 0.1,
      "turns_per_sec": N, "n_turns": N, "cpus": N}
+
+A query that raises in either pass is listed under "failed" with a null
+time, and the total ("value") is null: a partial suite has no total.
 
 Per-query timing forces full materialization through the noop sink (no
 collect — rows never cross to the driver). The extraction throughput
@@ -81,31 +84,32 @@ def run_suite(spark, sf_dir: str, n_turns: int, sf, cpus: int) -> dict:
     rot = len(headline) // 2
     orders = [headline, headline[rot:] + headline[:rot]]
     passes: list[dict[str, float]] = []
+    failed: list[str] = []
     for order in orders:
         release_all()
         t: dict[str, float] = {}
         for name, fn in order:
             try:
                 t[name] = round(_bench_query(spark, fn, sf_dir), 3)
-            except Exception as exc:  # one broken query must not zero the bench
+            except Exception as exc:  # one broken query must not stop the bench
                 print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                t[name] = -1.0
+                if name not in failed:
+                    failed.append(name)
         passes.append(t)
 
-    timings: dict[str, float] = {}
-    for name, _ in headline:
-        vals = [p[name] for p in passes if p.get(name, -1.0) > 0]
-        timings[name] = round(min(vals), 3) if vals else -1.0
-
-    total = round(sum(t for t in timings.values() if t > 0), 3)
-    extract_sec = timings.get("extract_rollup", 0.0)
-    turns_per_sec = round(n_turns / extract_sec, 1) if extract_sec > 0 else 0.0
+    timings: dict[str, float | None] = {
+        name: None if name in failed else min(p[name] for p in passes)
+        for name, _ in headline}
+    total = None if failed else round(sum(timings.values()), 3)
+    extract_sec = timings["extract_rollup"]
+    turns_per_sec = round(n_turns / extract_sec, 1) if extract_sec else None
 
     return {
         "metric": "total_bench_sec",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "failed": failed,
         "sf": sf,
         "turns_per_sec": turns_per_sec,
         "n_turns": n_turns,
@@ -114,7 +118,7 @@ def run_suite(spark, sf_dir: str, n_turns: int, sf, cpus: int) -> dict:
             "passes": 2,
             "rotation": rot,
             "aggregation": "per-query min of 2 rotated passes",
-            "pass_totals": [round(sum(v for v in p.values() if v > 0), 3)
+            "pass_totals": [None if failed else round(sum(p.values()), 3)
                             for p in passes],
         },
     }

@@ -13,9 +13,10 @@ Two-phase structure (the part extraction does not need):
   pass, never a drifted recount over a partially-curated corpus.
 * **Phase 1 — bucketed waves.** Each wave strips/gates/scores its
   buckets map-side (the set rides a 1-row broadcast), writes curated
-  parquet with dynamic partition overwrite, THEN appends the manifest
-  rows (write-ahead ordering: data first, manifest is the commit
-  marker). Resume = skip buckets whose latest manifest row is done.
+  parquet with dynamic partition overwrite, THEN the job's own process
+  commits the manifest rows (``jobs/manifest.py``; write-ahead ordering:
+  data first, manifest is the commit marker). Resume = skip buckets with a committed
+  done row.
 
 At 100 TB: phase 0 is one line-hash shuffle with map-side
 array_distinct compaction (the relative doc-frequency gate bounds the
@@ -40,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import manifest
+
 CURATE_MANIFEST_SCHEMA = StructType([
     StructField("part_id", IntegerType(), False),
     StructField("status", StringType(), False),
@@ -56,14 +59,6 @@ CURATE_MANIFEST_SCHEMA = StructType([
 def _part_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                   F.lit(n_buckets)).cast("int")
-
-
-def _done_parts(spark: SparkSession, manifest_path: str) -> set[int]:
-    if not os.path.exists(manifest_path):
-        return set()
-    m = spark.read.parquet(manifest_path)
-    return {r.part_id for r in m.filter(F.col("status") == "done")
-            .select("part_id").distinct().collect()}
 
 
 def _ensure_bp_set(spark: SparkSession, docs, bp_dir: str):
@@ -97,26 +92,17 @@ def run_curate_job(
     bp = _ensure_bp_set(spark, docs, bp_dir)
     bp_set = bp.agg(F.array_sort(F.collect_set("line")).alias("bp"))
 
-    done = _done_parts(spark, manifest_dir)
+    lineage = {
+        "input": input_path, "n_buckets": n_buckets,
+        "app_id": spark.sparkContext.applicationId,
+    }
+    done = manifest.done_parts(manifest_dir)
     todo = [p for p in range(n_buckets) if p not in done]
     if done:
         print(f"curate_job: resuming run={run_id}: "
               f"{len(done)} parts done, {len(todo)} to go")
-        prev = (spark.read.parquet(manifest_dir)
-                .filter(F.col("status") == "done")
-                .select("lineage").limit(1).collect())
-        if prev and prev[0].lineage:
-            pl = json.loads(prev[0].lineage)
-            if pl.get("n_buckets") != n_buckets:
-                raise ValueError(
-                    f"resume mismatch: manifest has n_buckets="
-                    f"{pl.get('n_buckets')!r}, this run has {n_buckets!r}"
-                    " — use a fresh --out dir")
-
-    lineage = json.dumps({
-        "input": input_path, "n_buckets": n_buckets,
-        "app_id": spark.sparkContext.applicationId,
-    })
+        manifest.check_lineage(manifest_dir, lineage, ("n_buckets",))
+    lineage_json = json.dumps(lineage)
 
     base = docs.withColumn("part_id", _part_col(n_buckets))
     waves = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
@@ -167,9 +153,8 @@ def run_curate_job(
                          int(s.n_kept) if s else 0,
                          int(s.chars_in) if s else 0,
                          int(s.chars_out) if s else 0,
-                         wall_ms, run_id, lineage))
-        (spark.createDataFrame(rows, CURATE_MANIFEST_SCHEMA)
-         .coalesce(1).write.mode("append").parquet(manifest_dir))
+                         wall_ms, run_id, lineage_json))
+        manifest.commit(manifest_dir, CURATE_MANIFEST_SCHEMA, rows)
         kept_counts.append(sum(int(s.n_kept) for s in stats.values()))
         print(f"curate_job: wave {wave[0]}..{wave[-1]} "
               f"wall={wall_ms}ms", flush=True)
@@ -178,12 +163,8 @@ def run_curate_job(
             raise RuntimeError(
                 f"curate_job: injected failure after {n_done_waves} waves")
 
-    if done:
-        m = spark.read.parquet(manifest_dir)
-        n_kept = int(m.filter(F.col("status") == "done")
-                     .agg(F.sum("n_kept")).collect()[0][0] or 0)
-    else:
-        n_kept = sum(kept_counts)
+    n_kept = (manifest.done_total(manifest_dir, "n_kept") if done
+              else sum(kept_counts))
     return {
         "run_id": run_id,
         "n_buckets": n_buckets,

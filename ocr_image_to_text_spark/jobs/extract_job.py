@@ -13,17 +13,36 @@ restored at write via sortWithinPartitions).
 
 Checkpoint / resume
 -------------------
-After each wave commits, one manifest row per bucket is appended::
+A wave is two Spark executions plus a commit from the job's own process
+(three executions with ``max_payload_chars``: the per-bucket count of
+dropped payloads runs first):
+
+1. **rollup write** — scan → salted shuffle → dispatch UDF → the published
+   rollup parquet (partitioned by ``part_id``, sorted by conversation).
+   The UDF also emits the int-only ``span_starts`` per turn, kept in the
+   rollup.
+2. **spans write** — a column-pruned re-read of this wave's rollup
+   partitions, exploded into the spans parquet. A ``DataFrame.observe``
+   on the re-read collects the per-bucket stats (turns, chars, blocks) as
+   the write runs. It is one result stage, so Spark merges each task's
+   metrics exactly once.
+3. **commit** — the job's process appends one manifest row per bucket
+   (``jobs/manifest.py``: pyarrow write to a hidden temp file, published
+   by ``os.replace``)::
 
     _manifest(part_id, status, n_turns, chars_in, chars_out,
-              blocks_kept, blocks_dropped, wall_ms, run_id, lineage)
+              blocks_kept, blocks_dropped, n_oversized, wall_ms, run_id,
+              lineage)
 
-Restart = anti-join: buckets whose latest manifest status is ``done`` are
-skipped. Output writes use **dynamic partition overwrite** per wave, so a
-wave that died mid-write is cleanly re-written — the manifest row is the
-commit marker (write-ahead ordering: data first, then manifest). This is
-the Parquet-warehouse emulation of Iceberg ``MERGE INTO`` + snapshot
-commit (SURVEY.md §7: no Iceberg runtime jar in the sandbox; on a real
+Restart = anti-join: buckets with a committed ``done`` row are skipped.
+Output writes use **dynamic partition overwrite** per wave, so a wave that
+died mid-write (or before its manifest file was renamed into place) is
+cleanly re-written — the manifest row is the commit marker (write-ahead
+ordering: data first, then manifest). A resume must match the committed
+lineage on variant, extras, n_buckets and the rollup format (its schema);
+a manifest without one of those keys is refused too. This is the
+Parquet-warehouse emulation of Iceberg ``MERGE INTO`` + snapshot commit
+(SURVEY.md §7: no Iceberg runtime jar is available here; on a real
 cluster the same logic targets an Iceberg manifest table and the data
 write becomes a single atomic ``overwritePartitions``).
 
@@ -40,7 +59,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -50,7 +69,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.extract import extract_turns, span_cols, spans_table
+from ..operators.extract import extract_turns, spans_table
+from . import manifest
 
 MANIFEST_SCHEMA = StructType([
     StructField("part_id", IntegerType(), False),
@@ -65,20 +85,24 @@ MANIFEST_SCHEMA = StructType([
     StructField("run_id", StringType(), False),
     StructField("lineage", StringType(), True),
 ])
+# manifest stat column ← the rollup column it sums (None: count rows)
+_STATS = (("n_turns", None), ("chars_in", "chars_in"),
+          ("chars_out", "chars_out"), ("blocks_kept", "n_blocks_kept"),
+          ("blocks_dropped", "n_blocks_dropped"))
+_RESUME_KEYS = ("variant", "extras", "n_buckets", "rollup_format")
 
 
 def part_id_col(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def _done_parts(spark: SparkSession, manifest_path: str) -> set[int]:
-    if not os.path.exists(manifest_path):
-        return set()
-    m = spark.read.parquet(manifest_path)
-    # a part is done once any committed manifest row says so (rows are
-    # only ever appended after a successful data write)
-    return {r.part_id for r in m.filter(F.col("status") == "done")
-            .select("part_id").distinct().collect()}
+def _part_stats(parts: list[int]) -> list:
+    """Per-bucket sums as plain aggregates (observe() has no groupBy):
+    ``<stat>_<part>`` for every stat and bucket of the wave."""
+    pid = F.col("part_id")
+    return [(F.count_if(pid == p) if src is None
+             else F.sum(F.when(pid == p, F.col(src)))).alias(f"{stat}_{p}")
+            for p in parts for stat, src in _STATS]
 
 
 def run_extract_job(
@@ -107,40 +131,35 @@ def run_extract_job(
         salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     df = spark.read.parquet(input_path)
-    done = _done_parts(spark, manifest_dir)
+    base = df.withColumn("part_id", part_id_col(n_buckets))
+    # the rollup's schema as written (analysis only, no Spark job): it is
+    # the rollup format of the lineage and the schema of the re-reads
+    rollup_schema = extract_turns(base, variant=variant, extras=extras) \
+        .withColumn("part_id", part_id_col(n_buckets)).schema
+    lineage = {
+        "input": input_path, "variant": variant, "n_buckets": n_buckets,
+        "extras": extras, "rollup_format": rollup_schema.simpleString(),
+        "app_id": spark.sparkContext.applicationId,
+    }
+    done = manifest.done_parts(manifest_dir)
     todo = [p for p in range(n_buckets) if p not in done]
     if done:
         print(f"extract_job: resuming run={run_id}: "
               f"{len(done)} parts done, {len(todo)} to go")
         # Refuse to resume under settings that change row semantics or the
-        # stage/rollup schema: committed partitions would silently diverge
-        # from the new waves (schema inference reads one arbitrary footer).
-        prev = (spark.read.parquet(manifest_dir)
-                .filter(F.col("status") == "done")
-                .select("lineage").limit(1).collect())
-        if prev and prev[0].lineage:
-            pl = json.loads(prev[0].lineage)
-            for key, val in (("variant", variant), ("extras", extras),
-                             ("n_buckets", n_buckets)):
-                if key in pl and pl[key] != val:
-                    raise ValueError(
-                        f"resume mismatch: manifest has {key}={pl[key]!r}, "
-                        f"this run has {val!r} — use a fresh --out dir")
-
-    lineage = json.dumps({
-        "input": input_path, "variant": variant, "n_buckets": n_buckets,
-        "extras": extras,
-        "app_id": spark.sparkContext.applicationId,
-    })
+        # rollup schema: committed partitions would silently diverge from
+        # the new waves.
+        manifest.check_lineage(manifest_dir, lineage, _RESUME_KEYS)
+    lineage_json = json.dumps(lineage)
 
     waves = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    base = df.withColumn("part_id", part_id_col(n_buckets))
     n_done_waves = 0
-    run_turn_counts: list[int] = []
+    n_this_run = 0
     t_proc0 = time.perf_counter()
     for wave in waves:
         t0 = time.perf_counter()
-        sub = base.filter(F.col("part_id").isin([int(p) for p in wave]))
+        parts = [int(p) for p in wave]
+        sub = base.filter(F.col("part_id").isin(parts))
         # F6 analog (src/ocr/preprocessor.py:14-42 size guard, SURVEY §2.9
         # resize-cap row): oversized payloads are dropped — never silently;
         # the count per bucket goes to the manifest (north_star "no silent
@@ -154,88 +173,56 @@ def run_extract_job(
                                 over.groupBy("part_id").agg(F.count("*").alias("n"))
                                 .collect()}
             sub = sub.filter(size_col <= max_payload_chars)
-        # Salted repartition: turn-granular hash spreads skewed convs.
-        ext = extract_turns(sub, variant=variant, partitions=salt_partitions,
-                            extras=extras)
-        # span arrays are derivable from extracted_text (span_cols) —
-        # don't double-store the string data in the published table
-        ext = (ext.drop("span_starts", "span_ends", "span_texts")
-               .withColumn("part_id", part_id_col(n_buckets)))
-        # One UDF pass → the PUBLISHED rollup parquet (partitioned,
-        # sorted); spans/stats derive from column-pruned re-reads of it.
-        # (The original design wrote a _stage dir and then COPIED it to
-        # rollup with a second repartition — one full extra write and two
-        # extra corpus shuffles per wave that bought nothing: dynamic
+        # Execution 1 — one UDF pass → the PUBLISHED rollup parquet
+        # (partitioned, sorted). Salted repartition: turn-granular hash
+        # spreads skewed convs. (A former _stage dir copied to rollup cost
+        # a full extra write and two corpus shuffles per wave; dynamic
         # partition overwrite + the manifest commit marker already make
-        # the publish crash-consistent, and the 1-vs-4-CPU decomposition
-        # showed those derive steps scaling at ~0.5/core while the
-        # extraction stage scales at 0.89. No persist: caching the span
-        # arrays in the JVM heap measured 3x GC wall at 32 tasks, and
-        # disk-backed re-reads ride the page cache.)
+        # the publish crash-consistent. No persist: caching span arrays in
+        # the JVM heap measured 3x GC wall at 32 tasks, and disk-backed
+        # re-reads ride the page cache.)
+        ext = (extract_turns(sub, variant=variant, partitions=salt_partitions,
+                             extras=extras)
+               .withColumn("part_id", part_id_col(n_buckets)))
         (ext.repartition("part_id")
          .sortWithinPartitions("conv_id", "turn_idx")
          .write.mode("overwrite").partitionBy("part_id").parquet(rollup_dir))
-        t_stage = time.perf_counter() - t0
-        # Read back ONLY this wave's partitions (the table accumulates
-        # across waves; partition pruning keeps derives wave-local).
-        staged = (spark.read.parquet(rollup_dir)
-                  .filter(F.col("part_id").isin([int(p) for p in wave])))
-        t_roll = time.perf_counter() - t0 - t_stage  # rollup IS the stage
-        starts, ends, texts = span_cols(F.col("extracted_text"))
-        with_spans = staged.select(
-            "conv_id", "turn_idx", "part_id",
-            starts.alias("span_starts"), ends.alias("span_ends"),
-            texts.alias("span_texts"))
-        # No repartition: rows arrive already grouped by part_id from the
-        # pruned partitioned read, so the partitionBy write needs no
-        # shuffle (the part_id hash per span row is cheap; the shuffle of
-        # the exploded span TEXT — the job's largest table — was not).
-        (spans_table(with_spans).withColumn("part_id", part_id_col(n_buckets))
+        t_rollup = time.perf_counter() - t0
+        # Execution 2 — re-read ONLY this wave's partitions (the table
+        # accumulates across waves; partition pruning keeps it wave-local)
+        # with the known schema (no inference job), observe the per-bucket
+        # stats, explode the committed span_starts into spans. No
+        # repartition: rows arrive grouped by part_id from the pruned
+        # partitioned read, so the partitionBy write needs no shuffle.
+        staged = (spark.read.schema(rollup_schema).parquet(rollup_dir)
+                  .filter(F.col("part_id").isin(parts)))
+        obs = Observation()
+        (spans_table(staged.observe(obs, *_part_stats(parts)))
+         .withColumn("part_id", part_id_col(n_buckets))
          .write.mode("overwrite").partitionBy("part_id").parquet(spans_dir))
-        t_spans = time.perf_counter() - t0 - t_stage - t_roll
-        t1 = time.perf_counter()
-        stats = {r.part_id: r for r in staged.groupBy("part_id").agg(
-            F.count("*").alias("n_turns"),
-            F.sum("chars_in").alias("chars_in"),
-            F.sum("chars_out").alias("chars_out"),
-            F.sum("n_blocks_kept").alias("blocks_kept"),
-            F.sum("n_blocks_dropped").alias("blocks_dropped"),
-        ).collect()}
-        t_stats = time.perf_counter() - t1
-        print(f"extract_job: wave {wave[0]}..{wave[-1]} stage={t_stage:.1f}s "
-              f"rollup={t_roll:.1f}s spans={t_spans:.1f}s stats={t_stats:.1f}s",
-              flush=True)
+        stats = obs.get
+        t_spans = time.perf_counter() - t0 - t_rollup
         wall_ms = int((time.perf_counter() - t0) * 1000)
-        run_turn_counts.append(sum(int(s.n_turns) for s in stats.values()))
-        rows = []
-        for p in wave:
-            s = stats.get(p)
-            rows.append((int(p), "done",
-                         int(s.n_turns) if s else 0,
-                         int(s.chars_in) if s else 0,
-                         int(s.chars_out) if s else 0,
-                         int(s.blocks_kept) if s else 0,
-                         int(s.blocks_dropped) if s else 0,
-                         int(oversized_counts.get(p, 0)),
-                         wall_ms, run_id, lineage))
-        # Commit marker: manifest row lands only after the data write.
-        (spark.createDataFrame(rows, MANIFEST_SCHEMA)
-         .coalesce(1).write.mode("append").parquet(manifest_dir))
+        rows = [(p, "done",
+                 *(int(stats[f"{stat}_{p}"] or 0) for stat, _ in _STATS),
+                 int(oversized_counts.get(p, 0)), wall_ms, run_id, lineage_json)
+                for p in parts]
+        n_this_run += sum(r[2] for r in rows)
+        # Commit marker: manifest rows land only after both data writes.
+        t1 = time.perf_counter()
+        manifest.commit(manifest_dir, MANIFEST_SCHEMA, rows)
+        t_commit = time.perf_counter() - t1
+        print(f"extract_job: wave {wave[0]}..{wave[-1]} rollup={t_rollup:.1f}s "
+              f"spans={t_spans:.1f}s commit={t_commit:.2f}s", flush=True)
         n_done_waves += 1
         if fail_after_waves is not None and n_done_waves >= fail_after_waves:
             raise RuntimeError(
                 f"extract_job: injected failure after {n_done_waves} waves")
 
-    # n_turns from the in-memory per-wave stats (this run) plus one manifest
-    # read only when resuming (prior runs' turns live only in the manifest)
-    n_this_run = sum(t for t in run_turn_counts)
-    if done:
-        m = spark.read.parquet(manifest_dir)
-        n_total = int(m.filter(F.col("status") == "done")
-                      .agg(F.sum("n_turns")).collect()[0][0] or 0)
-    else:
-        n_total = n_this_run
-    summary = {
+    # prior runs' turns live only in the manifest
+    n_total = (manifest.done_total(manifest_dir, "n_turns") if done
+               else n_this_run)
+    return {
         "run_id": run_id,
         "n_buckets": n_buckets,
         "resumed_parts": len(done),
@@ -243,4 +230,3 @@ def run_extract_job(
         "wall_s": round(time.perf_counter() - t_proc0, 3),
         "n_turns": n_total,
     }
-    return summary

@@ -8,17 +8,20 @@ The pipeline (SURVEY.md §3.1 Spark restatement)::
         (boxes: F1 conf filter + A2/A3 clustering + A1/A4 assembly;
          html: DOM block collect + density scoring + X1 clean;
          plain: X1 clean via Python `re` — oracle-exact)
-      → rollup metrics + span offsets (JVM exprs) → spans via posexplode
+      → rollup metrics + span starts → spans via posexplode
 
 Two structural choices measured on the bench tier:
 
 * one dispatch UDF instead of a per-kind branch + unionByName — the
   branch plan deserialized every row once per branch (3 shuffle reads,
   3 Python stages): ~3-4x wall at local[32];
-* the UDF emits ONLY scalars. Span offsets (SURVEY §2.5 W4) are a pure
-  prefix-sum over split(extracted_text, '\\n') computed JVM-side, so the
-  Arrow boundary never carries the three per-turn arrays (string data
-  would otherwise cross it twice).
+* the UDF computes the span offsets (SURVEY §2.5 W4) itself: one O(len)
+  Python walk over extracted_text.split('\\n') per turn, emitted as an
+  int-only ``span_starts`` array beside the scalars. The line texts never
+  cross the Arrow boundary — spans_table re-splits extracted_text
+  JVM-side, and span_end is span_start + length(line). (The former
+  JVM prefix sum was an interpreted aggregate/zip_with lambda fold whose
+  array concat made it O(lines^2) per turn.)
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     IntegerType,
     LongType,
@@ -50,8 +54,10 @@ RESULT_SCHEMA = StructType(
         StructField("table_flag", BooleanType()),
         StructField("flat_text", StringType()),
         StructField("avg_conf_x1e9", LongType()),
+        StructField("span_starts", ArrayType(IntegerType())),
     ]
 )
+
 
 # Java-regex payload sniffers (JVM-side; semantics mirror pyref.classify_kind).
 # Java's \s and \b are ASCII by default while Python's are Unicode — a
@@ -70,6 +76,19 @@ HTML_SNIFF_JAVA = (
 BOXES_SNIFF_JAVA = rf"^[{PY_WS}]*\{{"
 
 
+def span_starts_of(text: str) -> list[int]:
+    """W4 — start offset of each '\\n'-delimited line of ``text``
+    (pyref.spans_of semantics: empty text → no spans, trailing empty
+    lines kept). Offsets count code points, as Spark's length() does."""
+    if not text:
+        return []
+    starts, pos = [], 0
+    for line in text.split("\n"):
+        starts.append(pos)
+        pos += len(line) + 1
+    return starts
+
+
 def make_dispatch_udf(variant: str = "v2", geometry: str = "easy",
                       conf_threshold: float = 0.3):
     """ONE fused extractor for all payload kinds (see module docstring)."""
@@ -80,15 +99,14 @@ def make_dispatch_udf(variant: str = "v2", geometry: str = "easy",
         rows = []
         for k, t, o in zip(kind.to_numpy(), text.to_numpy(), tool.to_numpy()):
             if k == "boxes":
-                rows.append(extract_boxes_json(o, variant, geometry, conf_threshold))
+                row = extract_boxes_json(o, variant, geometry, conf_threshold)
             elif k == "html":
-                rows.append((*extract_html_one(t or ""), False, None, None))
+                row = (*extract_html_one(t or ""), False, None, None)
             else:
                 clean = clean_block(t or "")  # X1, Python `re`
-                rows.append((clean, 1 if clean else 0, 0, False, None, None))
-        return pd.DataFrame(rows, columns=[
-            "extracted_text", "n_blocks_kept", "n_blocks_dropped", "table_flag",
-            "flat_text", "avg_conf_x1e9"])
+                row = (clean, 1 if clean else 0, 0, False, None, None)
+            rows.append((*row, span_starts_of(row[0])))
+        return pd.DataFrame(rows, columns=RESULT_SCHEMA.names)
 
     return extract_dispatch_udf
 
@@ -137,29 +155,6 @@ def kind_col(text: Column = None, tool: Column = None) -> Column:
     )
 
 
-def span_cols(text: Column) -> tuple[Column, Column, Column]:
-    """W4 — char-offset spans of each output line, as JVM expressions.
-
-    Semantics match the oracle (pyref.spans_of): empty text → no spans;
-    else one span per '\\n'-delimited line (trailing empties kept),
-    starts = running offset, ends = start + len(line).
-    """
-    lines = F.when(F.length(text) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(text, "\n", -1))
-    starts = F.aggregate(
-        lines,
-        F.struct(F.array().cast("array<int>").alias("s"),
-                 F.lit(0).cast("int").alias("pos")),
-        lambda acc, l: F.struct(
-            F.concat(acc["s"], F.array(acc["pos"])).alias("s"),
-            (acc["pos"] + F.length(l) + F.lit(1)).cast("int").alias("pos"),
-        ),
-        lambda acc: acc["s"],
-    )
-    ends = F.zip_with(starts, lines, lambda s, l: (s + F.length(l)).cast("int"))
-    return starts, ends, lines
-
-
 def extract_turns(
     df: DataFrame,
     variant: str = "v2",
@@ -171,9 +166,10 @@ def extract_turns(
     """Per-turn extraction rollup.
 
     Output: (conv_id, turn_idx, kind, extracted_text, n_blocks_kept,
-    n_blocks_dropped, table_flag, chars_in, chars_out, span_starts,
-    span_ends, span_texts) [+ flat_text, avg_conf_x1e9 when extras=True —
-    the A5/A9 box products the dispatch UDF computes from the same parse].
+    n_blocks_dropped, table_flag, chars_in, chars_out, span_starts)
+    [+ flat_text, avg_conf_x1e9 when extras=True — the A5/A9 box products
+    the dispatch UDF computes from the same parse]. ``span_starts`` is the
+    int-only input of spans_table.
 
     Turns are independent, so the pre-UDF repartition salts by
     (conv_id, turn_idx) — a 10^6-turn conversation spreads over all tasks
@@ -189,7 +185,6 @@ def extract_turns(
     dispatch = make_dispatch_udf(variant, geometry, conf_threshold)
     out = base.withColumn(
         "r", dispatch(F.col("kind"), F.col("text"), F.col("tool")))
-    starts, ends, texts = span_cols(F.col("r.extracted_text"))
     cols = [
         F.col("conv_id"),
         F.col("turn_idx"),
@@ -201,9 +196,7 @@ def extract_turns(
         (F.length(F.coalesce(F.col("text"), F.lit(""))) +
          F.length(F.coalesce(F.col("tool"), F.lit("")))).alias("chars_in"),
         F.length(F.col("r.extracted_text")).alias("chars_out"),
-        starts.alias("span_starts"),
-        ends.alias("span_ends"),
-        texts.alias("span_texts"),
+        F.col("r.span_starts").alias("span_starts"),
     ]
     if extras:
         cols += [F.col("r.flat_text").alias("flat_text"),
@@ -212,26 +205,27 @@ def extract_turns(
 
 
 def spans_table(extracted: DataFrame) -> DataFrame:
-    """Explode the per-turn span arrays into the north_star spans schema:
-    (conv_id, turn_idx, span_start, span_end, text)."""
-    z = extracted.select(
-        "conv_id",
-        "turn_idx",
-        F.arrays_zip(
-            F.col("span_starts").alias("span_start"),
-            F.col("span_ends").alias("span_end"),
-            F.col("span_texts").alias("text"),
-        ).alias("z"),
+    """Explode the per-turn spans into the north_star spans schema:
+    (conv_id, turn_idx, span_idx, span_start, span_end, text).
+
+    Needs conv_id, turn_idx, extracted_text and span_starts. The lines
+    are re-split JVM-side; slicing them to size(span_starts) drops the
+    single '' that split() returns for empty text (which has no spans).
+    """
+    lines = F.split(F.col("extracted_text"), "\n", -1)
+    z = F.arrays_zip(
+        F.col("span_starts").alias("span_start"),
+        F.slice(lines, 1, F.size("span_starts")).alias("text"),
     )
-    return z.select(
+    return extracted.select(
         "conv_id",
         "turn_idx",
-        F.posexplode("z").alias("span_idx", "s"),
+        F.posexplode(z).alias("span_idx", "s"),
     ).select(
         "conv_id",
         "turn_idx",
         "span_idx",
         F.col("s.span_start").alias("span_start"),
-        F.col("s.span_end").alias("span_end"),
+        (F.col("s.span_start") + F.length("s.text")).alias("span_end"),
         F.col("s.text").alias("text"),
     )

@@ -38,17 +38,15 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Session-scoped extraction cache: several queries (spans, stitch, chunks,
-# cube) consume the same per-turn extraction; persisting the SCALAR subset
-# once per (session, tier) means the UDF pass runs once per session instead
-# of once per query. Span arrays are deliberately not cached — they're
-# cheap JVM expressions over extracted_text, and materializing them in the
-# block store measured 3x GC wall at high concurrency.
+# cube) consume the same per-turn extraction; persisting it once per
+# (session, tier) means the UDF pass runs once per session instead of once
+# per query. Of the spans only the int span_starts array is cached; the
+# line texts are re-split by spans_table (caching the string arrays in the
+# block store measured 3x GC wall at high concurrency).
 _EXT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _extracted(spark: SparkSession, sf_dir: str, variant: str = "v2") -> DataFrame:
-    from .operators.extract import span_cols
-
     app_id = spark.sparkContext.applicationId
     # Evict entries from previous sessions: their persisted blocks are gone
     # with the old context, and long-lived processes cycling sessions would
@@ -63,14 +61,10 @@ def _extracted(spark: SparkSession, sf_dir: str, variant: str = "v2") -> DataFra
     key = (app_id, os.path.normpath(sf_dir), variant)
     cached = _EXT_CACHE.get(key)
     if cached is None:
-        scalar = extract_turns(_transcripts(spark, sf_dir), variant=variant,
-                               extras=True) \
-            .drop("span_starts", "span_ends", "span_texts")
-        cached = scalar.persist()
+        cached = extract_turns(_transcripts(spark, sf_dir), variant=variant,
+                               extras=True).persist()
         _EXT_CACHE[key] = cached
-    starts, ends, texts = span_cols(F.col("extracted_text"))
-    return cached.withColumns({
-        "span_starts": starts, "span_ends": ends, "span_texts": texts})
+    return cached
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:

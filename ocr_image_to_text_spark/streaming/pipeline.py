@@ -61,7 +61,7 @@ def extract_stream(spark: SparkSession, source_dir: str, out_dir: str,
     files — the streaming counterpart of the batch manifest resume.
     """
     stream = read_transcript_stream(spark, source_dir)
-    ext = extract_turns(stream).drop("span_starts", "span_ends", "span_texts")
+    ext = extract_turns(stream)
     q = (ext.writeStream.format("parquet")
          .option("path", out_dir)
          .option("checkpointLocation", checkpoint_dir)

@@ -70,3 +70,43 @@ def test_kind_classifier_matches_oracle(spark, t1_paths):
                     kind_col().alias("kind")).collect()
     for r in got:
         assert r["kind"] == pyref.classify_kind(r["text"], r["tool"])
+
+
+# Edge texts for the span offsets: each is the text of a single box, so
+# the boxes kernel passes it through to extracted_text verbatim.
+SPAN_EDGE_TEXTS = {
+    "empty": "",
+    "lone_newline": "\n",
+    "trailing_newline": "first\nsecond\n",
+    "crlf": "first\r\nsecond\r\n",
+    "astral": "a\U0001F600b\n\U0001F600\U0001F600c",  # one code point each
+    "line_separator": "a\u2028b\nc\u2028",  # split on '\n' only
+    "20k_lines": "\n".join(f"line {i}" for i in range(20_000)),
+}
+
+
+def test_spans_edge_texts_match_oracle(spark):
+    import json
+    from collections import defaultdict
+
+    from ocr_image_to_text_spark import pyref
+
+    names = list(SPAN_EDGE_TEXTS)
+    box = [[0, 0], [10, 0], [10, 10], [0, 10]]
+    rows = [("edge", i, None,
+             json.dumps({"boxes": [[box, SPAN_EDGE_TEXTS[n], 0.9]], "h": 100}))
+            for i, n in enumerate(names)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string, tool string")
+    ext = extract_turns(df, partitions=2).persist()
+    try:
+        texts = {r.turn_idx: r.extracted_text for r in ext.collect()}
+        spans = defaultdict(list)
+        for r in spans_table(ext).orderBy("turn_idx", "span_idx").collect():
+            spans[r.turn_idx].append((r.span_start, r.span_end, r.text))
+    finally:
+        ext.unpersist()
+    for i, name in enumerate(names):
+        text = SPAN_EDGE_TEXTS[name]
+        assert texts[i] == text, name  # the edge really reaches the spans
+        assert spans[i] == pyref.spans_of(text), name

@@ -8,11 +8,15 @@ single-shot run — and that the manifest records both runs' lineage.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_image_to_text_spark.jobs import manifest
 from ocr_image_to_text_spark.jobs.extract_job import run_extract_job
 from ocr_image_to_text_spark.transcripts import ensure_transcripts
 
@@ -77,3 +81,73 @@ def test_idempotent_rerun_no_op(spark, tmp_path_factory, tpath):
     assert s2["processed_parts"] == 0 and s2["resumed_parts"] == 4
     m = spark.read.parquet(os.path.join(out, "_manifest"))
     assert m.filter("status = 'done'").count() == 4  # nothing re-appended
+
+
+def test_leftover_manifest_temp_file_is_not_a_commit(spark, tmp_path, tpath):
+    """A crash between the manifest file write and its rename leaves a
+    hidden temp file: Spark, resume and the summary all ignore it, and
+    its parts run again."""
+    out = str(tmp_path / "job")
+    mdir = os.path.join(out, "_manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
+                        fail_after_waves=1)
+    done = manifest.done_parts(mdir)
+    assert len(done) == 2
+    # the uncommitted wave: the committed rows, relabelled to its parts
+    committed = pq.read_table(mdir)
+    pending = pa.array(sorted(set(range(4)) - done), pa.int32())
+    leftover = committed.set_column(
+        committed.schema.get_field_index("part_id"), "part_id", pending)
+    pq.write_table(leftover, os.path.join(mdir, ".part-leftover.parquet.tmp"))
+
+    assert spark.read.parquet(mdir).filter("status = 'done'").count() == 2
+    assert manifest.done_parts(mdir) == done
+    s = run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
+    assert (s["resumed_parts"], s["processed_parts"]) == (2, 2)
+    assert manifest.done_parts(mdir) == {0, 1, 2, 3}
+    roll = spark.read.parquet(os.path.join(out, "rollup"))
+    assert s["n_turns"] == roll.count() == spark.read.parquet(tpath).count()
+
+
+def test_resume_refuses_manifest_without_rollup_format(spark, tmp_path, tpath):
+    """A manifest written before the lineage recorded the rollup format
+    may describe a rollup this code cannot read back: refuse to resume."""
+    out = str(tmp_path / "job")
+    mdir = os.path.join(out, "_manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
+                        fail_after_waves=1)
+    for name in os.listdir(mdir):
+        if name.startswith((".", "_")):
+            continue
+        path = os.path.join(mdir, name)
+        t = pq.read_table(path)
+        lineage = []
+        for raw in t.column("lineage").to_pylist():
+            d = json.loads(raw)
+            del d["rollup_format"]
+            lineage.append(json.dumps(d))
+        t = t.set_column(t.schema.get_field_index("lineage"), "lineage",
+                         pa.array(lineage, pa.string()))
+        pq.write_table(t, path)
+    with pytest.raises(ValueError, match="resume mismatch"):
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
+
+
+def test_waves_without_turns_commit_zero_rows(spark, tmp_path):
+    """Buckets no conversation hashes to still run and commit a zero row,
+    also when the job's first wave is one of them (c1 → bucket 2 and
+    c2 → bucket 1 of 4, so waves 0 and 3 are empty)."""
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [("c1", 0, "a b", None), ("c1", 1, "", None), ("c2", 0, "x", None)],
+        "conv_id string, turn_idx int, text string, tool string",
+    ).write.parquet(inp)
+    out = str(tmp_path / "out")
+    s = run_extract_job(spark, inp, out, n_buckets=4, wave_size=1)
+    assert s["n_turns"] == 3
+    m = spark.read.parquet(os.path.join(out, "_manifest"))
+    assert {r.part_id: r.n_turns for r in m.collect()} == {0: 0, 1: 1, 2: 2, 3: 0}
+    spans = spark.read.parquet(os.path.join(out, "spans"))
+    assert spans.count() == 2  # the empty turn has no span
