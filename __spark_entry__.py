@@ -12,7 +12,7 @@ Oracle strategy (two kinds):
     Spark-free), materialized deterministically to parquet by golden.py;
     the SQL reads that parquet. Sequential layout scans, HTML parsing and
     Python-`re` cleaning are not faithfully expressible in ANSI SQL, so a
-    two-implementation equality check (numpy/pandas-UDF engine vs pure
+    two-implementation equality check (pandas-UDF engine vs pure
     Python) is the strongest available oracle there.
 
 Column-name/type contract: every computed column is aliased identically on
@@ -54,8 +54,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 21 queries whose code drifted
-    # since r5; (B) the 29 oldest remaining certificates.
+    # The current prefix, in order: (A) the 26 queries whose code drifted
+    # since r5; (B) the 24 oldest remaining certificates, which push the
+    # next 4 just past the prefix.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
     return {
@@ -82,6 +83,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boxes_avg_conf": q.boxes_avg_conf,
         "extract_metrics_cube": q.extract_metrics_cube,
         "extract_conv_quality": q.extract_conv_quality,
+        #     ... plus the layout-analysis and angle queries (list-only
+        #     layout kernels, an edited angle.py comment) and the three
+        #     queries on dedup.connected_components (now star contraction
+        #     only; dedup_clusters_star is an alias of dedup_clusters) ---
+        "extract_layout_analysis": q.extract_layout_analysis,
+        "extract_angle_mode": q.extract_angle_mode,
+        "dedup_clusters": q.dedup_clusters,
+        "dedup_clusters_star": q.dedup_clusters,
+        "dedup_apply_minhash": q.dedup_apply_minhash,
         # --- (B) the oldest remaining certificates: r2, then r3 in
         #     registry order ---
         "events_hourly": q.events_hourly,
@@ -108,26 +118,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_markdown": q.doc_markdown,
         "doc_html": q.doc_html,
         "qa_fallback_x15": q.qa_fallback_x15,
+        # ---- end of the 50-entry certified prefix ----
+        # --- (B) continued: displaced by the drifted block ---
         "qa_answer_x14": q.qa_answer_x14,
         "rag_fallback_pipeline": q.rag_fallback_pipeline,
-        "extract_angle_mode": q.extract_angle_mode,
         "conversation_turn_latency": q.conversation_turn_latency,
         "doc_keyword_topk_x5": q.doc_keyword_topk_x5,
-        # ---- end of the 50-entry certified prefix ----
-        # --- r5 (A): 12 added or code-changed in r5 (CORRECTNESS_r05) ---
+        # --- r5 (A): 12 added or code-changed in r5 (CORRECTNESS_r05);
+        #     the 3 that drifted since lead the prefix ---
         "conversation_salted_join": q.conversation_salted_join,
-        "extract_layout_analysis": q.extract_layout_analysis,
         "dedup_simhash_pairs": q.dedup_simhash_pairs,
         "dedup_simhash_pairs_narrow": q.dedup_simhash_pairs_narrow,
-        "dedup_clusters_star": q.dedup_clusters_star,
         "tpch_profit_by_nation": q.tpch_profit_by_nation,
         "tpch_disjunctive_revenue": q.tpch_disjunctive_revenue,
         "tpch_waiting_suppliers": q.tpch_waiting_suppliers,
         "tpch_part_supplier_counts": q.tpch_part_supplier_counts,
         "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
-        "dedup_apply_minhash": q.dedup_apply_minhash,
-        # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05) ---
+        # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05);
+        #     dedup_clusters drifted since and leads the prefix ---
         "doc_length_histogram": q.doc_length_histogram,
         "corpus_length_quantiles": q.corpus_length_quantiles,
         "corpus_sample_stratified": q.corpus_sample_stratified,
@@ -154,7 +163,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_promo_revenue": q.tpch_promo_revenue,
         "events_asof_join": q.events_asof_join,
         "media_video_frames": q.media_video_frames,
-        "dedup_clusters": q.dedup_clusters,
         "semdedup_prune": q.semdedup_prune,
         "dedup_dup_spans": q.dedup_dup_spans,
         "dedup_c4_spans": q.dedup_c4_spans,
@@ -1357,8 +1365,8 @@ def oracle_sql() -> dict[str, str]:
                     FROM reach GROUP BY doc_id),
             tot AS (SELECT cast(count(*) as bigint) n_docs FROM documents),
             st AS (SELECT cast(count(*) as bigint) n_near_dup_docs,
-                          cast(sum(CASE WHEN doc_id <> cluster_id
-                                   THEN 1 ELSE 0 END) as bigint) n_dropped
+                          cast(coalesce(sum(CASE WHEN doc_id <> cluster_id
+                                   THEN 1 ELSE 0 END), 0) as bigint) n_dropped
                    FROM asg)
             SELECT tot.n_docs, st.n_near_dup_docs, st.n_dropped,
                    cast(tot.n_docs - st.n_dropped as bigint) n_kept
@@ -3002,8 +3010,7 @@ def oracle_sql() -> dict[str, str]:
         # reads the pyref golden parquet; ann_lsh_topk restates the
         # deterministic hyperplane signature in SQL.)
     }
-    # Star-contraction components must produce EXACTLY the clusters label
-    # propagation produces (both = component min) — same oracle text, so
-    # a divergence between the two Spark algorithms is a hash failure.
+    # dedup_clusters_star is a registry alias of dedup_clusters (one
+    # star-contraction implementation), so it shares the oracle text.
     oracles["dedup_clusters_star"] = oracles["dedup_clusters"]
     return oracles

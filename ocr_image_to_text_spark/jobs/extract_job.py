@@ -113,7 +113,6 @@ def run_extract_job(
     wave_size: int = 8,
     variant: str = "v2",
     fail_after_waves: int | None = None,
-    salt_partitions: int | None = None,
     max_payload_chars: int | None = None,
     extras: bool = False,
 ) -> dict:
@@ -127,8 +126,7 @@ def run_extract_job(
     spans_dir = os.path.join(out_dir, "spans")
     manifest_dir = os.path.join(out_dir, "_manifest")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     df = spark.read.parquet(input_path)
     base = df.withColumn("part_id", part_id_col(n_buckets))

@@ -1,4 +1,4 @@
-"""A14 — histogram-mode orientation over token-box geometry (numpy).
+"""A14 — histogram-mode orientation over token boxes (numpy).
 
 Vectorized engine twin of :func:`ocr_image_to_text_spark.pyref.angle_mode`
 (the cited restatement of src/ocr_module.py:148-167 and
@@ -41,7 +41,7 @@ def angle_kernel(payload_json: str):
         return None
     h = payload.get("h", 0)
     polys = np.array([b[0] for b in boxes], dtype=np.float64)  # (n, 4, 2)
-    cy = (polys[:, 0, 1] + polys[:, 2, 1]) / 2.0  # easy geometry (:340)
+    cy = (polys[:, 0, 1] + polys[:, 2, 1]) / 2.0  # (y0+y2)/2 centre (:340)
     cx = (polys[:, 0, 0] + polys[:, 2, 0]) / 2.0
     x0 = polys[:, 0, 0]
     tol = max(10, h * 0.01)  # :345

@@ -89,8 +89,7 @@ def span_starts_of(text: str) -> list[int]:
     return starts
 
 
-def make_dispatch_udf(variant: str = "v2", geometry: str = "easy",
-                      conf_threshold: float = 0.3):
+def make_dispatch_udf(variant: str = "v2"):
     """ONE fused extractor for all payload kinds (see module docstring)."""
 
     @pandas_udf(RESULT_SCHEMA)
@@ -99,7 +98,7 @@ def make_dispatch_udf(variant: str = "v2", geometry: str = "easy",
         rows = []
         for k, t, o in zip(kind.to_numpy(), text.to_numpy(), tool.to_numpy()):
             if k == "boxes":
-                row = extract_boxes_json(o, variant, geometry, conf_threshold)
+                row = extract_boxes_json(o, variant)
             elif k == "html":
                 row = (*extract_html_one(t or ""), False, None, None)
             else:
@@ -126,11 +125,10 @@ LAYOUT_ANALYSIS_SCHEMA = StructType([
 ])
 
 
-def make_layout_analysis_udf(conf_threshold: float = 0.3):
+def make_layout_analysis_udf():
     @pandas_udf(LAYOUT_ANALYSIS_SCHEMA)
     def layout_analysis_udf(tool: pd.Series) -> pd.DataFrame:
-        rows = [layout_analysis_json(o, conf_threshold)
-                for o in tool.to_numpy()]
+        rows = [layout_analysis_json(o) for o in tool.to_numpy()]
         return pd.DataFrame(rows, columns=[
             "total_elements", "line_groups", "n_columns",
             "n_titles", "n_bullets", "n_numbered"])
@@ -158,8 +156,6 @@ def kind_col(text: Column = None, tool: Column = None) -> Column:
 def extract_turns(
     df: DataFrame,
     variant: str = "v2",
-    geometry: str = "easy",
-    conf_threshold: float = 0.3,
     partitions: int | None = None,
     extras: bool = False,
 ) -> DataFrame:
@@ -182,7 +178,7 @@ def extract_turns(
     if partitions:
         base = base.repartition(partitions, F.xxhash64("conv_id", "turn_idx"))
 
-    dispatch = make_dispatch_udf(variant, geometry, conf_threshold)
+    dispatch = make_dispatch_udf(variant)
     out = base.withColumn(
         "r", dispatch(F.col("kind"), F.col("text"), F.col("tool")))
     cols = [

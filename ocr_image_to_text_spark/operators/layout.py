@@ -1,8 +1,8 @@
-"""Reading-order reconstruction over token boxes — numpy implementation.
+"""Reading-order reconstruction over token boxes.
 
-Independent (vectorized) re-implementation of the reference's line
-clustering, verified byte-for-byte against
-:mod:`ocr_image_to_text_spark.pyref` by tests/test_layout_equiv.py.
+Independent re-implementation of the reference's line clustering,
+verified byte-for-byte against :mod:`ocr_image_to_text_spark.pyref` by
+tests/test_layout_equiv.py.
 
 Variants (SURVEY.md §2.4 A2):
   v1 — tol 20px, per-token anchor, top-edge y key, within-line key (x0, top_y)
@@ -12,9 +12,14 @@ Variants (SURVEY.md §2.4 A2):
   v3 — tol 10px, LINE-START anchor, (y0, x0) sort, no within-line re-sort
        (src/core/ocr_engine.py:72-100)
 
-v1/v2 are pure gaps-and-islands (sortable + cumulative break-sum →
-fully vectorized with argsort/diff/cumsum). v3's anchor depends on the
-previous break decision → inherently sequential scan per turn.
+v1/v2 are gaps-and-islands over one sort: a stable index sort on the
+y key, a line id that grows at each gap wider than the tolerance, then
+one stable sort on (line id, within-line key). v3's anchor depends on
+the previous break decision, so it is a sequential scan. Every kernel is
+plain Python over lists, one code path at every turn size: against the
+numpy twins that large turns used to take, it is faster on the
+benchmark's pages and slower only for v1 and the column count on very
+large pages (BENCH.md "One layout path").
 """
 
 from __future__ import annotations
@@ -22,10 +27,12 @@ from __future__ import annotations
 import json
 import math
 
-import numpy as np
+# Reading-order reconstruction keeps only boxes whose confidence is
+# strictly above this (F1, ocr_core/easyocr_reader.py:17-22).
+CONF_THRESHOLD = 0.3
 
 
-def _assemble(texts: list, order: np.ndarray, line_id: np.ndarray) -> str:
+def _assemble(texts: list, order: list, line_id: list) -> str:
     """Join tokens (already in final order) into ' '-joined lines, '\n'-joined."""
     out = []
     cur: list[str] = []
@@ -41,111 +48,62 @@ def _assemble(texts: list, order: np.ndarray, line_id: np.ndarray) -> str:
     return "\n".join(out)
 
 
-# Below this size the per-call numpy overhead (array construction +
-# many tiny kernel launches) costs ~3.6x the work itself (measured at the
-# bench tier's median 15 tokens/turn); the listwise path is the same
-# gaps-and-islands structure without ndarray round-trips. Large skewed
-# turns (the north_rule case) keep the vectorized path.
+# No kernel branches on this. It stays exported only because
+# perfbench/workloads.py imports it to size the dense pages of its
+# workloads (pages with >= SMALL_N kept tokens), and those inputs must
+# stay the same for runs across changes to compare.
 SMALL_N = 64
 
 
+def _line_ids(keys: list, tol: float) -> list:
+    """Line id per y-sorted token: a new line wherever the key jumps by
+    more than ``tol`` from the previous token (per-token anchor)."""
+    line_id = [0] * len(keys)
+    lid = 0
+    for j in range(1, len(keys)):
+        if abs(keys[j] - keys[j - 1]) > tol:
+            lid += 1
+        line_id[j] = lid
+    return line_id
+
+
 def layout_v1(polys, texts: list) -> str:
-    """polys: (n, 4, 2) float64 ndarray OR nested lists."""
+    """polys: nested lists, one 4-point polygon per token."""
     n = len(texts)
     if n == 0:
         return ""
-    if n < SMALL_N:
-        y0 = [p[0][1] for p in polys]
-        order = sorted(range(n), key=lambda i: y0[i])
-        top_y = [min(pt[1] for pt in polys[i]) for i in order]
-        x0 = [polys[i][0][0] for i in order]
-        line_id = [0] * n
-        lid = 0
-        for j in range(1, n):
-            if abs(top_y[j] - top_y[j - 1]) > 20:
-                lid += 1
-            line_id[j] = lid
-        final = sorted(range(n),
-                       key=lambda j: (line_id[j], x0[j], top_y[j], j))
-        return _assemble(texts, [order[j] for j in final],
-                         [line_id[j] for j in final])
-    polys = np.asarray(polys, dtype=np.float64)
-    y0 = polys[:, 0, 1]
-    order = np.argsort(y0, kind="stable")
-    top_y = polys[:, :, 1].min(axis=1)[order]
-    x0 = polys[order, 0, 0]
-    breaks = np.zeros(n, dtype=np.int64)
-    breaks[1:] = (np.abs(np.diff(top_y)) > 20).astype(np.int64)
-    line_id = np.cumsum(breaks)
-    # within-line stable sort by (x0, top_y): seq index is the final tiebreak
-    seq = np.arange(n)
-    final = np.lexsort((seq, top_y, x0, line_id))
-    return _assemble(texts, order[final], line_id[final])
+    y0 = [p[0][1] for p in polys]
+    order = sorted(range(n), key=y0.__getitem__)
+    top_y = [min(pt[1] for pt in polys[i]) for i in order]
+    x0 = [polys[i][0][0] for i in order]
+    line_id = _line_ids(top_y, 20)
+    # within-line sort by (x0, top_y): seq index is the final tiebreak
+    final = sorted(range(n), key=lambda j: (line_id[j], x0[j], top_y[j], j))
+    return _assemble(texts, [order[j] for j in final],
+                     [line_id[j] for j in final])
 
 
-def layout_v2(polys, texts: list, img_h: float, geometry: str = "easy") -> str:
+def layout_v2(polys, texts: list, img_h: float) -> str:
     n = len(texts)
     if n == 0:
         return ""
-    tol = max(10, img_h * 0.01)
-    if n < SMALL_N:
-        if geometry == "paddle":
-            cy = [(p[0][1] + p[3][1]) / 2 for p in polys]
-        else:
-            cy = [(p[0][1] + p[2][1]) / 2 for p in polys]
-        order = sorted(range(n), key=lambda i: cy[i])
-        cy_s = [cy[i] for i in order]
-        x0 = [polys[i][0][0] for i in order]
-        line_id = [0] * n
-        lid = 0
-        for j in range(1, n):
-            if abs(cy_s[j] - cy_s[j - 1]) > tol:
-                lid += 1
-            line_id[j] = lid
-        final = sorted(range(n), key=lambda j: (line_id[j], x0[j], j))
-        return _assemble(texts, [order[j] for j in final],
-                         [line_id[j] for j in final])
-    polys = np.asarray(polys, dtype=np.float64)
-    if geometry == "paddle":
-        cy = (polys[:, 0, 1] + polys[:, 3, 1]) / 2
-    else:
-        cy = (polys[:, 0, 1] + polys[:, 2, 1]) / 2
-    order = np.argsort(cy, kind="stable")
-    cy_s = cy[order]
-    x0 = polys[order, 0, 0]
-    breaks = np.zeros(n, dtype=np.int64)
-    breaks[1:] = (np.abs(np.diff(cy_s)) > tol).astype(np.int64)
-    line_id = np.cumsum(breaks)
-    seq = np.arange(n)
-    final = np.lexsort((seq, x0, line_id))
-    return _assemble(texts, order[final], line_id[final])
+    cy = [(p[0][1] + p[2][1]) / 2 for p in polys]
+    order = sorted(range(n), key=cy.__getitem__)
+    x0 = [polys[i][0][0] for i in order]
+    line_id = _line_ids([cy[i] for i in order], max(10, img_h * 0.01))
+    final = sorted(range(n), key=lambda j: (line_id[j], x0[j], j))
+    return _assemble(texts, [order[j] for j in final],
+                     [line_id[j] for j in final])
 
 
 def layout_v3(polys, texts: list) -> str:
     n = len(texts)
     if n == 0:
         return ""
-    if n < SMALL_N:
-        order = sorted(range(n),
-                       key=lambda i: (polys[i][0][1], polys[i][0][0], i))
-        ys = [polys[i][0][1] for i in order]
-        line_id = [0] * n
-        anchor = ys[0]
-        lid = 0
-        for i in range(1, n):
-            if abs(ys[i] - anchor) > 10:
-                lid += 1
-                anchor = ys[i]
-            line_id[i] = lid
-        return _assemble(texts, order, line_id)
-    polys = np.asarray(polys, dtype=np.float64)
-    y0 = polys[:, 0, 1]
-    x0 = polys[:, 0, 0]
-    seq = np.arange(n)
-    order = np.lexsort((seq, x0, y0))
-    ys = y0[order]
+    order = sorted(range(n), key=lambda i: (polys[i][0][1], polys[i][0][0], i))
+    ys = [polys[i][0][1] for i in order]
     # sequential line-anchor scan (anchor = y of the line-opening token)
-    line_id = np.zeros(n, dtype=np.int64)
+    line_id = [0] * n
     anchor = ys[0]
     lid = 0
     for i in range(1, n):
@@ -170,74 +128,70 @@ XY_GAP_X = 56.0
 XY_GAP_Y = 40.0
 
 
+def _span(poly, axis: int) -> tuple:
+    vs = [pt[axis] for pt in poly]
+    return min(vs), max(vs)
+
+
+def _split(spans: list, ids: list, gap: float) -> list:
+    """One projection cut of ``ids`` (box indexes) over their (lo, hi)
+    ``spans``: walk by low edge with a running max high edge; a low edge
+    clearing it by more than ``gap`` opens a new group."""
+    s = sorted(ids, key=lambda i: spans[i][0])
+    groups: list[list] = [[s[0]]]
+    run_hi = spans[s[0]][1]
+    for i in s[1:]:
+        lo, hi = spans[i]
+        if lo - run_hi > gap:
+            groups.append([i])
+        else:
+            groups[-1].append(i)
+        run_hi = max(run_hi, hi)
+    return groups
+
+
 def layout_xycut(polys, texts: list, img_h: float) -> str:
     n = len(texts)
     if n == 0:
         return ""
-    P = np.asarray(polys, dtype=np.float64)
-    lo_x = P[:, :, 0].min(axis=1)
-    hi_x = P[:, :, 0].max(axis=1)
-    lo_y = P[:, :, 1].min(axis=1)
-    hi_y = P[:, :, 1].max(axis=1)
-
-    def split(ids, lo, hi, gap):
-        s = ids[np.argsort(lo[ids], kind="stable")]
-        groups: list[list] = [[s[0]]]
-        run_hi = hi[s[0]]
-        for i in s[1:]:
-            if lo[i] - run_hi > gap:
-                groups.append([i])
-            else:
-                groups[-1].append(i)
-            run_hi = max(run_hi, hi[i])
-        return groups if len(groups) > 1 else None
-
+    xs = [_span(p, 0) for p in polys]
+    ys = [_span(p, 1) for p in polys]
     out: list[str] = []
 
-    def rec(ids, depth: int) -> None:
-        g = None
+    def rec(ids: list, depth: int) -> None:
         if len(ids) > 1 and depth <= 32:
-            g = (split(ids, lo_y, hi_y, XY_GAP_Y)
-                 or split(ids, lo_x, hi_x, XY_GAP_X))
-        if g is None:
-            out.append(layout_v2([polys[i] for i in ids],
-                                 [texts[i] for i in ids], img_h))
-            return
-        for grp in g:
-            rec(np.asarray(grp), depth + 1)
+            for spans, gap in ((ys, XY_GAP_Y), (xs, XY_GAP_X)):
+                groups = _split(spans, ids, gap)
+                if len(groups) > 1:
+                    for grp in groups:
+                        rec(grp, depth + 1)
+                    return
+        out.append(layout_v2([polys[i] for i in ids],
+                             [texts[i] for i in ids], img_h))
 
-    rec(np.arange(n), 0)
+    rec(list(range(n)), 0)
     return "\n".join(t for t in out if t)
 
 
 def table_flag_of(all_polys) -> bool:
     """A13 — src/ocr_module.py:516-540 even-spacing heuristic.
 
-    Computed over ALL detections (pre conf-filter), easy-geometry y centers
-    (:527); population std (np.std default, :536). Small turns use the
-    sequential-sum listwise path (the same fold order as the oracle —
-    safer at the std<mean/2 boundary than numpy's pairwise summation);
-    large turns vectorize.
+    Computed over ALL detections (pre conf-filter), y centers (y0+y2)/2
+    (:527); population std (ddof=0, the reference's numpy default,
+    :536). The mean and variance are left-to-right sums, the oracle's
+    fold order: numpy's pairwise summation rounds differently and flips
+    the flag on evenly spaced pages at the std == mean/2 boundary.
     """
     n = len(all_polys)
     if n <= 10:
         return False
-    if n < SMALL_N:
-        cy = sorted((p[0][1] + p[2][1]) / 2 for p in all_polys)
-        diffs = [cy[i + 1] - cy[i] for i in range(n - 1)]
-        if len(diffs) <= 5:
-            return False
-        mean = sum(diffs) / len(diffs)
-        var = sum((d - mean) ** 2 for d in diffs) / len(diffs)
-        std = var ** 0.5
-        return bool(std < mean * 0.5 and std > 0)
-    all_polys = np.asarray(all_polys, dtype=np.float64)
-    cy = np.sort((all_polys[:, 0, 1] + all_polys[:, 2, 1]) / 2)
-    diffs = np.diff(cy)
-    if diffs.size <= 5:
+    cy = sorted((p[0][1] + p[2][1]) / 2 for p in all_polys)
+    diffs = [cy[i + 1] - cy[i] for i in range(n - 1)]
+    if len(diffs) <= 5:
         return False
-    mean = diffs.mean()
-    std = diffs.std()
+    mean = sum(diffs) / len(diffs)
+    var = sum((d - mean) ** 2 for d in diffs) / len(diffs)
+    std = var ** 0.5
     return bool(std < mean * 0.5 and std > 0)
 
 
@@ -251,27 +205,10 @@ _TITLE_MIN, _TITLE_MAX = 3, 50
 
 
 def _column_count(polys) -> int:
-    n = len(polys)
-    if n == 0:
+    if not polys:
         return 0
-    if n < SMALL_N:
-        spans = sorted((min(pt[0] for pt in p), max(pt[0] for pt in p))
-                       for p in polys)
-        cols = 1
-        run_hi = spans[0][1]
-        for lo, hi in spans[1:]:
-            if lo - run_hi > XY_GAP_X:
-                cols += 1
-            run_hi = max(run_hi, hi)
-        return cols
-    P = np.asarray(polys, dtype=np.float64)
-    lo = P[:, :, 0].min(axis=1)
-    hi = P[:, :, 0].max(axis=1)
-    order = np.argsort(lo, kind="stable")
-    lo_s, hi_s = lo[order], hi[order]
-    # running max of high edges up to (excluding) each box
-    run_hi = np.maximum.accumulate(hi_s)[:-1]
-    return 1 + int(np.count_nonzero(lo_s[1:] - run_hi > XY_GAP_X))
+    xs = [_span(p, 0) for p in polys]
+    return len(_split(xs, list(range(len(polys))), XY_GAP_X))
 
 
 def _line_structure_counts(lines: list[str]) -> tuple[int, int, int]:
@@ -295,8 +232,7 @@ def _line_structure_counts(lines: list[str]) -> tuple[int, int, int]:
     return titles, bullets, numbered
 
 
-def layout_analysis_json(payload: str, conf_threshold: float = 0.3
-                         ) -> tuple[int, int, int, int, int, int]:
+def layout_analysis_json(payload: str) -> tuple[int, int, int, int, int, int]:
     """Parse a boxes payload and produce the layout_analysis summary:
     (total_elements, line_groups, n_columns, n_titles, n_bullets,
     n_numbered)."""
@@ -305,7 +241,7 @@ def layout_analysis_json(payload: str, conf_threshold: float = 0.3
     except (ValueError, TypeError):
         return 0, 0, 0, 0, 0, 0
     boxes = payload_obj.get("boxes") or []
-    kept = [b for b in boxes if b[2] > conf_threshold]
+    kept = [b for b in boxes if b[2] > CONF_THRESHOLD]
     if not kept:
         return 0, 0, 0, 0, 0, 0
     polys = [b[0] for b in kept]
@@ -317,8 +253,8 @@ def layout_analysis_json(payload: str, conf_threshold: float = 0.3
             titles, bullets, numbered)
 
 
-def extract_boxes_json(payload: str, variant: str = "v2", geometry: str = "easy",
-                       conf_threshold: float = 0.3) -> tuple[str, int, int, bool, str, int]:
+def extract_boxes_json(payload: str, variant: str = "v2"
+                       ) -> tuple[str, int, int, bool, str, int]:
     """Parse a boxes payload ONCE and derive every per-turn box product:
     conf filter (F1) + layout (A2) + A13 table flag + A5 flat concat + A9
     average confidence (`float(np.mean(confidences)) if confidences else
@@ -334,10 +270,8 @@ def extract_boxes_json(payload: str, variant: str = "v2", geometry: str = "easy"
         return "", 0, 0, False, "", 0
     boxes = payload_obj.get("boxes") or []
     n_total = len(boxes)
-    kept = [b for b in boxes if b[2] > conf_threshold]
+    kept = [b for b in boxes if b[2] > CONF_THRESHOLD]
     n_kept = len(kept)
-    # raw nested lists go straight to the layout/table operators — they
-    # convert to ndarray only on the large-turn vectorized path
     tflag = table_flag_of([b[0] for b in boxes]) if n_total else False
     flat = " ".join(b[1] for b in kept)
     if n_kept:
@@ -358,5 +292,5 @@ def extract_boxes_json(payload: str, variant: str = "v2", geometry: str = "easy"
     elif variant == "xycut":
         text = layout_xycut(polys, texts, float(payload_obj.get("h", 0)))
     else:
-        text = layout_v2(polys, texts, float(payload_obj.get("h", 0)), geometry)
+        text = layout_v2(polys, texts, float(payload_obj.get("h", 0)))
     return text, n_kept, n_total - n_kept, tflag, flat, avg_x1e9

@@ -177,7 +177,7 @@ def format_with_layout_v3(boxes: list) -> str:
 # the north_star names ("column/line clustering") that none of the
 # reference's three line-clustering variants provide (they interleave
 # side-by-side columns line by line). Spec, shared verbatim with the
-# production numpy implementation in operators/layout.py (equivalence
+# production implementation in operators/layout.py (equivalence
 # pinned by tests/test_layout_equiv.py):
 #   * project axis-aligned box bounds onto an axis; walk boxes sorted by
 #     their low edge keeping a running max high edge; a box whose low

@@ -795,33 +795,16 @@ def dedup_clusters(spark, sf_dir):
     is pinned to that signature width), labelled with the component's
     min doc_id and its size — the pairs→clusters→canonical step every
     corpus-scale dedup actually needs (pair lists alone can't answer
-    "which docs do I keep"). Distributed hash-min label propagation
-    (see dedup.connected_components for the per-round shuffle shape);
-    the DuckDB oracle is a recursive-CTE transitive closure over the
-    same brute-force pair set, so convergence is hash-verified, not
+    "which docs do I keep"). Distributed large-star/small-star
+    contraction, O(log n) rounds whatever the component diameter (see
+    dedup.connected_components for the per-round shuffle shape); the
+    DuckDB oracle is a recursive-CTE transitive closure over the same
+    brute-force pair set, so convergence is hash-verified, not
     assumed. Output: (doc_id, cluster_id, n_docs), one row per doc that
     has at least one near-duplicate."""
     from pyspark.sql import Window
 
     comp = dedup.connected_components(dedup_simhash_pairs_narrow(spark, sf_dir))
-    return comp.select(
-        F.col("doc_id").cast("long"), F.col("cluster_id").cast("long"),
-        F.count("*").over(Window.partitionBy("cluster_id"))
-        .cast("long").alias("n_docs"))
-
-
-def dedup_clusters_star(spark, sf_dir):
-    """Same clusters as dedup_clusters, computed by large-star/small-star
-    contraction (Kiveris et al. SoCC'14) instead of hash-min label
-    propagation: O(log n) rounds independent of component DIAMETER — the
-    variant a 100 TB dedup runs when near-dup graphs chain (label
-    propagation needs O(diameter) rounds there). The oracle is the SAME
-    recursive-CTE transitive closure as dedup_clusters, so the two Spark
-    algorithms are certified to agree with each other AND with DuckDB.
-    Output: (doc_id, cluster_id, n_docs)."""
-    from pyspark.sql import Window
-
-    comp = dedup.connected_components_star(dedup_simhash_pairs_narrow(spark, sf_dir))
     return comp.select(
         F.col("doc_id").cast("long"), F.col("cluster_id").cast("long"),
         F.count("*").over(Window.partitionBy("cluster_id"))
@@ -3203,7 +3186,10 @@ def dedup_apply_minhash(spark, sf_dir):
     the pair/cluster stages carry their own banded/O(log n)-round
     guarantees; the two 1-row aggregates cross-attach via broadcast
     (the sanctioned parameter pattern) — no driver-side counts, no
-    collect. Output: (n_docs, n_near_dup_docs, n_dropped, n_kept)."""
+    collect. A corpus with no near-duplicates has no components: the
+    empty SUM is coalesced to 0, so n_dropped = 0 and n_kept = n_docs
+    rather than NULL. Output: (n_docs, n_near_dup_docs, n_dropped,
+    n_kept)."""
     docs = _docs(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold_x1000=100) \
         .select("doc_a", "doc_b")
@@ -3211,8 +3197,9 @@ def dedup_apply_minhash(spark, sf_dir):
     total = docs.agg(F.count("*").cast("long").alias("n_docs"))
     stats = comp.agg(
         F.count("*").cast("long").alias("n_near_dup_docs"),
-        F.sum(F.when(F.col("doc_id") != F.col("cluster_id"), 1)
-              .otherwise(0)).cast("long").alias("n_dropped"))
+        F.coalesce(F.sum(F.when(F.col("doc_id") != F.col("cluster_id"), 1)
+                         .otherwise(0)), F.lit(0)).cast("long")
+        .alias("n_dropped"))
     return (total.crossJoin(F.broadcast(stats))
             .select("n_docs", "n_near_dup_docs", "n_dropped",
                     (F.col("n_docs") - F.col("n_dropped")).cast("long")

@@ -58,10 +58,9 @@ def get_spark(app_name: str = "ocr-extract", master: str | None = None,
     # task fails — so only enable it when this package is importable from
     # a filesystem path we can export via PYTHONPATH (true in local mode;
     # on a cluster, ship the zip with --py-files and set the conf
-    # explicitly, or export SPARK_GRAFT_NO_DAEMON_PRELOAD=1 to opt out).
-    if not os.environ.get("SPARK_GRAFT_NO_DAEMON_PRELOAD") and \
-            os.path.isfile(os.path.join(_pkg_root, "ocr_image_to_text_spark",
-                                        "daemon_preload.py")):
+    # explicitly).
+    if os.path.isfile(os.path.join(_pkg_root, "ocr_image_to_text_spark",
+                                   "daemon_preload.py")):
         b = b.config("spark.python.daemon.module",
                      "ocr_image_to_text_spark.daemon_preload")
     for k, v in (extra_conf or {}).items():

@@ -1,4 +1,4 @@
-"""Property tests: the numpy layout engine is byte-equal to the oracle,
+"""Property tests: the layout engine is byte-equal to the oracle,
 and clustering is invariant under input permutation (the reference sorts
 first, so detection order must not matter except for exact-tie stability).
 """
@@ -93,8 +93,9 @@ def test_cleaning_non_idempotence_documented():
 @pytest.mark.parametrize("n", [63, 64, 65, 300])
 @pytest.mark.parametrize("variant", ["v1", "v2", "v3"])
 def test_small_and_large_paths_agree_with_oracle(n, variant):
-    """The listwise small-turn fast path and the vectorized large-turn
-    path (threshold layout.SMALL_N) must both equal the oracle."""
+    """Turns on both sides of 64 tokens, where the engine once switched
+    from a list path to a numpy path, and a 300-token page, equal the
+    oracle."""
     rng = random.Random(1000 + n)
     boxes = []
     for i in range(n):
@@ -113,6 +114,23 @@ def test_small_and_large_paths_agree_with_oracle(n, variant):
     assert got[0] == want
     assert got[3] == pyref.detect_table_spacing(
         [(b[0][0][1] + b[0][2][1]) / 2 for b in obj["boxes"]])
+
+
+def test_table_flag_matches_oracle_at_even_spacing_boundary():
+    """A dense, evenly spaced page whose centre gaps alternate 7 and 21
+    px has std == mean/2 in exact arithmetic, so the flag turns on the
+    rounding of the mean and variance sums. The engine must fold them
+    left to right like the oracle: numpy's pairwise summation flagged
+    this page as a table."""
+    y, boxes = 27.378761949741637, []
+    for i in range(65):
+        boxes.append([[[40, y - 8], [80, y - 8], [80, y + 8], [40, y + 8]],
+                      f"t{i}", 0.9])
+        y += 7.0 if i % 2 == 0 else 21.0
+    payload = json.dumps({"h": 2000, "w": 800, "boxes": boxes})
+    want = pyref.extract_turn("", payload)["table_flag"]
+    assert want is False
+    assert extract_boxes_json(payload)[3] == want
 
 
 def test_xycut_reads_two_column_column_major():
@@ -151,8 +169,8 @@ def test_layout_analysis_random_matches_twin():
 
 @pytest.mark.parametrize("n", [63, 64, 65, 300])
 def test_layout_analysis_small_and_large_paths_agree(n):
-    """The listwise and vectorized _column_count paths (SMALL_N seam)
-    both equal the naive twin."""
+    """_column_count equals the naive twin on turns on both sides of 64
+    tokens (the former list/numpy switch) and on a 300-token page."""
     from ocr_image_to_text_spark.operators.layout import layout_analysis_json
 
     rng = random.Random(4240 + n)

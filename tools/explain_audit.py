@@ -95,7 +95,7 @@ AUDITS = [
     ("tpch_disjunctive_revenue",
      ["SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", "HashAggregate"],
      ["CartesianProduct", "Python"]),
-    # r5: dedup kill-chain — the label-propagation loop runs at call
+    # r5: dedup kill-chain — the star-contraction loop runs at call
     # time (final frame scans its localCheckpoint → ExistingRDD is
     # expected, as for dedup_clusters); the two 1-row summary aggregates
     # cross-attach via broadcast (BroadcastNestedLoop on 1-row frames is
@@ -143,9 +143,9 @@ AUDITS = [
      ["Exchange", "Python"]),
     ("events_asof_join", ["Window", "Sort"],
      ["Python", "Join", "CartesianProduct"]),
-    # dedup_clusters runs its label-propagation loop at call time, so the
+    # dedup_clusters runs its star-contraction loop at call time, so the
     # audited plan is the final size-window over the converged labels
-    # (a localCheckpoint RDD scan — ExistingRDD is EXPECTED here)
+    # (localCheckpoint RDD scans — ExistingRDD is EXPECTED here)
     ("dedup_clusters", ["Window"], ["Python", "CartesianProduct"]),
     # round-3 wave 2: redaction is a map-only codegen pass — no KEY
     # shuffle (hashpartitioning) ever; the only Exchange allowed is the
