@@ -54,9 +54,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 26 queries whose code drifted
-    # since r5; (B) the 24 oldest remaining certificates, which push the
-    # next 4 just past the prefix.
+    # The current prefix, in order: (A) the 38 queries whose code drifted
+    # since r5; (B) the 12 oldest remaining certificates, which push the
+    # next 16 just past the prefix.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
     return {
@@ -83,29 +83,46 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boxes_avg_conf": q.boxes_avg_conf,
         "extract_metrics_cube": q.extract_metrics_cube,
         "extract_conv_quality": q.extract_conv_quality,
-        #     ... plus the layout-analysis and angle queries (list-only
-        #     layout kernels, an edited angle.py comment) and the three
-        #     queries on dedup.connected_components (now star contraction
-        #     only; dedup_clusters_star is an alias of dedup_clusters) ---
+        #     ... plus the layout-analysis query (list-only layout
+        #     kernels) and the three queries on dedup.connected_components
+        #     (now star contraction only; dedup_clusters_star is an alias
+        #     of dedup_clusters) ---
         "extract_layout_analysis": q.extract_layout_analysis,
-        "extract_angle_mode": q.extract_angle_mode,
         "dedup_clusters": q.dedup_clusters,
         "dedup_clusters_star": q.dedup_clusters,
         "dedup_apply_minhash": q.dedup_apply_minhash,
+        #     ... plus the 11 ANN queries (one shared similarity.py helper
+        #     per building block) and the two boilerplate strippers (one
+        #     shared strip rule, queries._bp_kept_lines) ---
+        "ann_cosine_topk": q.ann_cosine_topk,
+        "emb_dup_pairs": q.emb_dup_pairs,
+        "ann_lsh_topk": q.ann_lsh_topk,
+        "ann_ivf_topk": q.ann_ivf_topk,
+        "ann_ivf_lloyd_topk": q.ann_ivf_lloyd_topk,
+        "ann_ivf_recall": q.ann_ivf_recall,
+        "semdedup_prune": q.semdedup_prune,
+        "emb_pq_encode": q.emb_pq_encode,
+        "ann_pq_adc_topk": q.ann_pq_adc_topk,
+        "ann_ivfpq_adc_topk": q.ann_ivfpq_adc_topk,
+        "ann_ivfpq_residual_topk": q.ann_ivfpq_residual_topk,
+        "doc_strip_boilerplate": q.doc_strip_boilerplate,
+        "corpus_pipeline_v4": q.corpus_pipeline_v4,
         # --- (B) the oldest remaining certificates: r2, then r3 in
         #     registry order ---
         "events_hourly": q.events_hourly,
         "events_sessions": q.events_sessions,
         "media_image_features": q.media_image_features,
         "media_audio_features": q.media_audio_features,
+        "extract_angle_mode": q.extract_angle_mode,
         "doc_token_counts": q.doc_token_counts,
         "doc_fingerprints": q.doc_fingerprints,
         "doc_entities": q.doc_entities,
         "doc_quality_v2": q.doc_quality_v2,
-        "ann_cosine_topk": q.ann_cosine_topk,
         "doc_entities_seeded": q.doc_entities_seeded,
         "doc_redact": q.doc_redact,
         "doc_lang": q.doc_lang,
+        # ---- end of the 50-entry certified prefix ----
+        # --- (B) continued: displaced by the drifted block ---
         "doc_lang_ngram": q.doc_lang_ngram,
         "doc_stats": q.doc_stats,
         "doc_quality_v1": q.doc_quality_v1,
@@ -118,8 +135,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_markdown": q.doc_markdown,
         "doc_html": q.doc_html,
         "qa_fallback_x15": q.qa_fallback_x15,
-        # ---- end of the 50-entry certified prefix ----
-        # --- (B) continued: displaced by the drifted block ---
         "qa_answer_x14": q.qa_answer_x14,
         "rag_fallback_pipeline": q.rag_fallback_pipeline,
         "conversation_turn_latency": q.conversation_turn_latency,
@@ -136,7 +151,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
         # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05);
-        #     dedup_clusters drifted since and leads the prefix ---
+        #     dedup_clusters and semdedup_prune drifted since and lead the
+        #     prefix ---
         "doc_length_histogram": q.doc_length_histogram,
         "corpus_length_quantiles": q.corpus_length_quantiles,
         "corpus_sample_stratified": q.corpus_sample_stratified,
@@ -163,7 +179,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_promo_revenue": q.tpch_promo_revenue,
         "events_asof_join": q.events_asof_join,
         "media_video_frames": q.media_video_frames,
-        "semdedup_prune": q.semdedup_prune,
         "dedup_dup_spans": q.dedup_dup_spans,
         "dedup_c4_spans": q.dedup_c4_spans,
         # --- r5 (C): 7 flagship re-certs (CORRECTNESS_r05) ---
@@ -186,25 +201,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "turn_link_density": q.turn_link_density,
         "corpus_source_stats": q.corpus_source_stats,
         "corpus_boilerplate_lines": q.corpus_boilerplate_lines,
-        "doc_strip_boilerplate": q.doc_strip_boilerplate,
         "corpus_sample_weighted": q.corpus_sample_weighted,
         "corpus_sample_weighted_stratified": q.corpus_sample_weighted_stratified,
         "corpus_token_entropy": q.corpus_token_entropy,
         "corpus_bpe_pairs": q.corpus_bpe_pairs,
         "corpus_bpe_merge2": q.corpus_bpe_merge2,
         "dedup_cdc_chunks": q.dedup_cdc_chunks,
-        "corpus_pipeline_v4": q.corpus_pipeline_v4,
         "doc_simhash64": q.doc_simhash64,
         "dedup_minhash_recall": q.dedup_minhash_recall,
-        "emb_pq_encode": q.emb_pq_encode,
-        "ann_pq_adc_topk": q.ann_pq_adc_topk,
-        "ann_ivfpq_adc_topk": q.ann_ivfpq_adc_topk,
-        "ann_ivf_lloyd_topk": q.ann_ivf_lloyd_topk,
-        "ann_ivf_recall": q.ann_ivf_recall,
         "doc_lang_agreement": q.doc_lang_agreement,
         "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
         "extract_box_overlaps": q.extract_box_overlaps,
-        "ann_ivfpq_residual_topk": q.ann_ivfpq_residual_topk,
         "doc_quality_decile_bounds": q.doc_quality_decile_bounds,
         "tpch_nation_volume": q.tpch_nation_volume,
         "tpch_market_share": q.tpch_market_share,
@@ -219,9 +226,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_txt_envelope": q.doc_txt_envelope,
         # --- training-data pipeline ops ---
         "dedup_ngram_jaccard": q.dedup_ngram_jaccard,
-        "emb_dup_pairs": q.emb_dup_pairs,
-        "ann_lsh_topk": q.ann_lsh_topk,
-        "ann_ivf_topk": q.ann_ivf_topk,
         "emb_quantize_sq": q.emb_quantize_sq,
     }
 

@@ -29,26 +29,12 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     return out
 
 
-def tracked_persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _LIVE.append(out)
-    return out
-
-
 def register_releaser(fn) -> None:
     """Register a zero-arg callable run at release time — for storage
     that `DataFrame.unpersist()` can't reach (e.g. the block-store RDD
     behind a `localCheckpoint()`, which must stay alive until the
     consumer has materialized the result)."""
     _LIVE.append(fn)
-
-
-def forget(df: DataFrame) -> None:
-    """Drop a frame from the registry (caller unpersisted it itself)."""
-    try:
-        _LIVE.remove(df)
-    except ValueError:
-        pass
 
 
 def release_caches() -> int:

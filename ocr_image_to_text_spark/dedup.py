@@ -172,9 +172,14 @@ def minhash_band_rows(df: DataFrame, id_cols: tuple[str, ...] = ("doc_id",),
     explode over the band structs — shared by the streaming near-dup
     candidate operator (streaming/pipeline.minhash_candidates_stream)
     and its batch twin; minhash_lsh_pairs keeps its own fused cached
-    frame because it also needs the shingle sets for verification."""
+    frame because it also needs the shingle sets for verification.
+
+    Rows whose text has no word (NULL, empty or all whitespace, by the
+    same Java `\\s` the shingler splits on) are dropped: their shingle
+    sets are all alike, so every band would pair them with each other."""
     r = num_hashes // bands
-    base = df.select(*id_cols, shingle_array().alias("shs"))
+    base = (df.filter(F.col("text").rlike(r"\S"))
+            .select(*id_cols, shingle_array().alias("shs")))
     sig = base.select(*id_cols,
                       *minhash_signature_cols(num_hashes)(F.col("shs")))
     band_structs = F.array(*[

@@ -80,7 +80,7 @@ def run_curate_job(
     fail_after_waves: int | None = None,
 ) -> dict:
     """Run (or resume) the curation job. Returns a summary dict."""
-    from ..queries import _gopher_metrics
+    from ..queries import _bp_kept_lines, _gopher_metrics
 
     run_id = uuid.uuid4().hex[:12]
     curated_dir = os.path.join(out_dir, "curated")
@@ -113,9 +113,7 @@ def run_curate_job(
         t0 = time.perf_counter()
         sub = base.filter(F.col("part_id").isin([int(p) for p in wave]))
         lines = F.split(F.col("text"), "\n", -1)
-        kept_lines = F.filter(
-            lines, lambda line: ~F.array_contains(
-                F.col("bp"), F.trim(F.lower(line))))
+        kept_lines = _bp_kept_lines(lines, F.col("bp"))
         passthru = [c for c in ("source", "lang") if c in docs.columns]
         stripped = (sub.crossJoin(F.broadcast(bp_set))
                     .select("part_id", "doc_id", *passthru,

@@ -199,12 +199,6 @@ def _decode_audio_stub(payload: bytes, duration_ms: int,
     return (raw.astype(np.float32) - 127.5) / 127.5
 
 
-def decode_audio(payload: bytes, duration_ms: int) -> np.ndarray:
-    if payload[:4] == b"RIFF":
-        return decode_wav(payload)[0]
-    return _decode_audio_stub(payload, duration_ms)
-
-
 def decode_audio_i16(payload: bytes, duration_ms: int) -> np.ndarray:
     """Int16 samples — the exact-arithmetic path for feature extraction."""
     if payload[:4] == b"RIFF":

@@ -2454,6 +2454,13 @@ def _bp_frequent_lines(docs):
             .select("line", "doc_freq"))
 
 
+def _bp_kept_lines(lines, bp_set):
+    """The strip rule: the lines whose trim+lower normal form (the key
+    _bp_frequent_lines counts) is not in the array column `bp_set`."""
+    return F.filter(lines, lambda line: ~F.array_contains(
+        bp_set, F.trim(F.lower(line))))
+
+
 def corpus_boilerplate_lines(spark, sf_dir):
     """Corpus-statistical boilerplate detection (CCNet, Wenzek et al.
     2020 — dedup-by-frequent-line): normalized lines shared by many
@@ -2475,8 +2482,7 @@ def doc_strip_boilerplate(spark, sf_dir):
     bp = _bp_frequent_lines(docs).agg(
         F.array_sort(F.collect_set("line")).alias("bp"))
     lines = F.split(F.col("text"), "\n", -1)
-    kept = F.filter(lines, lambda line: ~F.array_contains(
-        F.col("bp"), F.trim(F.lower(line))))
+    kept = _bp_kept_lines(lines, F.col("bp"))
     clean = F.concat_ws("\n", kept)
     return docs.crossJoin(F.broadcast(bp)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -2827,8 +2833,7 @@ def corpus_pipeline_v4(spark, sf_dir, k: int = 50):
     bp = _bp_frequent_lines(docs).agg(
         F.array_sort(F.collect_set("line")).alias("bp"))
     lines = F.split(F.col("text"), "\n", -1)
-    kept = F.filter(lines, lambda line: ~F.array_contains(
-        F.col("bp"), F.trim(F.lower(line))))
+    kept = _bp_kept_lines(lines, F.col("bp"))
     cleaned = docs.crossJoin(F.broadcast(bp)).select(
         "doc_id", F.concat_ws("\n", kept).alias("text"))
     gated = cleaned.filter(_gopher_metrics(F.col("text"))["keep"])

@@ -52,34 +52,60 @@ def with_norm(df: DataFrame, col: str = "embedding", dim: int = EMB_DIM) -> Data
     return df.withColumn("_e", e).withColumn("_norm", norm)
 
 
+def _normed(emb: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, _e, _norm): the frame every cosine search scans."""
+    return with_norm(emb, dim=dim).select("vec_id", "_e", "_norm")
+
+
+def _pq_base(emb: DataFrame) -> DataFrame:
+    """The cached (vec_id, _e) frame the PQ family reads several times."""
+    return tracked_cache(emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("_e")))
+
+
+def _x1e9(col: str):
+    """A 9-decimal rounded double as an exact long (round half up)."""
+    return F.floor(F.col(col) * 1e9 + F.lit(0.5)).cast("long")
+
+
+def _cos_r(ea: str, na: str, eb: str, nb: str, dim: int):
+    """Cosine of two normed vectors, rounded to 9 decimals."""
+    return F.round(_dot(F.col(ea), F.col(eb), dim)
+                   / (F.col(na) * F.col(nb)), 9)
+
+
+def _query_vecs(base: DataFrame, n_queries: int, *extra) -> DataFrame:
+    """The query side of a cosine search: (query_id, _qe, _qnorm, *extra)
+    for every vec_id < n_queries."""
+    return base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("_e").alias("_qe"),
+        F.col("_norm").alias("_qnorm"), *extra)
+
+
+def _cosine_topk(pairs: DataFrame, k: int, dim: int) -> DataFrame:
+    """Per-query top-k of candidate pairs (vec_id, _e, _norm) ×
+    (query_id, _qe, _qnorm) by rounded cosine, self excluded, ties to the
+    smaller neighbor id. Output: (query_id, rank, neighbor_id, cos_x1e9)."""
+    scored = (pairs.filter(F.col("vec_id") != F.col("query_id"))
+              .withColumn("cos_r", _cos_r("_e", "_norm", "_qe", "_qnorm",
+                                          dim)))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(F.col("query_id").cast("long"), F.col("rank").cast("long"),
+                    F.col("vec_id").cast("long").alias("neighbor_id"),
+                    _x1e9("cos_r").alias("cos_x1e9")))
+
+
 def cosine_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
                 dim: int = EMB_DIM) -> DataFrame:
     """Exact top-k neighbors for vec_id < n_queries (self excluded).
 
     Output: (query_id, rank, neighbor_id, cos_x1e9).
     """
-    base = with_norm(emb, dim=dim).select(F.col("vec_id"), "_e", "_norm")
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("_e").alias("_qe"),
-        F.col("_norm").alias("_qnorm"))
-    joined = (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos", _dot(F.col("_e"), F.col("_qe"), dim)
-                    / (F.col("_norm") * F.col("_qnorm")))
-        .withColumn("cos_r", F.round(F.col("cos"), 9))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("rank").cast("long"),
-            F.col("vec_id").cast("long").alias("neighbor_id"),
-            F.floor(F.col("cos_r") * 1e9 + F.lit(0.5)).cast("long").alias("cos_x1e9"),
-        )
-    )
+    base = _normed(emb, dim)
+    q = _query_vecs(base, n_queries)
+    return _cosine_topk(base.crossJoin(F.broadcast(q)), k, dim)
 
 
 def cosine_dup_pairs(emb: DataFrame, threshold: float = 0.35,
@@ -106,9 +132,8 @@ def cosine_dup_pairs(emb: DataFrame, threshold: float = 0.35,
     """
     spark = emb.sparkSession
     B = n_blocks or min(spark.sparkContext.defaultParallelism, 32)
-    base = with_norm(emb, dim=dim).select(
-        "vec_id", "_e", "_norm",
-        F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int").alias("blk"))
+    base = _normed(emb, dim).withColumn(
+        "blk", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int"))
     a = base.select(
         F.col("blk").alias("pi"),
         F.explode(F.sequence(F.col("blk"), F.lit(B - 1))).alias("pj"),
@@ -128,15 +153,13 @@ def cosine_dup_pairs(emb: DataFrame, threshold: float = 0.35,
         .filter((F.col("pi") != F.col("pj"))
                 | (F.col("vec_a") < F.col("vec_b")))
         .filter(F.col("vec_a") != F.col("vec_b"))
-        .withColumn("cos_r", F.round(
-            _dot(F.col("_ea"), F.col("_eb"), dim)
-            / (F.col("_na") * F.col("_nb")), 9))
+        .withColumn("cos_r", _cos_r("_ea", "_na", "_eb", "_nb", dim))
     )
     return (
         joined.filter(F.col("cos_r") >= threshold)
         .select(F.least("vec_a", "vec_b").alias("vec_a"),
                 F.greatest("vec_a", "vec_b").alias("vec_b"),
-                F.floor(F.col("cos_r") * 1e9 + F.lit(0.5)).cast("long").alias("cos_x1e9"))
+                _x1e9("cos_r").alias("cos_x1e9"))
     )
 
 
@@ -149,6 +172,32 @@ def _centroid_dist(dim: int):
         t = F.col("_e").getItem(d) - F.col("_ce").getItem(d)
         acc = acc + t * t
     return F.round(acc, 9)
+
+
+def _assign(base: DataFrame, cent: DataFrame, dim: int):
+    """Nearest-centroid assignment: a broadcast cross join of the centroid
+    table, then an argmin whose shuffle rows are (vec_id, struct(d, cid))
+    — never vectors — with ties to the smaller cid. Returns (ad, asn):
+    every (vec_id, cid, d) distance and the (vec_id, cell, dcent)
+    assignment."""
+    ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
+          .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
+    asn = (ad.groupBy("vec_id")
+           .agg(F.min(F.struct("d", "cid")).alias("m"))
+           .select("vec_id", F.col("m.cid").alias("cell"),
+                   F.col("m.d").alias("dcent")))
+    return ad, asn
+
+
+def _probes(ad: DataFrame, n_queries: int, n_probe: int) -> DataFrame:
+    """(query_id, cell): the n_probe nearest cells of each vec_id <
+    n_queries, ties to the smaller cid."""
+    wq = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
+    return (ad.filter(F.col("vec_id") < n_queries)
+            .withColumn("prank", F.row_number().over(wq))
+            .filter(F.col("prank") <= n_probe)
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("cid").alias("cell")))
 
 
 def coarse_centroids(base: DataFrame, n_cells: int, dim: int = EMB_DIM,
@@ -175,11 +224,7 @@ def coarse_centroids(base: DataFrame, n_cells: int, dim: int = EMB_DIM,
     cent = base.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("_e").alias("_ce"))
     for _ in range(n_iters):
-        ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
-              .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
-        asn = (ad.groupBy("vec_id")
-               .agg(F.min(F.struct("d", "cid")).alias("m"))
-               .select("vec_id", F.col("m.cid").alias("cell")))
+        _ad, asn = _assign(base, cent, dim)
         mem = base.select("vec_id", "_e").join(asn, "vec_id")
         sums = mem.groupBy("cell").agg(
             F.count("*").alias("cnt"),
@@ -229,40 +274,15 @@ def ivf_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
     # (via members) BOTH sides of the in-cell self-join — cache it and
     # the assigned frame so the norm fold and the argmin assignment run
     # once each (shared-frame rule; was 18 parquet scans uncached)
-    base = tracked_cache(
-        with_norm(emb, dim=dim).select("vec_id", "_e", "_norm"))
+    base = tracked_cache(_normed(emb, dim))
     cent = coarse_centroids(base, n_cells, dim, n_iters)
-
-    ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
-          .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
-    asn = (ad.groupBy("vec_id")
-           .agg(F.min(F.struct("d", "cid")).alias("m"))
-           .select("vec_id", F.col("m.cid").alias("cell")))
+    ad, asn = _assign(base, cent, dim)
     corpus = base.join(asn, "vec_id")
-
-    wq = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
-    probes = (ad.filter(F.col("vec_id") < n_queries)
-              .withColumn("prank", F.row_number().over(wq))
-              .filter(F.col("prank") <= n_probe)
-              .select(F.col("vec_id").alias("query_id"), F.col("cid").alias("cell")))
-    qvecs = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("_e").alias("_qe"),
-        F.col("_norm").alias("_qnorm"))
-    joined = (
-        corpus.join(F.broadcast(probes.join(qvecs, "query_id")), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_r", F.round(
-            _dot(F.col("_e"), F.col("_qe"), dim)
-            / (F.col("_norm") * F.col("_qnorm")), 9))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("query_id").cast("long"), F.col("rank").cast("long"),
-                F.col("vec_id").cast("long").alias("neighbor_id"),
-                F.floor(F.col("cos_r") * 1e9 + F.lit(0.5)).cast("long").alias("cos_x1e9"))
-    )
+    probes = _probes(ad, n_queries, n_probe)
+    qvecs = _query_vecs(base, n_queries)
+    return _cosine_topk(
+        corpus.join(F.broadcast(probes.join(qvecs, "query_id")), "cell"),
+        k, dim)
 
 
 def ivf_recall(emb: DataFrame, n_queries: int = 20, k: int = 3,
@@ -339,15 +359,9 @@ def semdedup_prune(emb: DataFrame, n_cells: int = 16, threshold: float = 0.35,
     Output: (vec_id, cell, keep 0/1, dup_of nullable, cos_x1e9 nullable)
     where dup_of is the strongest earlier partner at/above threshold.
     """
-    base = with_norm(emb, dim=dim).select("vec_id", "_e", "_norm")
+    base = _normed(emb, dim)
     cent = coarse_centroids(base, n_cells, dim, n_iters)
-
-    ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
-          .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
-    asn = (ad.groupBy("vec_id")
-           .agg(F.min(F.struct("d", "cid")).alias("m"))
-           .select("vec_id", F.col("m.cid").alias("cell"),
-                   F.col("m.d").alias("dcent")))
+    _ad, asn = _assign(base, cent, dim)
     members = tracked_cache(base.join(asn, "vec_id"))
 
     a = members.select("cell", "vec_id", F.col("_e").alias("_ea"),
@@ -360,9 +374,7 @@ def semdedup_prune(emb: DataFrame, n_cells: int = 16, threshold: float = 0.35,
                   & (F.col("partner") < F.col("vec_id"))))
     pairs = (a.join(b, "cell")
              .filter(earlier)
-             .withColumn("cos_r", F.round(
-                 _dot(F.col("_ea"), F.col("_eb"), dim)
-                 / (F.col("_na") * F.col("_nb")), 9))
+             .withColumn("cos_r", _cos_r("_ea", "_na", "_eb", "_nb", dim))
              .filter(F.col("cos_r") >= threshold))
     best = (pairs.groupBy("vec_id")
             .agg(F.min(F.struct((-F.col("cos_r")).alias("nc"),
@@ -374,8 +386,7 @@ def semdedup_prune(emb: DataFrame, n_cells: int = 16, threshold: float = 0.35,
                     F.col("cell").cast("long"),
                     F.col("dup_of").isNull().cast("long").alias("keep"),
                     F.col("dup_of").cast("long").alias("dup_of"),
-                    F.floor(F.col("best_cos") * 1e9 + F.lit(0.5))
-                    .cast("long").alias("cos_x1e9")))
+                    _x1e9("best_cos").alias("cos_x1e9")))
 
 
 def chunk_l2_topk(chunks: DataFrame, query_text: str, k: int = 5,
@@ -401,38 +412,52 @@ def chunk_l2_topk(chunks: DataFrame, query_text: str, k: int = 5,
         t = _embed_term(F.col("chunk"), d) - F.lit(qvec[d])
         sq = t * t
         dist = sq if dist is None else dist + sq
-    order = [F.asc("dist_r"), F.asc("conv_id"), F.asc("turn_idx"),
-             F.asc("chunk_idx")]
-    top = (chunks.withColumn("dist_r", F.round(dist, 9))
+    return _chunk_topk(chunks, dist, "dist_r", F.asc, k, "l2_x1e9")
+
+
+def _chunk_topk(chunks: DataFrame, score, col: str, direction, k: int,
+                out: str) -> DataFrame:
+    """TakeOrdered top-k chunks by `score` rounded to 9 decimals (as
+    `col`), ties by (conv_id, turn_idx, chunk_idx), all in `direction`
+    (F.asc or F.desc). Output: (rank, conv_id, turn_idx, chunk_idx, out)."""
+    order = [direction(c) for c in (col, "conv_id", "turn_idx", "chunk_idx")]
+    top = (chunks.withColumn(col, F.round(score, 9))
            .orderBy(*order).limit(k))
     return (top.withColumn("rank", F.row_number().over(Window.orderBy(*order))
                            .cast("long"))
             .select("rank", "conv_id", "turn_idx",
                     F.col("chunk_idx").cast("long").alias("chunk_idx"),
-                    F.floor(F.col("dist_r") * 1e9 + F.lit(0.5)).cast("long")
-                    .alias("l2_x1e9")))
+                    _x1e9(col).alias(out)))
+
+
+def _embed_sql(dim: int):
+    """DuckDB restatement of the md5 embedding: the `h{d}` hex-prefix
+    columns of `chunk`, and dimension d's value from its `h{d}` (hex→int
+    via nibble positions — DuckDB has no conv())."""
+    hex_cols = ",\n           ".join(
+        f"substr(md5('{d}:' || chunk), 1, 8) h{d}" for d in range(dim))
+
+    def value(d: int) -> str:
+        nib = " + ".join(
+            f"(strpos('0123456789abcdef', substr(h{d}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
+            for i in range(8))
+        return f"cast({nib} as double) / 2147483647.0 - 1.0"
+
+    return hex_cols, value
 
 
 def chunk_l2_sql_duckdb(chunks_parquet: str, query_text: str, k: int = 5,
                         dim: int = 16) -> str:
     """DuckDB twin of chunk_l2_topk over the pyref chunk golden parquet.
 
-    Restates the md5 embedding (hex→int via nibble positions — DuckDB has
-    no conv()), the left-assoc squared-distance chain in the same
-    dimension order, and the TakeOrdered ranking.
+    Restates the md5 embedding (_embed_sql), the left-assoc
+    squared-distance chain in the same dimension order, and the
+    TakeOrdered ranking.
     """
     qvec = embed_text_py(query_text, dim)
-    hex_cols = ",\n           ".join(
-        f"substr(md5('{d}:' || chunk), 1, 8) h{d}" for d in range(dim))
-
-    def nib(d: int) -> str:
-        return " + ".join(
-            f"(strpos('0123456789abcdef', substr(h{d}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-            for i in range(8))
-
+    hex_cols, value = _embed_sql(dim)
     val_cols = ",\n           ".join(
-        f"(cast({nib(d)} as double) / 2147483647.0 - 1.0 - ({qvec[d]!r})) t{d}"
-        for d in range(dim))
+        f"({value(d)} - ({qvec[d]!r})) t{d}" for d in range(dim))
     dist = " + ".join(f"(t{d} * t{d})" for d in range(dim))
     return f"""
     WITH c AS (SELECT conv_id, turn_idx, chunk_idx, chunk,
@@ -469,16 +494,7 @@ def chunk_cosine_topk(chunks: DataFrame, query_text: str, k: int = 5,
     for d in range(dim):
         t = _embed_term(F.col("chunk"), d) * F.lit(qvec[d])
         dot = t if dot is None else dot + t
-    order = [F.desc("dot_r"), F.desc("conv_id"), F.desc("turn_idx"),
-             F.desc("chunk_idx")]
-    top = (chunks.withColumn("dot_r", F.round(dot, 9))
-           .orderBy(*order).limit(k))
-    return (top.withColumn("rank", F.row_number().over(Window.orderBy(*order))
-                           .cast("long"))
-            .select("rank", "conv_id", "turn_idx",
-                    F.col("chunk_idx").cast("long").alias("chunk_idx"),
-                    F.floor(F.col("dot_r") * 1e9 + F.lit(0.5)).cast("long")
-                    .alias("dot_x1e9")))
+    return _chunk_topk(chunks, dot, "dot_r", F.desc, k, "dot_x1e9")
 
 
 def chunk_cosine_sql_duckdb(chunks_parquet: str, query_text: str, k: int = 5,
@@ -486,17 +502,9 @@ def chunk_cosine_sql_duckdb(chunks_parquet: str, query_text: str, k: int = 5,
     """DuckDB twin of chunk_cosine_topk (same md5 embedding restatement
     and left-assoc dot fold in ascending dimension order)."""
     qvec = embed_text_py(query_text, dim)
-    hex_cols = ",\n           ".join(
-        f"substr(md5('{d}:' || chunk), 1, 8) h{d}" for d in range(dim))
-
-    def nib(d: int) -> str:
-        return " + ".join(
-            f"(strpos('0123456789abcdef', substr(h{d}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-            for i in range(8))
-
+    hex_cols, value = _embed_sql(dim)
     val_cols = ",\n           ".join(
-        f"((cast({nib(d)} as double) / 2147483647.0 - 1.0) * ({qvec[d]!r})) t{d}"
-        for d in range(dim))
+        f"(({value(d)}) * ({qvec[d]!r})) t{d}" for d in range(dim))
     dot = " + ".join(f"t{d}" for d in range(dim))
     return f"""
     WITH c AS (SELECT conv_id, turn_idx, chunk_idx, chunk,
@@ -554,24 +562,8 @@ def lsh_bucket_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
         ],
     )
     b = base.withColumn("bucket", sig).select("vec_id", "_e", "_norm", "bucket")
-    q = b.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("_e").alias("_qe"),
-        F.col("_norm").alias("_qnorm"), "bucket")
-    joined = (
-        b.join(q, "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_r", F.round(
-            _dot(F.col("_e"), F.col("_qe"), dim)
-            / (F.col("_norm") * F.col("_qnorm")), 9))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_r"), F.asc("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("query_id").cast("long"), F.col("rank").cast("long"),
-                F.col("vec_id").cast("long").alias("neighbor_id"),
-                F.floor(F.col("cos_r") * 1e9 + F.lit(0.5)).cast("long").alias("cos_x1e9"))
-    )
+    q = _query_vecs(b, n_queries, "bucket")
+    return _cosine_topk(b.join(q, "bucket"), k, dim)
 
 
 def _pq_micro_sqdist(a, b, dsub: int):
@@ -623,6 +615,49 @@ def _pq_codes(base: DataFrame, m: int, ksub: int, dim: int,
     return out, cents
 
 
+def _sum_cols(names):
+    """Left-assoc sum of the named columns."""
+    acc = None
+    for n in names:
+        acc = F.col(n) if acc is None else acc + F.col(n)
+    return acc
+
+
+def _raw_luts(base: DataFrame, cents: list, n_queries: int, m: int,
+              dim: int) -> list:
+    """Per subspace s, the broadcast-ready LUT (query_id, code{s}, _d{s}):
+    each query sub-vector's micro-unit distance to every codeword."""
+    dsub = dim // m
+    q = base.filter(F.col("vec_id") < n_queries)
+    luts = []
+    for s in range(m):
+        sub = F.slice(F.col("_e"), s * dsub + 1, dsub)
+        luts.append(
+            q.select(F.col("vec_id").alias("query_id"), sub.alias("_qe"))
+            .crossJoin(F.broadcast(cents[s]))
+            .select("query_id", F.col("cid").cast("long").alias(f"code{s}"),
+                    _pq_micro_sqdist(F.col("_qe"), F.col("_ce"), dsub)
+                    .alias(f"_d{s}")))
+    return luts
+
+
+def _adc_topk(scan: DataFrame, m: int, k: int) -> DataFrame:
+    """Per-query top-k of a LUT-joined scan by summed subspace distance
+    (_d0.._d{m-1}), self excluded, ties to the smaller neighbor id.
+    Output: (query_id, rank, neighbor_id, adc_microsq)."""
+    ranked = (scan.filter(F.col("vec_id") != F.col("query_id"))
+              .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                      _sum_cols(f"_d{s}" for s in range(m))
+                      .cast("long").alias("adc_microsq")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_microsq"), F.asc("neighbor_id"))
+    return (ranked.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(F.col("query_id").cast("long"),
+                    F.col("rank").cast("long"),
+                    F.col("neighbor_id").cast("long"), "adc_microsq"))
+
+
 def pq_encode(emb: DataFrame, m: int = 4, ksub: int = 16,
               dim: int = EMB_DIM) -> DataFrame:
     """Product-quantization encode (Jégou, Douze & Schmid, TPAMI 2011):
@@ -645,17 +680,12 @@ def pq_encode(emb: DataFrame, m: int = 4, ksub: int = 16,
     agree bit-for-bit; the per-subspace argmin distance IS the exact
     reconstruction error, so the total is a sum of already-exact longs.
     Output: (vec_id, code0..code{m-1}, err_microsq)."""
-    base = tracked_cache(emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_e")))
-    out, _cents = _pq_codes(base, m, ksub, dim)
-    err = None
-    for s in range(m):
-        c = F.col(f"_err{s}")
-        err = c if err is None else err + c
+    out, _cents = _pq_codes(_pq_base(emb), m, ksub, dim)
     return out.select(
         F.col("vec_id").cast("long").alias("vec_id"),
         *[F.col(f"code{s}") for s in range(m)],
-        err.cast("long").alias("err_microsq"))
+        _sum_cols(f"_err{s}" for s in range(m))
+        .cast("long").alias("err_microsq"))
 
 
 def pq_adc_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
@@ -675,35 +705,13 @@ def pq_adc_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
     (_pq_micro_sqdist) end to end — NO float ties, deterministic
     ranking, bit-identical oracle. Output:
     (query_id, rank, neighbor_id, adc_microsq)."""
-    dsub = dim // m
-    base = tracked_cache(emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_e")))
+    base = _pq_base(emb)
     codes, cents = _pq_codes(base, m, ksub, dim)
     scan = codes.select("vec_id", *[f"code{s}" for s in range(m)])
-    for s in range(m):
-        sub = F.slice(F.col("_e"), s * dsub + 1, dsub)
-        q = (base.filter(F.col("vec_id") < n_queries)
-             .select(F.col("vec_id").alias("query_id"), sub.alias("_qe")))
-        lut = q.crossJoin(F.broadcast(cents[s])).select(
-            "query_id", F.col("cid").cast("long").alias(f"code{s}"),
-            _pq_micro_sqdist(F.col("_qe"), F.col("_ce"), dsub)
-            .alias(f"_d{s}"))
+    for s, lut in enumerate(_raw_luts(base, cents, n_queries, m, dim)):
         join_on = [f"code{s}"] if s == 0 else ["query_id", f"code{s}"]
         scan = scan.join(F.broadcast(lut), join_on)
-    adc = None
-    for s in range(m):
-        c = F.col(f"_d{s}")
-        adc = c if adc is None else adc + c
-    ranked = (scan.filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      adc.cast("long").alias("adc_microsq")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_microsq"), F.asc("neighbor_id"))
-    return (ranked.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("query_id").cast("long"),
-                    F.col("rank").cast("long"),
-                    F.col("neighbor_id").cast("long"), "adc_microsq"))
+    return _adc_topk(scan, m, k)
 
 
 def ivfpq_adc_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
@@ -731,48 +739,15 @@ def ivfpq_adc_topk(emb: DataFrame, n_queries: int = 20, k: int = 3,
     per-query top-k is a window over the already-reduced frame.
     Integer micro-unit distances end to end — no float ties. Output:
     (query_id, rank, neighbor_id, adc_microsq)."""
-    dsub = dim // m
-    base = tracked_cache(emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_e")))
-    cent = coarse_centroids(base, n_cells, dim)
-    ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
-          .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
-    asn = (ad.groupBy("vec_id")
-           .agg(F.min(F.struct("d", "cid")).alias("mn"))
-           .select("vec_id", F.col("mn.cid").alias("cell")))
-    wq = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
-    probes = (ad.filter(F.col("vec_id") < n_queries)
-              .withColumn("prank", F.row_number().over(wq))
-              .filter(F.col("prank") <= n_probe)
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("cid").alias("cell")))
+    base = _pq_base(emb)
+    ad, asn = _assign(base, coarse_centroids(base, n_cells, dim), dim)
     codes, cents = _pq_codes(base, m, ksub, dim)
     scan = (codes.select("vec_id", *[f"code{s}" for s in range(m)])
             .join(asn, "vec_id")
-            .join(F.broadcast(probes), "cell"))
-    for s in range(m):
-        sub = F.slice(F.col("_e"), s * dsub + 1, dsub)
-        q = (base.filter(F.col("vec_id") < n_queries)
-             .select(F.col("vec_id").alias("query_id"), sub.alias("_qe")))
-        lut = q.crossJoin(F.broadcast(cents[s])).select(
-            "query_id", F.col("cid").cast("long").alias(f"code{s}"),
-            _pq_micro_sqdist(F.col("_qe"), F.col("_ce"), dsub)
-            .alias(f"_d{s}"))
+            .join(F.broadcast(_probes(ad, n_queries, n_probe)), "cell"))
+    for s, lut in enumerate(_raw_luts(base, cents, n_queries, m, dim)):
         scan = scan.join(F.broadcast(lut), ["query_id", f"code{s}"])
-    adc = None
-    for s in range(m):
-        c = F.col(f"_d{s}")
-        adc = c if adc is None else adc + c
-    ranked = (scan.filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      adc.cast("long").alias("adc_microsq")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_microsq"), F.asc("neighbor_id"))
-    return (ranked.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("query_id").cast("long"),
-                    F.col("rank").cast("long"),
-                    F.col("neighbor_id").cast("long"), "adc_microsq"))
+    return _adc_topk(scan, m, k)
 
 
 def ivfpq_residual_adc_topk(emb: DataFrame, n_queries: int = 20,
@@ -796,20 +771,10 @@ def ivfpq_residual_adc_topk(emb: DataFrame, n_queries: int = 20,
     with no shuffle. Output: (query_id, rank, neighbor_id,
     adc_microsq)."""
     dsub = dim // m
-    base = tracked_cache(emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_e")))
+    base = _pq_base(emb)
     cent = coarse_centroids(base, n_cells, dim)
-    ad = (base.select("vec_id", "_e").crossJoin(F.broadcast(cent))
-          .select("vec_id", "cid", _centroid_dist(dim).alias("d")))
-    asn = (ad.groupBy("vec_id")
-           .agg(F.min(F.struct("d", "cid")).alias("mn"))
-           .select("vec_id", F.col("mn.cid").alias("cell")))
-    wq = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("cid"))
-    probes = (ad.filter(F.col("vec_id") < n_queries)
-              .withColumn("prank", F.row_number().over(wq))
-              .filter(F.col("prank") <= n_probe)
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("cid").alias("cell")))
+    ad, asn = _assign(base, cent, dim)
+    probes = _probes(ad, n_queries, n_probe)
     cellc = cent.select(F.col("cid").alias("cell"),
                         F.col("_ce").alias("_cc"))
     res = tracked_cache(
@@ -841,17 +806,4 @@ def ivfpq_residual_adc_topk(emb: DataFrame, n_queries: int = 20,
                        .alias(f"_d{s}")))
         scan = scan.join(F.broadcast(lut),
                          ["query_id", "cell", f"code{s}"])
-    adc = None
-    for s in range(m):
-        c = F.col(f"_d{s}")
-        adc = c if adc is None else adc + c
-    ranked = (scan.filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      adc.cast("long").alias("adc_microsq")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_microsq"), F.asc("neighbor_id"))
-    return (ranked.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(F.col("query_id").cast("long"),
-                    F.col("rank").cast("long"),
-                    F.col("neighbor_id").cast("long"), "adc_microsq"))
+    return _adc_topk(scan, m, k)

@@ -8,11 +8,11 @@ with watermarks for late turns, and a custom stateful operator via
 applyInPandasWithState (the streaming twin of the batch A2
 gaps-and-islands sessionization).
 
-All entry points default to Trigger.AvailableNow: process everything
-present, checkpoint, stop — which is also the incremental-batch
-("resumable restarts") mode the north_rule asks about: re-running after
-new files land processes only the delta recorded in the checkpoint's
-file-source log.
+Every entry point runs one Trigger.AvailableNow query through `_drain`
+and returns after it stops: process everything present, checkpoint,
+stop — which is also the incremental-batch ("resumable restarts") mode
+the north_rule asks about: re-running after new files land processes
+only the delta recorded in the checkpoint's file-source log.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -45,16 +46,23 @@ TRANSCRIPT_SCHEMA = StructType([
 ])
 
 
-def read_transcript_stream(spark: SparkSession, source_dir: str,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    r = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(source_dir)
+def read_transcript_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(source_dir)
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start `writer` as an availableNow query checkpointed at
+    `checkpoint_dir`, wait until it has processed everything present,
+    and return it."""
+    q = (writer.option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return q
 
 
 def extract_stream(spark: SparkSession, source_dir: str, out_dir: str,
-                   checkpoint_dir: str, await_termination: bool = True):
+                   checkpoint_dir: str):
     """Incremental extraction: new transcript files → rollup parquet sink.
 
     The checkpoint's file-source log makes re-runs process only unseen
@@ -62,20 +70,13 @@ def extract_stream(spark: SparkSession, source_dir: str, out_dir: str,
     """
     stream = read_transcript_stream(spark, source_dir)
     ext = extract_turns(stream)
-    q = (ext.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        ext.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 def dedup_stream(spark: SparkSession, source_dir: str, out_dir: str,
-                 checkpoint_dir: str, watermark: str = "10 minutes",
-                 await_termination: bool = True):
+                 checkpoint_dir: str, watermark: str = "10 minutes"):
     """Streaming exact dedup — the incremental twin of
     dedup.exact_dedup_groups: drop any turn whose md5(text) was already
     seen, with the dedup state BOUNDED by the event-time watermark
@@ -90,21 +91,14 @@ def dedup_stream(spark: SparkSession, source_dir: str, out_dir: str,
                .withColumn("text_hash", F.md5("text"))
                .withWatermark("ts", watermark)
                .dropDuplicatesWithinWatermark(["text_hash"]))
-    q = (deduped.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        deduped.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 def decontaminate_stream(spark: SparkSession, source_dir: str,
                          bench_grams: list[str], out_dir: str,
-                         checkpoint_dir: str,
-                         await_termination: bool = True):
+                         checkpoint_dir: str):
     """Streaming test-set decontamination — the incremental twin of the
     batch `corpus_decontaminate`: drop any streamed turn whose word
     n-gram set overlaps the static benchmark gram set. The gram set is
@@ -119,43 +113,29 @@ def decontaminate_stream(spark: SparkSession, source_dir: str,
     stream = read_transcript_stream(spark, source_dir)
     bench = F.array(*[F.lit(g) for g in sorted(set(bench_grams))])
     clean = stream.filter(~F.arrays_overlap(shingle_array(), bench))
-    q = (clean.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        clean.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 def hourly_kind_counts_stream(spark: SparkSession, source_dir: str,
-                              out_dir: str, checkpoint_dir: str,
-                              watermark: str = "1 hour",
-                              await_termination: bool = True):
+                              out_dir: str, checkpoint_dir: str):
     """Event-time tumbling window with late-data watermark.
 
-    Counts turns per (hour(ts), kind); turns later than the watermark are
-    dropped deterministically by the engine.
+    Counts turns per (hour(ts), kind); turns more than one hour behind
+    the newest event time are dropped deterministically by the engine.
     """
     from ..operators.extract import kind_col
 
     stream = read_transcript_stream(spark, source_dir)
     agg = (stream.withColumn("kind", kind_col())
-           .withWatermark("ts", watermark)
+           .withWatermark("ts", "1 hour")
            .groupBy(F.window("ts", "1 hour").alias("w"), "kind")
            .agg(F.count("*").alias("n_turns"))
            .select(F.col("w.start").alias("hour_start"), "kind", "n_turns"))
-    q = (agg.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        agg.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -197,8 +177,7 @@ def _session_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
 
 
 def conversation_progress_stream(spark: SparkSession, source_dir: str,
-                                 out_dir: str, checkpoint_dir: str,
-                                 await_termination: bool = True):
+                                 out_dir: str, checkpoint_dir: str):
     """applyInPandasWithState: running per-conversation rollup."""
     stream = read_transcript_stream(spark, source_dir)
     prog = (stream.groupBy("conv_id").applyInPandasWithState(
@@ -210,14 +189,8 @@ def conversation_progress_stream(spark: SparkSession, source_dir: str,
     def _sink(batch_df, _batch_id):
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (prog.writeStream.foreachBatch(_sink)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("update")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(prog.writeStream.foreachBatch(_sink).outputMode("update"),
+                  checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -238,7 +211,7 @@ MINHASH_BUCKET_STATE_SCHEMA = StructType([
 ])
 
 
-def _make_band_bucket_fn(horizon_ms: int, bucket_cap: int | None):
+def _make_band_bucket_fn(horizon_ms: int):
     def _band_bucket_fn(key, pdfs: Iterator[pd.DataFrame],
                         state: GroupState):
         """One MinHash band bucket: state = the turns whose band key
@@ -279,8 +252,7 @@ def _make_band_bucket_fn(horizon_ms: int, bucket_cap: int | None):
                     continue
                 a, b = ((oc, oi), me) if (oc, oi) < me else (me, (oc, oi))
                 out.append((a[0], a[1], b[0], b[1]))
-            if bucket_cap is None or len(members) < bucket_cap:
-                members.append((conv, ti, ts_ms))
+            members.append((conv, ti, ts_ms))
         state.update(([m[0] for m in members], [m[1] for m in members],
                       [m[2] for m in members]))
         # bucket idle-timeout = the horizon past the newest member
@@ -295,9 +267,7 @@ def _make_band_bucket_fn(horizon_ms: int, bucket_cap: int | None):
 def minhash_candidates_stream(spark: SparkSession, source_dir: str,
                               out_dir: str, checkpoint_dir: str,
                               watermark: str = "10 minutes",
-                              horizon_ms: int = 10 * 60 * 1000,
-                              bucket_cap: int | None = None,
-                              await_termination: bool = True):
+                              horizon_ms: int = 10 * 60 * 1000):
     """Streaming MinHash-LSH near-dup CANDIDATE pairs — the incremental
     twin of the batch dedup.minhash_lsh_pairs candidate stage, completing
     the streaming dedup family next to dedup_stream's exact dedup.
@@ -311,10 +281,9 @@ def minhash_candidates_stream(spark: SparkSession, source_dir: str,
     corpus history — the property that keeps a 10^12-turn ingest
     running forever. A pair sharing several bands is emitted once per
     band (downstream consumers dedup, exactly like the batch candidate
-    stage pre-`distinct`); `bucket_cap` is the df_cap analog for
-    hot-band buckets (None = exact, the library default). Verification
-    (exact Jaccard) stays a batch join over the emitted candidates —
-    candidates are tiny next to the corpus.
+    stage pre-`distinct`); turns with no word never enter a bucket.
+    Verification (exact Jaccard) stays a batch join over the emitted
+    candidates — candidates are tiny next to the corpus.
 
     Output: (conv_a, turn_a, conv_b, turn_b) with (conv_a, turn_a) <
     (conv_b, turn_b). Exactly-once across restarts via the checkpoint
@@ -327,23 +296,16 @@ def minhash_candidates_stream(spark: SparkSession, source_dir: str,
         stream.withWatermark("ts", watermark),
         id_cols=("conv_id", "turn_idx", "ts"))
     pairs = bands.groupBy("band", "band_key").applyInPandasWithState(
-        _make_band_bucket_fn(horizon_ms, bucket_cap),
+        _make_band_bucket_fn(horizon_ms),
         MINHASH_PAIR_SCHEMA, MINHASH_BUCKET_STATE_SCHEMA,
         "append", GroupStateTimeout.EventTimeTimeout)
-    q = (pairs.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        pairs.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 def quality_gate_stream(spark: SparkSession, source_dir: str,
-                        out_dir: str, checkpoint_dir: str,
-                        await_termination: bool = True):
+                        out_dir: str, checkpoint_dir: str):
     """Streaming quality gate + PII redaction — the incremental twin of
     the batch `doc_quality_gopher` keep decision composed with
     `doc_redact`, applied per streamed turn: both are stateless
@@ -359,21 +321,14 @@ def quality_gate_stream(spark: SparkSession, source_dir: str,
     gated = (stream.filter(keep)
              .select("conv_id", "turn_idx",
                      redact_col(F.col("text")).alias("redacted_text")))
-    q = (gated.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        gated.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)
 
 
 def boilerplate_strip_stream(spark: SparkSession, source_dir: str,
                              bp_lines: list[str], out_dir: str,
-                             checkpoint_dir: str,
-                             await_termination: bool = True):
+                             checkpoint_dir: str):
     """Streaming twin of the batch `doc_strip_boilerplate` apply pass:
     the frequent-line set (computed by the batch detector over the
     reference corpus — CCNet refreshes it per crawl snapshot, not per
@@ -382,22 +337,17 @@ def boilerplate_strip_stream(spark: SparkSession, source_dir: str,
     no state, no join, no Python, so at 10^12 turns this rides the same
     always-on ingest path as the quality gate. Exactly-once across
     restarts via the file-source checkpoint log."""
+    from ..queries import _bp_kept_lines
+
     bset = F.array(*[F.lit(s) for s in sorted(set(bp_lines))])
     stream = read_transcript_stream(spark, source_dir)
     lines = F.split(F.col("text"), "\n", -1)
-    kept = F.filter(lines, lambda line: ~F.array_contains(
-        bset, F.trim(F.lower(line))))
+    kept = _bp_kept_lines(lines, bset)
     out = stream.select(
         "conv_id", "turn_idx",
         F.concat_ws("\n", kept).alias("clean_text"),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(kept).cast("long").alias("n_kept_lines"))
-    q = (out.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .outputMode("append")
-         .start())
-    if await_termination:
-        q.awaitTermination()
-    return q
+    return _drain(
+        out.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir)

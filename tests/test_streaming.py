@@ -41,6 +41,21 @@ def _rollup_cols(df):
     return df.select(*cols).orderBy("conv_id", "turn_idx").collect()
 
 
+def _write_turns(path, convs, texts, ts):
+    """One parquet file of single-turn conversations at event time ts."""
+    import pyarrow as pa
+
+    n = len(convs)
+    pq.write_table(pa.table({
+        "conv_id": pa.array(convs, pa.string()),
+        "turn_idx": pa.array([0] * n, pa.int32()),
+        "role": pa.array(["user"] * n, pa.string()),
+        "text": pa.array(texts, pa.string()),
+        "tool": pa.array([""] * n, pa.string()),
+        "ts": pa.array([ts] * n, pa.timestamp("us")),
+    }), str(path))
+
+
 def test_extract_stream_incremental_matches_batch(spark, tmp_path, split_source):
     from ocr_image_to_text_spark.operators.extract import extract_turns
 
@@ -179,7 +194,11 @@ def test_minhash_candidates_stream_equals_batch(spark, tmp_path, split_source):
     (band buckets) carries wave-1 members so wave-2 arrivals pair with
     them across runs. The horizon is kept wider than the fixture's time
     span so no bucket expires mid-test (expiry semantics are the
-    documented lossy part, like every watermark)."""
+    documented lossy part, like every watermark). t1 itself holds no
+    near-duplicate turns, so one sentence is seeded in two conversations
+    before run 1 and in a third before run 2."""
+    import datetime as dt
+
     from pyspark.sql import functions as F
 
     from ocr_image_to_text_spark.dedup import minhash_band_rows
@@ -189,6 +208,9 @@ def test_minhash_candidates_stream_equals_batch(spark, tmp_path, split_source):
     d, t, half = split_source
     out, ckpt = str(tmp_path / "mhout"), str(tmp_path / "mhckpt")
     year_ms = 365 * 24 * 3600 * 1000
+    seed = "the quick brown fox jumps over the lazy dog near the river"
+    t0 = dt.datetime(2024, 1, 1)
+    _write_turns(d / "seed-0.parquet", ["seed-a", "seed-b"], [seed] * 2, t0)
     minhash_candidates_stream(spark, str(d), out, ckpt,
                               watermark="365 days", horizon_ms=year_ms)
     n_first = spark.read.parquet(out).distinct().count()
@@ -196,6 +218,7 @@ def test_minhash_candidates_stream_equals_batch(spark, tmp_path, split_source):
     # late wave lands; second availableNow run pairs it against the
     # band-bucket members the checkpointed state kept from wave 1
     pq.write_table(t.slice(half), str(d / "part-1.parquet"))
+    _write_turns(d / "seed-1.parquet", ["seed-c"], [seed], t0)
     minhash_candidates_stream(spark, str(d), out, ckpt,
                               watermark="365 days", horizon_ms=year_ms)
 
@@ -219,6 +242,29 @@ def test_minhash_candidates_stream_equals_batch(spark, tmp_path, split_source):
     assert got == want
     assert want, "fixture must produce near-dup candidates"
     assert 0 < n_first < len(got), "wave 2 added cross-wave candidate pairs"
+
+
+def test_minhash_candidates_skip_wordless_turns(spark, tmp_path):
+    """Turns with no word (empty, all whitespace, NULL) share identical
+    band keys in every band; they are not near-duplicates of each other
+    and must never pair. Only the two identical sentences do."""
+    import datetime as dt
+
+    from ocr_image_to_text_spark.streaming.pipeline import (
+        minhash_candidates_stream)
+
+    d = tmp_path / "src"
+    d.mkdir()
+    sentence = "the quick brown fox jumps over the lazy dog tonight"
+    texts = ["", "", "   ", "\t\n", None, None, sentence, sentence]
+    _write_turns(d / "w0.parquet", [f"c{i}" for i in range(8)], texts,
+                 dt.datetime(2024, 1, 1))
+    out, ckpt = str(tmp_path / "wlout"), str(tmp_path / "wlckpt")
+    minhash_candidates_stream(spark, str(d), out, ckpt,
+                              watermark="365 days",
+                              horizon_ms=365 * 24 * 3600 * 1000)
+    got = {(r.conv_a, r.conv_b) for r in spark.read.parquet(out).collect()}
+    assert got == {("c6", "c7")}
 
 
 def test_minhash_candidates_bucket_expiry(spark, tmp_path):
