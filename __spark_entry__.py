@@ -54,9 +54,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 38 queries whose code drifted
-    # since r5; (B) the 12 oldest remaining certificates, which push the
-    # next 16 just past the prefix.
+    # The current prefix, in order: (A) the 46 queries whose code drifted
+    # since r5; (B) the 4 oldest remaining certificates, which push the
+    # next 24 just past the prefix.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
     return {
@@ -107,12 +107,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivfpq_residual_topk": q.ann_ivfpq_residual_topk,
         "doc_strip_boilerplate": q.doc_strip_boilerplate,
         "corpus_pipeline_v4": q.corpus_pipeline_v4,
-        # --- (B) the oldest remaining certificates: r2, then r3 in
-        #     registry order ---
+        #     ... plus the 8 curation queries built from the shared
+        #     curation stages (queries._exact_dedup, _bench_clean, _pack,
+        #     _aes_cols, _dsir_weights) ---
+        "corpus_dsir_weights": q.corpus_dsir_weights,
+        "corpus_pack_sequences": q.corpus_pack_sequences,
+        "corpus_curation_pipeline": q.corpus_curation_pipeline,
+        "corpus_pipeline_v2": q.corpus_pipeline_v2,
+        "corpus_pipeline_v3": q.corpus_pipeline_v3,
+        "corpus_sample_weighted": q.corpus_sample_weighted,
+        "corpus_sample_weighted_stratified": q.corpus_sample_weighted_stratified,
+        "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
+        # --- (B) the oldest remaining certificates: the four r2 ones ---
         "events_hourly": q.events_hourly,
         "events_sessions": q.events_sessions,
         "media_image_features": q.media_image_features,
         "media_audio_features": q.media_audio_features,
+        # ---- end of the 50-entry certified prefix ----
+        # --- (B) continued: the r3 certificates displaced by the drifted
+        #     block, in registry order ---
         "extract_angle_mode": q.extract_angle_mode,
         "doc_token_counts": q.doc_token_counts,
         "doc_fingerprints": q.doc_fingerprints,
@@ -121,8 +134,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_entities_seeded": q.doc_entities_seeded,
         "doc_redact": q.doc_redact,
         "doc_lang": q.doc_lang,
-        # ---- end of the 50-entry certified prefix ----
-        # --- (B) continued: displaced by the drifted block ---
         "doc_lang_ngram": q.doc_lang_ngram,
         "doc_stats": q.doc_stats,
         "doc_quality_v1": q.doc_quality_v1,
@@ -151,12 +162,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
         # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05);
-        #     dedup_clusters and semdedup_prune drifted since and lead the
-        #     prefix ---
+        #     dedup_clusters, semdedup_prune and 5 curation queries drifted
+        #     since and lead the prefix ---
         "doc_length_histogram": q.doc_length_histogram,
         "corpus_length_quantiles": q.corpus_length_quantiles,
         "corpus_sample_stratified": q.corpus_sample_stratified,
-        "corpus_dsir_weights": q.corpus_dsir_weights,
         "corpus_mix_budget": q.corpus_mix_budget,
         "corpus_top_tokens": q.corpus_top_tokens,
         "corpus_top_tokens_cms": q.corpus_top_tokens_cms,
@@ -171,10 +181,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_c4_page_filter_seeded": q.doc_c4_page_filter_seeded,
         "corpus_decontaminate": q.corpus_decontaminate,
         "corpus_decontaminate_bloom": q.corpus_decontaminate_bloom,
-        "corpus_pack_sequences": q.corpus_pack_sequences,
-        "corpus_curation_pipeline": q.corpus_curation_pipeline,
-        "corpus_pipeline_v2": q.corpus_pipeline_v2,
-        "corpus_pipeline_v3": q.corpus_pipeline_v3,
         "tpch_local_supplier_revenue": q.tpch_local_supplier_revenue,
         "tpch_promo_revenue": q.tpch_promo_revenue,
         "events_asof_join": q.events_asof_join,
@@ -201,8 +207,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "turn_link_density": q.turn_link_density,
         "corpus_source_stats": q.corpus_source_stats,
         "corpus_boilerplate_lines": q.corpus_boilerplate_lines,
-        "corpus_sample_weighted": q.corpus_sample_weighted,
-        "corpus_sample_weighted_stratified": q.corpus_sample_weighted_stratified,
         "corpus_token_entropy": q.corpus_token_entropy,
         "corpus_bpe_pairs": q.corpus_bpe_pairs,
         "corpus_bpe_merge2": q.corpus_bpe_merge2,
@@ -210,7 +214,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_simhash64": q.doc_simhash64,
         "dedup_minhash_recall": q.dedup_minhash_recall,
         "doc_lang_agreement": q.doc_lang_agreement,
-        "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
         "extract_box_overlaps": q.extract_box_overlaps,
         "doc_quality_decile_bounds": q.doc_quality_decile_bounds,
         "tpch_nation_volume": q.tpch_nation_volume,

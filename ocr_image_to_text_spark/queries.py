@@ -141,8 +141,9 @@ def extract_kind_metrics(spark, sf_dir):
     ))
 
 
-def conversation_stitch(spark, sf_dir, bucket: int = 1024):
-    """X11b page stitching per conversation — two-phase ordered concat.
+def _stitch(spark, sf_dir, bucket: int, page, sep: str):
+    """Two-phase ordered concat of each conversation's extracted pages:
+    ``page(text, i)`` renders page i (0-based), joined by ``sep``.
 
     Phase 1 pre-aggregates turn buckets (bounds per-group state for skewed
     10^6-turn conversations); phase 2 merges ordered buckets. Never a
@@ -164,12 +165,21 @@ def conversation_stitch(spark, sf_dir, bucket: int = 1024):
     stitched = F.array_join(
         F.transform(
             F.transform(F.col("turns"), lambda t: t["extracted_text"]),
-            lambda t, i: F.concat(F.lit("--- Page "), (i + 1).cast("string"),
-                                  F.lit(" ---\n"), t),
+            page,
         ),
-        "\n\n",
+        sep,
     )
     return p2.select("conv_id", stitched.alias("stitched"))
+
+
+def conversation_stitch(spark, sf_dir, bucket: int = 1024):
+    """X11b page stitching per conversation: '--- Page {i+1} ---\\n{text}'
+    pages joined by a blank line (`_stitch`)."""
+    return _stitch(spark, sf_dir, bucket,
+                   lambda t, i: F.concat(F.lit("--- Page "),
+                                         (i + 1).cast("string"),
+                                         F.lit(" ---\n"), t),
+                   "\n\n")
 
 
 def extract_flat(spark, sf_dir):
@@ -186,28 +196,11 @@ def conversation_stitch_v1(spark, sf_dir, bucket: int = 1024):
     """X11a stitching (src/core/ocr_engine.py:128): accumulating
     '--- PAGE {i+1} ---\\n{text}\\n\\n' — same two-phase ordered concat as
     conversation_stitch, different envelope."""
-    ext = _extracted(spark, sf_dir)
-    b = ext.select(
-        "conv_id", "turn_idx", "extracted_text",
-        (F.col("turn_idx") / bucket).cast("int").alias("bkt"))
-    p1 = b.groupBy("conv_id", "bkt").agg(
-        F.array_sort(F.collect_list(F.struct("turn_idx", "extracted_text"))).alias("arr"))
-    p2 = p1.groupBy("conv_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("bkt", "arr"))),
-                lambda x: x["arr"],
-            )
-        ).alias("turns"))
-    stitched = F.array_join(
-        F.transform(
-            F.transform(F.col("turns"), lambda t: t["extracted_text"]),
-            lambda t, i: F.concat(F.lit("--- PAGE "), (i + 1).cast("string"),
-                                  F.lit(" ---\n"), t, F.lit("\n\n")),
-        ),
-        "",
-    )
-    return p2.select("conv_id", stitched.alias("stitched"))
+    return _stitch(spark, sf_dir, bucket,
+                   lambda t, i: F.concat(F.lit("--- PAGE "),
+                                         (i + 1).cast("string"),
+                                         F.lit(" ---\n"), t, F.lit("\n\n")),
+                   "")
 
 
 def conversation_preview_t4(spark, sf_dir, n_lines: int = 10):
@@ -1706,24 +1699,15 @@ def corpus_pipeline_v3(spark, sf_dir, top_n: int = PIPELINE_V3_TOP_N):
                .select("doc_id", F.col("clean_text").alias("text")))
     m = _gopher_metrics(F.col("text"))
     gated = cleaned.filter(m["keep"]).select("doc_id", "text")
-    dw = Window.partitionBy(F.md5("text")).orderBy(F.asc("doc_id"))
     # surv feeds BOTH the DSIR gram build and the weights base join;
     # cache it so the C4+Gopher+dedup chain runs once
     surv = tracked_cache(
-        gated.withColumn("rn", F.row_number().over(dw))
-        .filter(F.col("rn") == 1).drop("rn")
-        .filter(F.col("doc_id") % DSIR_TARGET_MOD != 0))
+        _exact_dedup(gated).filter(F.col("doc_id") % DSIR_TARGET_MOD != 0))
     target = (docs.filter(F.col("doc_id") % DSIR_TARGET_MOD == 0)
               .select("doc_id", "text"))
     g = (_dsir_gram_buckets(target, F.lit(True))
          .unionByName(_dsir_gram_buckets(surv, F.lit(False))))
-    weights = (surv.select(F.col("doc_id").cast("long"))
-               .join(_dsir_rollup(g), "doc_id", "left")
-               .select("doc_id",
-                       F.coalesce(F.col("n_grams"), F.lit(0)).cast("long")
-                       .alias("n_grams"),
-                       F.coalesce(F.col("dsir_logw_x1e6"), F.lit(0))
-                       .cast("long").alias("dsir_logw_x1e6")))
+    weights = _dsir_weights(surv, g)
     order = [F.desc("dsir_logw_x1e6"), F.asc("doc_id")]
     top = weights.orderBy(*order).limit(top_n)
     return (top.withColumn(
@@ -1765,10 +1749,16 @@ def corpus_dsir_weights(spark, sf_dir, n_buckets: int = DSIR_BUCKETS):
     docs = _docs(spark, sf_dir)
     g = _dsir_gram_buckets(
         docs, F.col("doc_id") % DSIR_TARGET_MOD == 0, n_buckets)
-    rolled = _dsir_rollup(g, n_buckets)
-    base = docs.filter(F.col("doc_id") % DSIR_TARGET_MOD != 0).select(
-        F.col("doc_id").cast("long"))
-    return (base.join(rolled, "doc_id", "left")
+    return _dsir_weights(
+        docs.filter(F.col("doc_id") % DSIR_TARGET_MOD != 0), g, n_buckets)
+
+
+def _dsir_weights(raw, g, n_buckets: int = DSIR_BUCKETS):
+    """(doc_id, n_grams, dsir_logw_x1e6) for every doc of `raw`: the
+    `_dsir_rollup` sums of gram stream `g`, left-joined so a doc with
+    no grams reads 0."""
+    return (raw.select(F.col("doc_id").cast("long"))
+            .join(_dsir_rollup(g, n_buckets), "doc_id", "left")
             .select("doc_id",
                     F.coalesce(F.col("n_grams"), F.lit(0)).cast("long")
                     .alias("n_grams"),
@@ -2075,15 +2065,7 @@ def corpus_pack_sequences(spark, sf_dir):
     pack. The DuckDB twin restates the greedy fold as a recursive CTE
     stepping row_number within each bucket, so pack assignments are
     certified value-exact."""
-    docs = _docs(spark, sf_dir)
-    text = F.col("text")
-    n_tokens = (F.when(F.length(F.trim(text)) == 0, F.lit(0))
-                .otherwise(F.size(F.split(F.trim(text), r"\s+")))
-                .cast("long"))
-    toks = docs.select(
-        "doc_id", n_tokens.alias("n_tokens"),
-        (F.col("doc_id") % PACK_BUCKETS).alias("bucket"))
-    return _pack_by_bucket(toks)
+    return _pack(_docs(spark, sf_dir))
 
 
 def _pack_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2101,10 +2083,41 @@ def _pack_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.assign(pack_seq=seq)
 
 
-def _pack_by_bucket(toks: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, bucket) → + pack_seq via one grouped-pandas pass."""
+def _pack(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, n_tokens, bucket, pack_seq): whitespace
+    token counts, sharded by doc_id % PACK_BUCKETS, packed by one
+    grouped-pandas pass."""
+    text = F.col("text")
+    n_tokens = (F.when(F.length(F.trim(text)) == 0, F.lit(0))
+                .otherwise(F.size(F.split(F.trim(text), r"\s+")))
+                .cast("long"))
+    toks = docs.select(
+        "doc_id", n_tokens.alias("n_tokens"),
+        (F.col("doc_id") % PACK_BUCKETS).alias("bucket"))
     return toks.groupBy("bucket").applyInPandas(
         _pack_pandas, "doc_id long, n_tokens long, bucket long, pack_seq long")
+
+
+def _exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup: keep the smallest doc_id per md5(text) — one shuffle
+    on the content hash."""
+    w = Window.partitionBy(F.md5("text")).orderBy(F.asc("doc_id"))
+    return (docs.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1).drop("rn"))
+
+
+def _bench_clean(docs: DataFrame, corp: DataFrame) -> DataFrame:
+    """The docs of `corp` outside the benchmark slice (doc_id % 47 == 0
+    of `docs`) that share no word n-gram with it: a broadcast
+    bench-gram index, one distinct on doc_id, one left-anti join."""
+    grams = dedup.shingle_array()
+    bench = (docs.filter(F.col("doc_id") % 47 == 0)
+             .select(F.explode(grams).alias("gram")).distinct())
+    corp = corp.filter(F.col("doc_id") % 47 != 0)
+    hit = (corp.select("doc_id", F.explode(grams).alias("gram"))
+           .join(F.broadcast(bench), "gram")
+           .select("doc_id").distinct())
+    return corp.join(hit, "doc_id", "left_anti")
 
 
 def corpus_curation_pipeline(spark, sf_dir):
@@ -2130,8 +2143,6 @@ def corpus_curation_pipeline(spark, sf_dir):
     the near-dup stage is the banded equi-join + an anti-join on doc_id.
     Output: (doc_id, score_x1e6, lang) of the surviving documents.
     """
-    from pyspark.sql import Window
-
     docs = _docs(spark, sf_dir)
     scored = docs.select(
         "doc_id", "text",
@@ -2140,9 +2151,7 @@ def corpus_curation_pipeline(spark, sf_dir):
         textfn.lang_col(F.col("text")).alias("lang"))
     kept = scored.filter((F.col("score_x1e6") >= CURATION_MIN_SCORE_X1E6)
                          & (F.col("lang") == "en"))
-    w = Window.partitionBy(F.md5("text")).orderBy(F.asc("doc_id"))
-    deduped = (kept.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") == 1).drop("rn"))
+    deduped = _exact_dedup(kept)
     hs = F.transform(
         F.array_distinct(F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\w+"), 0)),
         lambda wd: F.substring(F.md5(wd), 1, 8))
@@ -2176,28 +2185,7 @@ def corpus_pipeline_v2(spark, sf_dir):
     end-to-end."""
     docs = _docs(spark, sf_dir)
     gated = docs.filter(_gopher_metrics(F.col("text"))["keep"])
-
-    grams = dedup.shingle_array()
-    bench = (docs.filter(F.col("doc_id") % 47 == 0)
-             .select(F.explode(grams).alias("gram")).distinct())
-    corp = gated.filter(F.col("doc_id") % 47 != 0)
-    contaminated = (corp.select("doc_id", F.explode(grams).alias("gram"))
-                    .join(F.broadcast(bench), "gram")
-                    .select("doc_id").distinct())
-    clean = corp.join(contaminated, "doc_id", "left_anti")
-
-    w = Window.partitionBy(F.md5("text")).orderBy(F.asc("doc_id"))
-    deduped = (clean.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") == 1).drop("rn"))
-
-    text = F.col("text")
-    n_tokens = (F.when(F.length(F.trim(text)) == 0, F.lit(0))
-                .otherwise(F.size(F.split(F.trim(text), r"\s+")))
-                .cast("long"))
-    toks = deduped.select(
-        "doc_id", n_tokens.alias("n_tokens"),
-        (F.col("doc_id") % PACK_BUCKETS).alias("bucket"))
-    return _pack_by_bucket(toks)
+    return _pack(_exact_dedup(_bench_clean(docs, gated)))
 
 
 CHUNK_RETRIEVAL_QUERY = "spark data engine quality filter"
@@ -2461,6 +2449,14 @@ def _bp_kept_lines(lines, bp_set):
         bp_set, F.trim(F.lower(line))))
 
 
+def _with_bp_set(docs, bp_lines):
+    """`docs` plus the array column `bp`: the sorted `line` set of
+    `bp_lines`, aggregated to ONE row and broadcast (a map-side cross
+    join, never a per-line anti-join shuffle of the corpus)."""
+    bp = bp_lines.agg(F.array_sort(F.collect_set("line")).alias("bp"))
+    return docs.crossJoin(F.broadcast(bp))
+
+
 def corpus_boilerplate_lines(spark, sf_dir):
     """Corpus-statistical boilerplate detection (CCNet, Wenzek et al.
     2020 — dedup-by-frequent-line): normalized lines shared by many
@@ -2479,12 +2475,10 @@ def doc_strip_boilerplate(spark, sf_dir):
     the detection pass; never a per-line anti-join shuffle of the full
     corpus. Output per doc: line/char in-out accounting + cleaned text."""
     docs = tracked_cache(_bp_seeded_docs(_docs(spark, sf_dir)))
-    bp = _bp_frequent_lines(docs).agg(
-        F.array_sort(F.collect_set("line")).alias("bp"))
     lines = F.split(F.col("text"), "\n", -1)
     kept = _bp_kept_lines(lines, F.col("bp"))
     clean = F.concat_ws("\n", kept)
-    return docs.crossJoin(F.broadcast(bp)).select(
+    return _with_bp_set(docs, _bp_frequent_lines(docs)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(lines).cast("long").alias("n_lines"),
         F.size(kept).cast("long").alias("n_kept_lines"),
@@ -2744,7 +2738,15 @@ def corpus_sample_weighted(spark, sf_dir, k: int = 100):
     on the 1e6 grid (division-first ln — the DSIR rounding convention)
     so both engines agree bit-for-bit. Output:
     (doc_id, n_tokens, key_x1e6)."""
-    docs = _docs(spark, sf_dir)
+    return (_docs(spark, sf_dir)
+            .select(F.col("doc_id").cast("long").alias("doc_id"), *_aes_cols())
+            .orderBy(F.desc("key_x1e6"), F.asc("doc_id")).limit(k))
+
+
+def _aes_cols():
+    """The A-ES sample columns of a (doc_id, text) row: n_tokens = its
+    word count (at least 1) and key_x1e6 = floor(1e6·ln(u)/n_tokens),
+    u its md5 coin in (0, 1]."""
     u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                  16, 10).cast("long") % 1000000) + 1) / 1000000.0
     w = F.greatest(
@@ -2752,9 +2754,7 @@ def corpus_sample_weighted(spark, sf_dir, k: int = 100):
         F.size(F.regexp_extract_all(F.lower(F.col("text")),
                                     F.lit(r"\w+"), 0)).cast("long"))
     key = F.floor(F.lit(1000000.0) * F.log(u) / w).cast("long")
-    return (docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                        w.alias("n_tokens"), key.alias("key_x1e6"))
-            .orderBy(F.desc("key_x1e6"), F.asc("doc_id")).limit(k))
+    return w.alias("n_tokens"), key.alias("key_x1e6")
 
 
 def corpus_token_entropy(spark, sf_dir):
@@ -2830,22 +2830,13 @@ def corpus_pipeline_v4(spark, sf_dir, k: int = 50):
     then sample proportionally to surviving content. Output:
     (doc_id, n_tokens, key_x1e6)."""
     docs = tracked_cache(_bp_seeded_docs(_docs(spark, sf_dir)))
-    bp = _bp_frequent_lines(docs).agg(
-        F.array_sort(F.collect_set("line")).alias("bp"))
     lines = F.split(F.col("text"), "\n", -1)
     kept = _bp_kept_lines(lines, F.col("bp"))
-    cleaned = docs.crossJoin(F.broadcast(bp)).select(
+    cleaned = _with_bp_set(docs, _bp_frequent_lines(docs)).select(
         "doc_id", F.concat_ws("\n", kept).alias("text"))
     gated = cleaned.filter(_gopher_metrics(F.col("text"))["keep"])
-    u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                 16, 10).cast("long") % 1000000) + 1) / 1000000.0
-    w = F.greatest(
-        F.lit(1).cast("long"),
-        F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                    F.lit(r"\w+"), 0)).cast("long"))
-    key = F.floor(F.lit(1000000.0) * F.log(u) / w).cast("long")
     return (gated.select(F.col("doc_id").cast("long").alias("doc_id"),
-                         w.alias("n_tokens"), key.alias("key_x1e6"))
+                         *_aes_cols())
             .orderBy(F.desc("key_x1e6"), F.asc("doc_id")).limit(k))
 
 
@@ -3082,17 +3073,8 @@ def corpus_sample_weighted_stratified(spark, sf_dir, k: int = 20):
     row_number window over the ONE source-key shuffle — sort-based
     streaming per stratum, never a global sort, never a driver
     collect. Output: (source, doc_id, n_tokens, key_x1e6, rk)."""
-    docs = _docs(spark, sf_dir)
-    u = ((F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                 16, 10).cast("long") % 1000000) + 1) / 1000000.0
-    w = F.greatest(
-        F.lit(1).cast("long"),
-        F.size(F.regexp_extract_all(F.lower(F.col("text")),
-                                    F.lit(r"\w+"), 0)).cast("long"))
-    key = F.floor(F.lit(1000000.0) * F.log(u) / w).cast("long")
-    base = docs.select("source",
-                       F.col("doc_id").cast("long").alias("doc_id"),
-                       w.alias("n_tokens"), key.alias("key_x1e6"))
+    base = _docs(spark, sf_dir).select(
+        "source", F.col("doc_id").cast("long").alias("doc_id"), *_aes_cols())
     rk = F.row_number().over(
         Window.partitionBy("source")
         .orderBy(F.desc("key_x1e6"), F.asc("doc_id")))
@@ -3387,14 +3369,7 @@ def corpus_decontaminate_anti(spark, sf_dir):
     pass is ONE left-anti shuffle join of the doc frame against that
     small id set. Output: (doc_id, n_chars)."""
     docs = _docs(spark, sf_dir)
-    grams = dedup.shingle_array()
-    bench = (docs.filter(F.col("doc_id") % 47 == 0)
-             .select(F.explode(grams).alias("gram")).distinct())
-    corp = docs.filter(F.col("doc_id") % 47 != 0)
-    hit = (corp.select("doc_id", F.explode(grams).alias("gram"))
-           .join(F.broadcast(bench), "gram")
-           .select("doc_id").distinct())
-    return (corp.join(hit, "doc_id", "left_anti")
+    return (_bench_clean(docs, docs)
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.length("text").cast("long").alias("n_chars")))
 

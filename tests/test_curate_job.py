@@ -6,6 +6,8 @@ set as the original run."""
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,3 +77,76 @@ def test_curate_resume_refuses_changed_buckets(
     with pytest.raises(ValueError, match="resume mismatch"):
         run_curate_job(spark, seeded_input, out, n_buckets=N_BUCKETS * 2,
                        wave_size=WAVE)
+    # the same documents under another path are another input
+    moved = str(tmp_path_factory.mktemp("moved")) + "/documents.parquet"
+    shutil.copytree(seeded_input, moved)
+    with pytest.raises(ValueError, match="resume mismatch"):
+        run_curate_job(spark, moved, out, n_buckets=N_BUCKETS,
+                       wave_size=WAVE)
+
+
+def test_curate_matches_independent_oracle(spark, tmp_path, seeded_input):
+    """Curated rows and every manifest stat against an expectation built
+    without the job's code: a pure-Python frequent-line strip, the DuckDB
+    Gopher twin for the keep decision, per-part sums in Python. Bucket
+    0's docs are cut to three words, so that part keeps nothing and must
+    read 0, not NULL."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from ocr_image_to_text_spark.queries import BP_FRACTION_DEN, BP_MIN_DOCS
+
+    n = 4
+    part = F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
+                  F.lit(n)).cast("int")
+    short = F.concat_ws(" ", F.slice(F.split("text", " "), 1, 3))
+    inp = str(tmp_path / "documents.parquet")
+    (spark.read.parquet(seeded_input)
+     .withColumn("text", F.when(part == 0, short).otherwise(F.col("text")))
+     .write.parquet(inp))
+    rows = [(r.doc_id, r.text, r.p) for r in
+            spark.read.parquet(inp).select("doc_id", "text",
+                                           part.alias("p")).collect()]
+
+    # CCNet strip: a line is boilerplate when its space-trimmed lower-case
+    # form occurs in at least max(BP_MIN_DOCS, n_docs // BP_FRACTION_DEN)
+    # documents
+    def norm(line):
+        return line.strip(" ").lower()
+
+    doc_freq = Counter(key for _, t, _ in rows
+                       for key in {norm(x) for x in t.split("\n")} - {""})
+    thr = max(BP_MIN_DOCS, len(rows) // BP_FRACTION_DEN)
+    bp = {key for key, c in doc_freq.items() if c >= thr}
+    stripped = {d: "\n".join(x for x in t.split("\n") if norm(x) not in bp)
+                for d, t, _ in rows}
+    assert bp and any(len(stripped[d]) < len(t) for d, t, _ in rows)
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        {"doc_id": list(stripped), "text": list(stripped.values())}))
+    keep = dict(con.execute(
+        "SELECT doc_id, keep FROM ("
+        f"{entrymod.oracle_sql()['doc_quality_gopher']})").fetchall())
+
+    want_stats = {p: [0, 0, 0, 0] for p in range(n)}
+    for d, t, p in rows:
+        s = want_stats[p]
+        s[0] += 1
+        s[1] += keep[d]
+        s[2] += len(t)
+        s[3] += len(stripped[d]) if keep[d] else 0
+    assert want_stats[0][0] > 0 and want_stats[0][1] == 0
+    assert 0 < sum(s[1] for s in want_stats.values()) < len(rows)
+
+    out = str(tmp_path / "out")
+    run_curate_job(spark, inp, out, n_buckets=n, wave_size=2)
+    got = sorted(tuple(r) for r in spark.read.parquet(
+        os.path.join(out, "curated"))
+        .select("doc_id", "text", "chars_in", "chars_out").collect())
+    assert got == sorted((d, stripped[d], len(t), len(stripped[d]))
+                         for d, t, _ in rows if keep[d])
+    m = spark.read.parquet(os.path.join(out, "_manifest")).collect()
+    assert {r.part_id: [r.n_docs, r.n_kept, r.chars_in, r.chars_out]
+            for r in m} == want_stats

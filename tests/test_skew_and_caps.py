@@ -90,7 +90,10 @@ def test_oversized_payload_cap_logged_not_silent(spark, tmp_path):
 
 def test_resume_rejects_changed_settings(spark, tmp_path):
     """Resuming into an existing --out with a different extras/variant
-    would mix schemas in the committed stage/rollup dirs — must refuse."""
+    would mix schemas in the committed stage/rollup dirs, and a different
+    input or payload cap would mix rows of two runs — must refuse."""
+    import shutil
+
     import pytest
 
     tpath = ensure_transcripts("t1")
@@ -104,6 +107,13 @@ def test_resume_rejects_changed_settings(spark, tmp_path):
     with pytest.raises(ValueError, match="resume mismatch"):
         run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
                         variant="v1")
+    with pytest.raises(ValueError, match="resume mismatch"):
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
+                        max_payload_chars=800)
+    moved = str(tmp_path / "moved.parquet")
+    shutil.copy(tpath, moved)
+    with pytest.raises(ValueError, match="resume mismatch"):
+        run_extract_job(spark, moved, out, n_buckets=4, wave_size=2)
     # unchanged settings resume fine
     s = run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
     assert s["resumed_parts"] == 2

@@ -272,6 +272,9 @@ def drifted(front_n: int = BUDGET) -> tuple[list[str], list[str]]:
 def cmd_check() -> int:
     violations, covered = drifted()
     print(f"drifted-in-front (OK, awaiting certification): {covered}")
+    # drifted queries a refactor may still add before the prefix is full
+    print(f"prefix slots left: {BUDGET - len(covered) - len(violations)}"
+          f" of {BUDGET}")
     if violations:
         print(f"VIOLATIONS (drifted, NOT in the certified prefix): {violations}")
         return 1
