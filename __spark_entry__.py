@@ -54,9 +54,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 46 queries whose code drifted
-    # since r5; (B) the 4 oldest remaining certificates, which push the
-    # next 24 just past the prefix.
+    # The current prefix, in order: (A) the 47 queries whose code drifted
+    # since r5; (B) the 3 oldest remaining certificates, which push the
+    # next 25 just past the prefix.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
     return {
@@ -118,14 +118,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_sample_weighted": q.corpus_sample_weighted,
         "corpus_sample_weighted_stratified": q.corpus_sample_weighted_stratified,
         "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
-        # --- (B) the oldest remaining certificates: the four r2 ones ---
+        #     ... plus the BPE encoder (merges applied symbol-wise) ---
+        "corpus_bpe_encode": q.corpus_bpe_encode,
+        # --- (B) the oldest remaining certificates: three of the r2 ones ---
         "events_hourly": q.events_hourly,
         "events_sessions": q.events_sessions,
         "media_image_features": q.media_image_features,
-        "media_audio_features": q.media_audio_features,
         # ---- end of the 50-entry certified prefix ----
-        # --- (B) continued: the r3 certificates displaced by the drifted
-        #     block, in registry order ---
+        # --- (B) continued: the last r2 certificate and the r3 ones
+        #     displaced by the drifted block, in registry order ---
+        "media_audio_features": q.media_audio_features,
         "extract_angle_mode": q.extract_angle_mode,
         "doc_token_counts": q.doc_token_counts,
         "doc_fingerprints": q.doc_fingerprints,
@@ -151,7 +153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conversation_turn_latency": q.conversation_turn_latency,
         "doc_keyword_topk_x5": q.doc_keyword_topk_x5,
         # --- r5 (A): 12 added or code-changed in r5 (CORRECTNESS_r05);
-        #     the 3 that drifted since lead the prefix ---
+        #     the 4 that drifted since lead the prefix ---
         "conversation_salted_join": q.conversation_salted_join,
         "dedup_simhash_pairs": q.dedup_simhash_pairs,
         "dedup_simhash_pairs_narrow": q.dedup_simhash_pairs_narrow,
@@ -159,7 +161,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_disjunctive_revenue": q.tpch_disjunctive_revenue,
         "tpch_waiting_suppliers": q.tpch_waiting_suppliers,
         "tpch_part_supplier_counts": q.tpch_part_supplier_counts,
-        "corpus_bpe_encode": q.corpus_bpe_encode,
         "tpch_cheapest_supplier": q.tpch_cheapest_supplier,
         # --- r5 (B): 31 judge-verified in VERDICT r4 (CORRECTNESS_r05);
         #     dedup_clusters, semdedup_prune and 5 curation queries drifted
@@ -258,10 +259,173 @@ jac AS (SELECT da, db, cast(floor(1000.0 * c / (x.n + y.n - c)) as bigint) jacc_
         FROM cm JOIN sz x ON cm.da = x.doc_id JOIN sz y ON cm.db = y.doc_id)
 """
 
-_EMB_NORM = """
-base AS (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings),
-n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) nrm FROM base)
+_EMB_B = "b AS (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings)"
+
+_EMB_NORM = f"""
+{_EMB_B},
+n AS (SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) nrm FROM b)
 """
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """Cosine of rows `a` and `b` of CTE n, rounded to 9 decimals on both
+    sides so float-fold order can never flip a rank."""
+    return (f"round(list_sum(list_transform(generate_series(1, len({a}.e)),\n"
+            f"                          i -> {a}.e[i] * {b}.e[i]))"
+            f" / ({a}.nrm * {b}.nrm), 9)")
+
+
+def _cos_topk_sql(j: str = "j") -> str:
+    """Each query's 3 best neighbors of the scan `j` (query_id,
+    neighbor_id, cos_r), neighbor_id tiebreak."""
+    return f"""
+            SELECT cast(query_id as bigint) query_id, cast(rank as bigint) rank,
+                   cast(neighbor_id as bigint) neighbor_id,
+                   cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
+            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                       ORDER BY cos_r DESC, neighbor_id) rank FROM {j})
+            WHERE rank <= 3"""
+
+
+# The exact scan: the first 20 vectors against every other vector.
+_EXACT_SCAN = f"""j AS (SELECT q.vec_id query_id, b.vec_id neighbor_id,
+                    {_cos_sql("b", "q")} cos_r
+                  FROM n b, n q WHERE q.vec_id < 20 AND b.vec_id != q.vec_id)"""
+
+
+def _ivf_sql(src: str, cells: str, tag: str = "", n_probe: int = 4,
+             n_queries: int = 20) -> str:
+    """IVF CTEs over vectors `src` (vec_id, e) and centroids `cells` (cid,
+    ce): ad{tag} the squared L2 to each centroid rounded to 9 decimals,
+    asn{tag} (vec_id, cell, d) each vector's nearest cell, and (n_probe
+    > 0) probe (query_id, cell) the n_probe nearest cells of each of the
+    first n_queries vectors; cid breaks ties."""
+    ctes = f"""ad{tag} AS (SELECT v.vec_id, c.cid,
+                     round(list_sum(list_transform(generate_series(1, len(v.e)),
+                           i -> (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i]))), 9) d
+                   FROM {src} v, {cells} c),
+            asn{tag} AS (SELECT vec_id, cid cell, d FROM ad{tag}
+                      QUALIFY row_number() OVER (PARTITION BY vec_id
+                                                 ORDER BY d, cid) = 1)"""
+    if n_probe:
+        ctes += f""",
+            probe AS (SELECT vec_id query_id, cid cell FROM ad{tag}
+                      WHERE vec_id < {n_queries}
+                      QUALIFY row_number() OVER (PARTITION BY vec_id
+                                                 ORDER BY d, cid) <= {n_probe})"""
+    return ctes
+
+
+def _ivf_scan_sql(j: str = "j") -> str:
+    """CTE `j`: each query against the vectors of its probed cells."""
+    return f"""{j} AS (SELECT p.query_id, b.vec_id neighbor_id,
+                    {_cos_sql("b", "q")} cos_r
+                  FROM probe p JOIN asn a ON a.cell = p.cell
+                  JOIN n b ON b.vec_id = a.vec_id
+                  JOIN n q ON q.vec_id = p.query_id
+                  WHERE b.vec_id != p.query_id)"""
+
+
+# MinHash-LSH over the _SHINGLES sets: 8 md5-min signatures, 4 bands of 2,
+# and the candidate pairs (da < db) that share a band key.
+_MINHASH_CANDS = """sig AS (SELECT doc_id,
+          {sigs}
+                FROM shl),
+            bands AS (
+  {bands}),
+            cand AS (SELECT DISTINCT x.doc_id da, y.doc_id db
+                     FROM bands x JOIN bands y
+                     ON x.band = y.band AND x.band_key = y.band_key
+                        AND x.doc_id < y.doc_id)""".format(
+    sigs=",\n          ".join(
+        f"list_aggregate(list_transform(shs, s -> md5('{i}:' || s)), 'min') mh{i}"
+        for i in range(8)),
+    bands="\n  UNION ALL ".join(
+        f"SELECT doc_id, {b} band, mh{2*b} || '|' || mh{2*b+1} band_key FROM sig"
+        for b in range(4)))
+
+# Connected components of the undirected pair graph p (da, db): each
+# node's cluster_id is the least node it reaches (needs WITH RECURSIVE).
+_COMPONENTS = """e AS (SELECT da src, db dst FROM p
+                  UNION ALL SELECT db, da FROM p),
+            reach AS (
+                SELECT src AS doc_id, src AS lbl FROM e
+                UNION
+                SELECT e.dst, reach.lbl FROM reach JOIN e ON e.src = reach.doc_id
+            ),
+            asg AS (SELECT doc_id, min(lbl) cluster_id FROM reach GROUP BY doc_id)"""
+
+
+def _simhash_words_sql(bits: int = 32, src: str = "documents") -> str:
+    """CTE t (doc_id, hs): each distinct lower-cased word of `src` hashed
+    to its first bits/4 md5 hex chars, the SimHash input."""
+    return f"""t AS (SELECT doc_id,
+                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
+                               w -> substr(md5(w), 1, {bits // 4})) hs
+                FROM {src})"""
+
+
+def _simhash_sig_sql(bits: int = 32) -> str:
+    """Each doc's SimHash over CTE t."""
+    from ocr_image_to_text_spark.dedup import simhash_expr_sql
+
+    return f"SELECT doc_id, {simhash_expr_sql('duckdb', bits=bits)} simhash FROM t"
+
+
+def _simhash_pairs_sql(bits: int = 32, src: str = "documents",
+                       k: int = 3) -> str:
+    """Doc pairs (doc_a < doc_b) whose SimHashes differ in at most k bits."""
+    return f"""
+            WITH {_simhash_words_sql(bits, src)},
+            s AS ({_simhash_sig_sql(bits)})
+            SELECT cast(a.doc_id as bigint) doc_a, cast(b.doc_id as bigint) doc_b,
+                   cast(bit_count(xor(a.simhash, b.simhash)) as bigint) hamming
+            FROM s a, s b
+            WHERE a.doc_id < b.doc_id
+              AND bit_count(xor(a.simhash, b.simhash)) <= {k}"""
+
+
+
+_TOKEN_TF = r"""t AS (SELECT doc_id,
+                              unnest(regexp_extract_all(lower(text), '\w+'))
+                                  token
+                       FROM documents),
+            tf AS (SELECT cast(doc_id as bigint) doc_id, token,
+                          cast(count(*) as bigint) tf
+                   FROM t GROUP BY doc_id, token)"""
+
+# The X7 entity patterns and the seeded corpus that makes each of them
+# match at least once per doc.
+_RX_EMAIL = r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b"
+_RX_PHONE = r"\b(?:\+\d{1,3}[- ]?)?\(?\d{3}\)?[- ]?\d{3}[- ]?\d{4}\b"
+_RX_URL = r"https?://(?:[-\w.]|(?:%[\da-fA-F]{2}))+"
+_ENTITY_RX = (
+    ("date", r"\b\d{1,2}[/-]\d{1,2}[/-]\d{2,4}\b"),
+    ("date", r"\b\d{4}[/-]\d{1,2}[/-]\d{1,2}\b"),
+    ("date", r"(?i)\b(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)"
+             r"[a-z]* \d{1,2},? \d{4}\b"),
+    ("email", _RX_EMAIL), ("phone", _RX_PHONE), ("url", _RX_URL))
+_ENTITY_SEEDED = r"""
+            WITH seeded AS (
+              SELECT doc_id,
+                     text || ' Contact user' || doc_id
+                          || '@example.com on 12/05/2024 or 2024-05-12 '
+                          || 'or Jan 5, 2024; call +1 (555) 123-4567; '
+                          || 'see https://d' || doc_id || '.example.com' AS text
+              FROM documents)"""
+
+
+def _entities_sql(src: str) -> str:
+    """One (doc_id, entity_type, entity) row per X7 pattern match in
+    `src`."""
+    (t0, rx0), *rest = _ENTITY_RX
+    return f"""
+            SELECT doc_id, '{t0}' entity_type,
+                   unnest(regexp_extract_all(text, '{rx0}')) entity FROM {src}""" + "".join(
+        f"""
+            UNION ALL SELECT doc_id, '{t}',
+                   unnest(regexp_extract_all(text, '{rx}')) FROM {src}"""
+        for t, rx in rest)
 
 
 def _lsh_sig_sql(dim: int = 64, n_planes: int = 8) -> str:
@@ -338,8 +502,9 @@ def _bloom_decontaminate_sql(m: int = 65536, k: int = 3) -> str:
 def _bpe_encode_sql(n_merges: int = 3) -> str:
     """DuckDB twin of corpus_bpe_encode: the same iterative argmax-merge
     chain generated as stacked CTEs (one p{k}/s{k} pair per merge), then
-    the per-doc encode join. replace() is left-to-right non-overlapping
-    in both engines (the proven BPE application rule)."""
+    the per-doc encode join. A merge is the same symbol-wise replace()
+    over space-padded symbols (left-to-right non-overlapping in both
+    engines)."""
     steps = [r"""words AS (
               SELECT doc_id,
                      unnest(regexp_extract_all(lower(text), '\w+')) w
@@ -355,9 +520,11 @@ def _bpe_encode_sql(n_merges: int = 3) -> str:
               FROM (SELECT string_split(sw, ' ') sy, n FROM {prev}) t,
                    unnest(generate_series(1, len(sy) - 1)) u(i)
               GROUP BY pair ORDER BY sum(n) DESC, pair ASC LIMIT 1),
-            s{k} AS (SELECT s.w,
-                            replace(s.sw, p.pair,
-                                    replace(p.pair, ' ', '')) sw, s.n
+            s{k} AS (SELECT s.w, replace(trim(replace(
+                              ' ' || replace(s.sw, ' ', '  ') || ' ',
+                              ' ' || replace(p.pair, ' ', '  ') || ' ',
+                              ' ' || replace(p.pair, ' ', '') || ' ')),
+                            '  ', ' ') sw, s.n
                      FROM {prev} s, p{k} p)""")
         prev = f"s{k}"
     return ("WITH " + ",\n            ".join(steps) + f""",
@@ -442,10 +609,43 @@ def _vocab_hll_sql(m: int = 256) -> str:
             FROM s, e"""
 
 
+# Pages a doc into 8-word '.'-terminated lines (the C4 and boilerplate
+# seeding).
+_PAGED = (r"regexp_replace(text, '((?:\w+\s+){7}\w+)\s+', "
+          r"'\1.' || chr(10), 'g')")
+
+# Part of doc_c4_page_filter's certified oracle text.
+_C4_NOTE = """
+                     -- DuckDB: array_to_string([]) is NULL, Spark
+                     -- concat_ws gives '' — coalesce to match"""
+
+
+def _c4_ctes(src: str, note: str = "") -> str:
+    """CTEs applying the C4 §2.2 line rules (terminal punctuation, ≥5
+    words, no "javascript") to `src`, ending in CTE c (doc_id, n_lines,
+    n_kept_lines, clean_text, has_lorem, has_brace)."""
+    return rf"""b AS (
+              SELECT doc_id, string_split(text, chr(10)) l,
+                     contains(lower(text), 'lorem ipsum') has_lorem,
+                     contains(text, '{{') has_brace
+              FROM {src}),
+            k AS (
+              SELECT doc_id, len(l) n_lines,
+                     list_filter(l, x ->
+                       regexp_matches(rtrim(x), '[.!?"]$')
+                       AND len(regexp_split_to_array(trim(x), '\s+')) >= 5
+                       AND NOT contains(lower(x), 'javascript')) kept,
+                     has_lorem, has_brace
+              FROM b),
+            c AS (
+              SELECT doc_id, n_lines, len(kept) n_kept_lines,{note}
+                     coalesce(array_to_string(kept, chr(10)), '') clean_text,
+                     has_lorem, has_brace
+              FROM k)"""
+
+
 def _c4_seeded_ctes() -> str:
-    """CTE fragment rebuilding the paged + seeded corpus and applying the
-    C4 line rules, ending in CTE `c` (doc_id, n_lines, n_kept_lines,
-    clean_text, has_lorem, has_brace). Seed constants come from
+    """_c4_ctes over the paged + seeded corpus. Seed constants come from
     queries.py so the dialects cannot drift. Shared by the seeded C4
     oracle and the corpus_pipeline_v3 twin."""
     from ocr_image_to_text_spark.queries import (
@@ -458,29 +658,26 @@ def _c4_seeded_ctes() -> str:
         f"ELSE '' END || "
         f"CASE WHEN doc_id % 13 = 0 THEN chr(10) || '{C4_SEED_BRACE}' "
         f"ELSE '' END")
-    paged = (r"regexp_replace(text, '((?:\w+\s+){7}\w+)\s+', "
-             r"'\1.' || chr(10), 'g')")
-    return rf"""seeded AS (
-              SELECT doc_id, {paged} || {seeds} AS text
+    return f"""seeded AS (
+              SELECT doc_id, {_PAGED} || {seeds} AS text
               FROM documents),
-            b AS (
-              SELECT doc_id, string_split(text, chr(10)) l,
-                     contains(lower(text), 'lorem ipsum') has_lorem,
-                     contains(text, '{{') has_brace
-              FROM seeded),
-            k AS (
-              SELECT doc_id, len(l) n_lines,
-                     list_filter(l, x ->
-                       regexp_matches(rtrim(x), '[.!?"]$')
-                       AND len(regexp_split_to_array(trim(x), '\s+')) >= 5
-                       AND NOT contains(lower(x), 'javascript')) kept,
-                     has_lorem, has_brace
-              FROM b),
-            c AS (
-              SELECT doc_id, n_lines, len(kept) n_kept_lines,
-                     coalesce(array_to_string(kept, chr(10)), '') clean_text,
-                     has_lorem, has_brace
-              FROM k)"""
+            {_c4_ctes("seeded")}"""
+
+
+def _c4_page_sql(ctes: str) -> str:
+    """The C4 page filter over `ctes` (ending in CTE c): sentence count
+    and the page gate (≥3 sentences, no lorem ipsum, no curly brace)."""
+    return f"""
+            WITH {ctes}
+            SELECT cast(doc_id as bigint) doc_id,
+                   cast(n_lines as bigint) n_lines,
+                   cast(n_kept_lines as bigint) n_kept_lines,
+                   cast(len(regexp_extract_all(clean_text, '[.!?]'))
+                        as bigint) n_sentences,
+                   (len(regexp_extract_all(clean_text, '[.!?]')) >= 3
+                    AND NOT has_lorem AND NOT has_brace) keep_doc,
+                   clean_text
+            FROM c"""
 
 
 def _pq_micro_sqdist_sql(x: str, y: str, dsub: int) -> str:
@@ -492,42 +689,75 @@ def _pq_micro_sqdist_sql(x: str, y: str, dsub: int) -> str:
             f" t -> t * t)) as bigint)")
 
 
-def _pq_ctes(m: int, ksub: int, dim: int) -> list[str]:
-    """Shared PQ CTEs: base, per-subspace slices, seed codebooks, and
-    argmin code frames k{s} (row_number with cid tiebreak — exact,
-    no float ties)."""
+def _pq_ctes(m: int, ksub: int, dim: int, src: str = "b", col: str = "e",
+             pre: str = "", seed_base: int = 0) -> list[str]:
+    """PQ code frames over `src` (vec_id, `col`): per-subspace slices
+    {pre}sb{s}, codebooks {pre}c{s} seeded by vectors seed_base ..
+    seed_base + ksub - 1, and argmin code frames {pre}k{s} (cid
+    tiebreak — exact, no float ties)."""
     dsub = dim // m
-    ctes = ["b AS (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings)"]
+    ctes = []
     for s in range(m):
         lo = s * dsub + 1
-        ctes.append(
-            f"sb{s} AS (SELECT vec_id, list_slice(e, {lo}, {lo + dsub - 1})"
-            f" se FROM b)")
-        ctes.append(
-            f"c{s} AS (SELECT vec_id cid, se ce FROM sb{s}"
-            f" WHERE vec_id < {ksub})")
-        ctes.append(f"""ad{s} AS (
+        sb, c, ad = f"{pre}sb{s}", f"{pre}c{s}", f"{pre}ad{s}"
+        ctes.append(f"{sb} AS (SELECT vec_id, list_slice({col}, {lo},"
+                    f" {lo + dsub - 1}) se FROM {src})")
+        ctes.append(f"{c} AS (SELECT vec_id - {seed_base} cid, se ce"
+                    f" FROM {sb} WHERE vec_id >= {seed_base}"
+                    f" AND vec_id < {seed_base + ksub})")
+        ctes.append(f"""{ad} AS (
               SELECT v.vec_id, c.cid,
                      {_pq_micro_sqdist_sql("v.se", "c.ce", dsub)} d
-              FROM sb{s} v, c{s} c)""")
-        ctes.append(f"""k{s} AS (
-              SELECT vec_id, cid, d FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY vec_id ORDER BY d, cid) rn FROM ad{s})
-              WHERE rn = 1)""")
+              FROM {sb} v, {c} c)""")
+        ctes.append(f"""{pre}k{s} AS (
+              SELECT vec_id, cid, d FROM {ad} QUALIFY row_number() OVER (
+                  PARTITION BY vec_id ORDER BY d, cid) = 1)""")
     return ctes
+
+
+def _pq_lut_ctes(m: int, dim: int, n_queries: int) -> list[str]:
+    """Per-subspace slices q{s} of the first n_queries vectors and their
+    distance tables lut{s} (query_id, cid, d) to the codebooks c{s}."""
+    dsub = dim // m
+    ctes = []
+    for s in range(m):
+        ctes.append(f"q{s} AS (SELECT vec_id query_id, se qe FROM sb{s}"
+                    f" WHERE vec_id < {n_queries})")
+        ctes.append(f"""lut{s} AS (
+              SELECT q.query_id, c.cid,
+                     {_pq_micro_sqdist_sql("q.qe", "c.ce", dsub)} d
+              FROM q{s} q, c{s} c)""")
+    return ctes
+
+
+def _adc_topk_sql(ctes: list[str], k: int) -> str:
+    """The query over `ctes`: each query's k nearest neighbors by the
+    integer ADC distance of CTE scan (vec_id, query_id, adc), vec_id
+    tiebreak."""
+    cte_block = ",\n            ".join(ctes)
+    return f"""
+            WITH {cte_block}
+            SELECT cast(query_id as bigint) query_id,
+                   cast(rank as bigint) rank,
+                   cast(neighbor_id as bigint) neighbor_id,
+                   cast(adc_microsq as bigint) adc_microsq
+            FROM (
+              SELECT query_id, vec_id neighbor_id, adc adc_microsq,
+                     row_number() OVER (PARTITION BY query_id
+                         ORDER BY adc, vec_id) rank
+              FROM scan WHERE vec_id != query_id)
+            WHERE rank <= {k}"""
 
 
 def _pq_sql(m: int = 4, ksub: int = 16, dim: int = 64) -> str:
     """DuckDB twin of emb_pq_encode: per-subspace seed codebooks,
     integer micro-unit squared-L2 argmin, m-way vec_id re-join."""
-    ctes = _pq_ctes(m, ksub, dim)
+    cte_block = ",\n            ".join([_EMB_B] + _pq_ctes(m, ksub, dim))
     codes = ",\n                   ".join(
         f"cast(k{s}.cid as bigint) code{s}" for s in range(m))
     err = " + ".join(f"k{s}.d" for s in range(m))
     joins = "\n            ".join(
         f"JOIN k{s} USING (vec_id)" for s in range(1, m))
-    cte_block = ",\n            ".join(ctes)
     return f"""
             WITH {cte_block}
             SELECT cast(vec_id as bigint) vec_id,
@@ -542,16 +772,6 @@ def _pq_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
     """DuckDB twin of ann_pq_adc_topk: query→codeword LUT per subspace,
     code-table joins, integer ADC sum, row_number top-k (neighbor
     tiebreak)."""
-    dsub = dim // m
-    ctes = _pq_ctes(m, ksub, dim)
-    for s in range(m):
-        ctes.append(
-            f"q{s} AS (SELECT vec_id query_id, se qe FROM sb{s}"
-            f" WHERE vec_id < {n_queries})")
-        ctes.append(f"""lut{s} AS (
-              SELECT q.query_id, c.cid,
-                     {_pq_micro_sqdist_sql("q.qe", "c.ce", dsub)} d
-              FROM q{s} q, c{s} c)""")
     code_joins = "\n              ".join(
         f"JOIN k{s} USING (vec_id)" for s in range(1, m))
     lut_joins = "\n              ".join(
@@ -559,87 +779,39 @@ def _pq_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
         + ("" if s == 0 else " AND l{0}.query_id = l0.query_id".format(s))
         for s in range(m))
     adc = " + ".join(f"l{s}.d" for s in range(m))
-    ctes.append(f"""scan AS (
+    return _adc_topk_sql(
+        [_EMB_B] + _pq_ctes(m, ksub, dim) + _pq_lut_ctes(m, dim, n_queries)
+        + [f"""scan AS (
               SELECT k0.vec_id, l0.query_id, {adc} adc
               FROM k0
               {code_joins}
-              {lut_joins})""")
-    cte_block = ",\n            ".join(ctes)
-    return f"""
-            WITH {cte_block}
-            SELECT cast(query_id as bigint) query_id,
-                   cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(adc_microsq as bigint) adc_microsq
-            FROM (
-              SELECT query_id, vec_id neighbor_id, adc adc_microsq,
-                     row_number() OVER (PARTITION BY query_id
-                         ORDER BY adc, vec_id) rank
-              FROM scan WHERE vec_id != query_id)
-            WHERE rank <= {k}"""
+              {lut_joins})"""], k)
 
 
 def _ivfpq_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
                    n_cells: int = 16, n_probe: int = 4,
                    n_queries: int = 20, k: int = 3) -> str:
     """DuckDB twin of ann_ivfpq_adc_topk: the _pq_ctes code frames plus
-    the IVF cell-assignment/probe CTEs (round-9 squared-L2, cid
-    tiebreak), joined so the ADC scan sees only probed cells."""
-    dsub = dim // m
-    ctes = _pq_ctes(m, ksub, dim)
-    ctes.append(
-        f"cc AS (SELECT vec_id cid, e ce FROM b WHERE vec_id < {n_cells})")
-    ctes.append("""cad AS (
-              SELECT v.vec_id, c.cid,
-                     round(list_sum(list_transform(
-                       generate_series(1, len(v.e)),
-                       i -> (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i]))), 9) d
-              FROM b v, cc c)""")
-    ctes.append("""asn AS (
-              SELECT vec_id, cid cell FROM
-                (SELECT vec_id, cid, row_number() OVER (
-                     PARTITION BY vec_id ORDER BY d, cid) rn FROM cad)
-              WHERE rn = 1)""")
-    ctes.append(f"""probe AS (
-              SELECT vec_id query_id, cid cell FROM
-                (SELECT vec_id, cid, row_number() OVER (
-                     PARTITION BY vec_id ORDER BY d, cid) rn
-                 FROM cad WHERE vec_id < {n_queries})
-              WHERE rn <= {n_probe})""")
-    for s in range(m):
-        ctes.append(
-            f"q{s} AS (SELECT vec_id query_id, se qe FROM sb{s}"
-            f" WHERE vec_id < {n_queries})")
-        ctes.append(f"""lut{s} AS (
-              SELECT q.query_id, c.cid,
-                     {_pq_micro_sqdist_sql("q.qe", "c.ce", dsub)} d
-              FROM q{s} q, c{s} c)""")
+    the IVF cell-assignment/probe CTEs, joined so the ADC scan sees only
+    probed cells."""
     code_joins = "\n              ".join(
         f"JOIN k{s} USING (vec_id)" for s in range(1, m))
     lut_joins = "\n              ".join(
         f"JOIN lut{s} l{s} ON l{s}.cid = k{s}.cid"
         f" AND l{s}.query_id = p.query_id" for s in range(m))
     adc = " + ".join(f"l{s}.d" for s in range(m))
-    ctes.append(f"""scan AS (
+    return _adc_topk_sql(
+        [_EMB_B] + _pq_ctes(m, ksub, dim)
+        + [f"cc AS (SELECT vec_id cid, e ce FROM b WHERE vec_id < {n_cells})",
+           _ivf_sql("b", "cc", "c", n_probe, n_queries)]
+        + _pq_lut_ctes(m, dim, n_queries)
+        + [f"""scan AS (
               SELECT k0.vec_id, p.query_id, {adc} adc
               FROM k0
               {code_joins}
-              JOIN asn a ON a.vec_id = k0.vec_id
+              JOIN asnc a ON a.vec_id = k0.vec_id
               JOIN probe p ON p.cell = a.cell
-              {lut_joins})""")
-    cte_block = ",\n            ".join(ctes)
-    return f"""
-            WITH {cte_block}
-            SELECT cast(query_id as bigint) query_id,
-                   cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(adc_microsq as bigint) adc_microsq
-            FROM (
-              SELECT query_id, vec_id neighbor_id, adc adc_microsq,
-                     row_number() OVER (PARTITION BY query_id
-                         ORDER BY adc, vec_id) rank
-              FROM scan WHERE vec_id != query_id)
-            WHERE rank <= {k}"""
+              {lut_joins})"""], k)
 
 
 def _ivfpq_residual_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
@@ -651,50 +823,16 @@ def _ivfpq_residual_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
     probed-cell) LUTs. Residual subtraction is one IEEE double op, so
     the micro-unit integer distances match Spark bit-for-bit."""
     dsub = dim // m
-    ctes = ["b AS (SELECT vec_id, embedding::DOUBLE[] e FROM embeddings)"]
-    ctes.append(
-        f"cc AS (SELECT vec_id cid, e ce FROM b WHERE vec_id < {n_cells})")
-    ctes.append("""cad AS (
-              SELECT v.vec_id, c.cid,
-                     round(list_sum(list_transform(
-                       generate_series(1, len(v.e)),
-                       i -> (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i]))), 9) d
-              FROM b v, cc c)""")
-    ctes.append("""asn AS (
-              SELECT vec_id, cid cell FROM
-                (SELECT vec_id, cid, row_number() OVER (
-                     PARTITION BY vec_id ORDER BY d, cid) rn FROM cad)
-              WHERE rn = 1)""")
-    ctes.append(f"""probe AS (
-              SELECT vec_id query_id, cid cell FROM
-                (SELECT vec_id, cid, row_number() OVER (
-                     PARTITION BY vec_id ORDER BY d, cid) rn
-                 FROM cad WHERE vec_id < {n_queries})
-              WHERE rn <= {n_probe})""")
-    ctes.append("""res AS (
+    ctes = [_EMB_B,
+            f"cc AS (SELECT vec_id cid, e ce FROM b WHERE vec_id < {n_cells})",
+            _ivf_sql("b", "cc", "c", n_probe, n_queries),
+            """res AS (
               SELECT b.vec_id, a.cell,
                      list_transform(generate_series(1, len(b.e)),
                                     i -> b.e[i] - c.ce[i]) re
-              FROM b JOIN asn a ON a.vec_id = b.vec_id
-                     JOIN cc c ON c.cid = a.cell)""")
-    for ss in range(m):
-        lo = ss * dsub + 1
-        ctes.append(
-            f"rsb{ss} AS (SELECT vec_id, cell,"
-            f" list_slice(re, {lo}, {lo + dsub - 1}) se FROM res)")
-        ctes.append(
-            f"rc{ss} AS (SELECT vec_id - {seed_base} cid, se ce"
-            f" FROM rsb{ss} WHERE vec_id >= {seed_base}"
-            f" AND vec_id < {seed_base + ksub})")
-        ctes.append(f"""rad{ss} AS (
-              SELECT v.vec_id, c.cid,
-                     {_pq_micro_sqdist_sql("v.se", "c.ce", dsub)} d
-              FROM rsb{ss} v, rc{ss} c)""")
-        ctes.append(f"""rk{ss} AS (
-              SELECT vec_id, cid, d FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY vec_id ORDER BY d, cid) rn FROM rad{ss})
-              WHERE rn = 1)""")
+              FROM b JOIN asnc a ON a.vec_id = b.vec_id
+                     JOIN cc c ON c.cid = a.cell)"""]
+    ctes += _pq_ctes(m, ksub, dim, "res", "re", "r", seed_base)
     ctes.append("""qres AS (
               SELECT p.query_id, p.cell,
                      list_transform(generate_series(1, len(q.e)),
@@ -723,121 +861,129 @@ def _ivfpq_residual_adc_sql(m: int = 4, ksub: int = 16, dim: int = 64,
               JOIN res r ON r.vec_id = rk0.vec_id
               JOIN probe p ON p.cell = r.cell
               {lut_joins})""")
-    cte_block = ",\n            ".join(ctes)
-    return f"""
-            WITH {cte_block}
-            SELECT cast(query_id as bigint) query_id,
-                   cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(adc_microsq as bigint) adc_microsq
-            FROM (
-              SELECT query_id, vec_id neighbor_id, adc adc_microsq,
-                     row_number() OVER (PARTITION BY query_id
-                         ORDER BY adc, vec_id) rank
-              FROM scan WHERE vec_id != query_id)
-            WHERE rank <= {k}"""
+    return _adc_topk_sql(ctes, k)
 
 
-def _bp_ctes() -> str:
-    """Shared DuckDB CTEs for the boilerplate-line pair: the seeded
-    paged corpus (header %3 / footer %4 / cookie %7), the distinct
-    normalized (doc, line) stream, the corpus count, and the gated
-    frequent-line set — restating queries._bp_seeded_docs /
-    _bp_frequent_lines independently."""
-    from ocr_image_to_text_spark.queries import (
-        BP_FRACTION_DEN, BP_MIN_DOCS, BP_SEED_COOKIE, BP_SEED_FOOTER,
-        BP_SEED_HEADER)
-
-    paged = (r"regexp_replace(text, '((?:\w+\s+){7}\w+)\s+', "
-             r"'\1.' || chr(10), 'g')")
-    return rf"""seeded AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0
-                          THEN '{BP_SEED_HEADER}' || chr(10) ELSE '' END
-                     || {paged}
-                     || CASE WHEN doc_id % 4 = 0
-                             THEN chr(10) || '{BP_SEED_FOOTER}' ELSE '' END
-                     || CASE WHEN doc_id % 7 = 0
-                             THEN chr(10) || '{BP_SEED_COOKIE}' ELSE '' END
-                     AS text
-              FROM documents),
-            bpl AS (
-              SELECT DISTINCT doc_id, trim(lower(u.l)) AS line
-              FROM seeded, unnest(string_split(text, chr(10))) AS u(l)
-              WHERE trim(lower(u.l)) <> ''),
-            bpn AS (SELECT cast(count(*) as bigint) n_docs FROM seeded),
-            bp AS (
-              SELECT line, cast(count(*) as bigint) doc_freq
-              FROM bpl, bpn GROUP BY line, n_docs
-              HAVING count(*) >= greatest({BP_MIN_DOCS},
-                  cast(floor(n_docs / {BP_FRACTION_DEN}.0) as bigint)))"""
+# A6 quality score: printable-char share times a length ramp, on the 1e6
+# grid.
+_Q_X1E6 = r"""cast(floor(
+                       (CASE WHEN length(text) = 0 THEN 0.0 ELSE
+                           least(1.0, length(text) / 100.0)
+                           * (length(regexp_replace(text, '[^A-Za-z0-9\s]',
+                                                    '', 'g'))
+                              / cast(length(text) as double))
+                        END) * 1000000 + 0.5) as bigint) q_x1e6"""
 
 
-def _c4_seeded_sql() -> str:
-    """DuckDB twin of doc_c4_page_filter_seeded."""
-    return f"""
-            WITH {_c4_seeded_ctes()}
-            SELECT cast(doc_id as bigint) doc_id,
-                   cast(n_lines as bigint) n_lines,
-                   cast(n_kept_lines as bigint) n_kept_lines,
-                   cast(len(regexp_extract_all(clean_text, '[.!?]'))
-                        as bigint) n_sentences,
-                   (len(regexp_extract_all(clean_text, '[.!?]')) >= 3
-                    AND NOT has_lorem AND NOT has_brace) keep_doc,
-                   clean_text
-            FROM c"""
-
-
-def _pipeline_v3_sql(top_n: int = 100) -> str:
-    """DuckDB twin of corpus_pipeline_v3: C4 clean (shared fragment) →
-    Gopher gate on the cleaned text → exact dedup (min doc_id per md5) →
-    DSIR weights of the survivors vs the raw target slice → top-N."""
+def _gopher_sql(cols: str = "doc_id", src: str = "documents") -> str:
+    """The Gopher/C4 quality gate over `src`: every metric restated and
+    the keep rule; fractions are floor(1000·x) so both engines hash
+    bit-identically. `cols` pass through."""
     return rf"""
-            WITH {_c4_seeded_ctes()},
-            cleaned AS (
-              SELECT doc_id, clean_text AS text FROM c
-              WHERE len(regexp_extract_all(clean_text, '[.!?]')) >= 3
-                AND NOT has_lorem AND NOT has_brace),
-            gm AS (
-              SELECT doc_id, text,
+            WITH m AS (
+              SELECT {cols},
                      cast(CASE WHEN length(trim(text)) = 0 THEN 0
                           ELSE len(regexp_split_to_array(trim(text), '\s+'))
                           END as bigint) n_words,
                      cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
                           as bigint) alpha,
-                     cast(len(string_split(text, chr(10))) as bigint) nl,
+                     cast(len(string_split(text, chr(10))) as bigint) n_lines,
                      cast(len(string_split(text, chr(10)))
                           - len(list_distinct(string_split(text, chr(10))))
-                          as bigint) ndl,
+                          as bigint) n_dup_lines,
                      cast(len(list_filter(
                             ['the','a','and','of','to','is','in','that','it'],
                             w -> list_contains(
                               list_distinct(regexp_extract_all(lower(text), '\w+')),
-                              w))) as bigint) n_stop
-              FROM cleaned),
-            gated AS (
-              SELECT doc_id, text FROM gm
-              WHERE n_words >= 50
-                AND (CASE WHEN n_words = 0 THEN 0
-                     ELSE floor(1000.0 * alpha / n_words) END)
-                    BETWEEN 3000 AND 10000
-                AND floor(1000.0 * ndl / nl) <= 300
-                AND n_stop >= 2),
-            surv AS (
-              SELECT doc_id, text FROM (
-                SELECT doc_id, text,
-                       row_number() OVER (PARTITION BY md5(text)
-                                          ORDER BY doc_id) rn
-                FROM gated)
-              WHERE rn = 1 AND doc_id % 31 <> 0),
-            gw AS (
+                              w))) as bigint) n_stopwords
+              FROM {src}),
+            x AS (
+              SELECT {cols}, n_words,
+                     cast(CASE WHEN n_words = 0 THEN 0
+                          ELSE floor(1000.0 * alpha / n_words)
+                          END as bigint) mean_word_len_x1000,
+                     cast(floor(1000.0 * n_dup_lines / n_lines) as bigint)
+                          dup_line_frac_x1000,
+                     n_stopwords
+              FROM m)
+            SELECT {cols}, n_words, mean_word_len_x1000,
+                   dup_line_frac_x1000, n_stopwords,
+                   (n_words >= 50
+                    AND mean_word_len_x1000 BETWEEN 3000 AND 10000
+                    AND dup_line_frac_x1000 <= 300
+                    AND n_stopwords >= 2) keep
+            FROM x"""
+
+
+def _gated_sql(src: str, cols: str = "doc_id, text") -> str:
+    """The docs of `src` that pass the Gopher gate."""
+    return f"SELECT {cols} FROM ({_gopher_sql('doc_id, text', src)}) WHERE keep"
+
+
+def _exact_dedup_sql(src: str, cols: str = "doc_id, text") -> str:
+    """Exact dedup of `src`: the least doc_id of each md5(text) group."""
+    return (f"SELECT {cols} FROM {src} QUALIFY row_number() OVER (\n"
+            f"                PARTITION BY md5(text) ORDER BY doc_id) = 1")
+
+
+# Benchmark decontamination over the _SHINGLES word 3-grams: the docs
+# with doc_id % 47 = 0 are the benchmark, bench_hit every doc sharing a
+# gram with it.
+_BENCH_HIT = """bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 47 = 0),
+            bench_hit AS (SELECT DISTINCT doc_id
+                          FROM sh JOIN bench USING (shingle))"""
+
+# Greedy first-fit packing of CTE toks (doc_id, n_tokens) into 256-token
+# sequences per doc_id % 16 bucket: a recursive fold in doc_id order
+# (needs WITH RECURSIVE).
+_PACK = """rt AS (SELECT doc_id, n_tokens, doc_id % 16 bucket,
+                   row_number() OVER (PARTITION BY doc_id % 16
+                                      ORDER BY doc_id) rn
+                   FROM toks),
+            g AS (
+              SELECT bucket, rn, doc_id, n_tokens,
+                     cast(0 as bigint) pack_seq, n_tokens cur
+              FROM rt WHERE rn = 1
+              UNION ALL
+              SELECT t.bucket, t.rn, t.doc_id, t.n_tokens,
+                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
+                          THEN g.pack_seq + 1 ELSE g.pack_seq END,
+                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
+                          THEN t.n_tokens ELSE g.cur + t.n_tokens END
+              FROM g JOIN rt t ON t.bucket = g.bucket AND t.rn = g.rn + 1)
+            SELECT doc_id, n_tokens, bucket, pack_seq FROM g"""
+
+
+def _aes_sql(src: str, cols: str = "") -> str:
+    """A-ES weighted-sampling keys of `src`: weight n_tokens (at least 1),
+    md5 coin u in (0, 1], key = ln(u) / n_tokens division-first on the
+    1e6 grid. `cols` (with a trailing comma) pass through."""
+    return f"""SELECT {cols}doc_id, cast(n_tokens as bigint) n_tokens,
+                   cast(floor(1000000.0 * ln(u) / n_tokens) as bigint)
+                       key_x1e6
+            FROM (
+              SELECT {cols}cast(doc_id as bigint) doc_id,
+                     greatest(1, len(regexp_extract_all(lower(text),
+                                                        '\\w+'))) n_tokens,
+                     (({_md5_prefix_int_sql("cast(doc_id as varchar)")})
+                      % 1000000 + 1) / 1000000.0 u
+              FROM {src})"""
+
+
+def _dsir_sql(raw: str) -> str:
+    """DSIR importance weights of the docs of `raw` (doc_id, text) against
+    the target slice doc_id % 31 = 0: hashed unigram+bigram buckets (md5
+    prefix), add-1 smoothed target/raw estimates, ln computed
+    division-first in the identical order, one 1e6-grid round per
+    bucket, integer sums per doc. Ends in CTE wts (doc_id, n_grams,
+    dsir_logw_x1e6)."""
+    return f"""gw AS (
               SELECT doc_id, TRUE is_t,
-                     regexp_extract_all(lower(text), '\w+') ws
+                     regexp_extract_all(lower(text), '\\w+') ws
               FROM documents WHERE doc_id % 31 = 0
               UNION ALL
-              SELECT doc_id, FALSE,
-                     regexp_extract_all(lower(text), '\w+')
-              FROM surv),
+              SELECT doc_id, FALSE, regexp_extract_all(lower(text), '\\w+')
+              FROM {raw}),
             g0 AS (SELECT doc_id, is_t,
                           unnest(ws || list_transform(
                             range(1, len(ws)),
@@ -861,10 +1007,59 @@ def _pipeline_v3_sql(top_n: int = 100) -> str:
                           cast(sum(lrt.lr_x1e6) as bigint) s
                    FROM bkt JOIN lrt USING (bucket)
                    WHERE NOT bkt.is_t GROUP BY bkt.doc_id),
-            wts AS (SELECT s2.doc_id,
+            wts AS (SELECT cast(doc_id as bigint) doc_id,
                            cast(coalesce(rw.n_grams, 0) as bigint) n_grams,
                            cast(coalesce(rw.s, 0) as bigint) dsir_logw_x1e6
-                    FROM surv s2 LEFT JOIN rw USING (doc_id)),
+                    FROM {raw} LEFT JOIN rw USING (doc_id))"""
+
+
+def _bp_ctes() -> str:
+    """Shared DuckDB CTEs for the boilerplate-line pair: the seeded
+    paged corpus (header %3 / footer %4 / cookie %7), the distinct
+    normalized (doc, line) stream, the corpus count, and the gated
+    frequent-line set — restating queries._bp_seeded_docs /
+    _bp_frequent_lines independently."""
+    from ocr_image_to_text_spark.queries import (
+        BP_FRACTION_DEN, BP_MIN_DOCS, BP_SEED_COOKIE, BP_SEED_FOOTER,
+        BP_SEED_HEADER)
+
+    return rf"""seeded AS (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 3 = 0
+                          THEN '{BP_SEED_HEADER}' || chr(10) ELSE '' END
+                     || {_PAGED}
+                     || CASE WHEN doc_id % 4 = 0
+                             THEN chr(10) || '{BP_SEED_FOOTER}' ELSE '' END
+                     || CASE WHEN doc_id % 7 = 0
+                             THEN chr(10) || '{BP_SEED_COOKIE}' ELSE '' END
+                     AS text
+              FROM documents),
+            bpl AS (
+              SELECT DISTINCT doc_id, trim(lower(u.l)) AS line
+              FROM seeded, unnest(string_split(text, chr(10))) AS u(l)
+              WHERE trim(lower(u.l)) <> ''),
+            bpn AS (SELECT cast(count(*) as bigint) n_docs FROM seeded),
+            bp AS (
+              SELECT line, cast(count(*) as bigint) doc_freq
+              FROM bpl, bpn GROUP BY line, n_docs
+              HAVING count(*) >= greatest({BP_MIN_DOCS},
+                  cast(floor(n_docs / {BP_FRACTION_DEN}.0) as bigint)))"""
+
+
+def _pipeline_v3_sql(top_n: int = 100) -> str:
+    """DuckDB twin of corpus_pipeline_v3: C4 clean (shared fragment) →
+    Gopher gate on the cleaned text → exact dedup (min doc_id per md5) →
+    DSIR weights of the survivors vs the raw target slice → top-N."""
+    return rf"""
+            WITH {_c4_seeded_ctes()},
+            cleaned AS (
+              SELECT doc_id, clean_text AS text FROM c
+              WHERE len(regexp_extract_all(clean_text, '[.!?]')) >= 3
+                AND NOT has_lorem AND NOT has_brace),
+            gated AS ({_gated_sql("cleaned")}),
+            surv AS (SELECT * FROM ({_exact_dedup_sql("gated")})
+                     WHERE doc_id % 31 <> 0),
+            {_dsir_sql("surv")},
             topd AS (SELECT *,
                             row_number() OVER (ORDER BY dsir_logw_x1e6 DESC,
                                                doc_id ASC) rnk
@@ -884,6 +1079,18 @@ def _sample_rate_case_sql() -> str:
     whens = " ".join(f"WHEN lang = '{k}' THEN {v}"
                      for k, v in SAMPLE_RATES_X1000.items())
     return f"CASE {whens} ELSE {SAMPLE_DEFAULT_X1000} END"
+
+
+# The language detector's script-range cascade.
+_LANG_SCRIPTS = r"""
+                WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
+                WHEN regexp_matches(text, '[\x{3040}-\x{30ff}]') THEN 'ja'
+                WHEN regexp_matches(text, '[\x{ac00}-\x{d7af}]') THEN 'ko'
+                WHEN regexp_matches(text, '[\x{0600}-\x{06ff}]') THEN 'ar'
+                WHEN regexp_matches(text, '[\x{0400}-\x{04ff}]') THEN 'ru'"""
+_LANG_CASCADE = f"""CASE
+                WHEN length(text) < 20 THEN 'en'{_LANG_SCRIPTS}
+                ELSE 'en' END"""
 
 
 def _lang_ngram_sql(src: str = "documents") -> str:
@@ -911,19 +1118,13 @@ def _lang_ngram_sql(src: str = "documents") -> str:
                    {score_cols}
                 FROM d)
             SELECT doc_id, CASE
-                WHEN text IS NULL OR length(text) < 20 THEN 'en'
-                WHEN regexp_matches(text, '[\x{{4e00}}-\x{{9fff}}]') THEN 'zh'
-                WHEN regexp_matches(text, '[\x{{3040}}-\x{{30ff}}]') THEN 'ja'
-                WHEN regexp_matches(text, '[\x{{ac00}}-\x{{d7af}}]') THEN 'ko'
-                WHEN regexp_matches(text, '[\x{{0600}}-\x{{06ff}}]') THEN 'ar'
-                WHEN regexp_matches(text, '[\x{{0400}}-\x{{04ff}}]') THEN 'ru'
+                WHEN text IS NULL OR length(text) < 20 THEN 'en'{_LANG_SCRIPTS}
                 {argmax}
                 ELSE 'en' END lang_detected
             FROM s"""
 
 
 def oracle_sql() -> dict[str, str]:
-    from ocr_image_to_text_spark.dedup import simhash_expr_sql
     from ocr_image_to_text_spark.operators.fingerprint import (
         fingerprint_pairs_sql_duckdb as _fingerprint_pairs_sql,
         fingerprint_sql_duckdb as _fingerprint_sql,
@@ -944,14 +1145,6 @@ def oracle_sql() -> dict[str, str]:
     _ensure_t("t2")
     _tp = _t_path("t2")
 
-    sigs = ",\n          ".join(
-        f"list_aggregate(list_transform(shs, s -> md5('{i}:' || s)), 'min') mh{i}"
-        for i in range(8)
-    )
-    bands = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} band, mh{2*b} || '|' || mh{2*b+1} band_key FROM sig"
-        for b in range(4)
-    )
     oracles = {
         # --- extraction pipeline: oracle = pure-Python pyref goldens ---
         "extract_rollup": f"""
@@ -1081,78 +1274,33 @@ def oracle_sql() -> dict[str, str]:
                             || '@example.com on 12/05/2024 or 2024-05-12 '
                             || 'or Jan 5, 2024; call +1 (555) 123-4567; '
                             || 'see https://d' || d.doc_id || '.example.com'
-              FROM documents d)
-            SELECT doc_id, 'date' entity_type,
-                   unnest(regexp_extract_all(text, '\b\d{1,2}[/-]\d{1,2}[/-]\d{2,4}\b')) entity FROM u
-            UNION ALL SELECT doc_id, 'date',
-                   unnest(regexp_extract_all(text, '\b\d{4}[/-]\d{1,2}[/-]\d{1,2}\b')) FROM u
-            UNION ALL SELECT doc_id, 'date',
-                   unnest(regexp_extract_all(text, '(?i)\b(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)[a-z]* \d{1,2},? \d{4}\b')) FROM u
-            UNION ALL SELECT doc_id, 'email',
-                   unnest(regexp_extract_all(text, '\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b')) FROM u
-            UNION ALL SELECT doc_id, 'phone',
-                   unnest(regexp_extract_all(text, '\b(?:\+\d{1,3}[- ]?)?\(?\d{3}\)?[- ]?\d{3}[- ]?\d{4}\b')) FROM u
-            UNION ALL SELECT doc_id, 'url',
-                   unnest(regexp_extract_all(text, 'https?://(?:[-\w.]|(?:%[\da-fA-F]{2}))+')) FROM u""",
+              FROM documents d)""" + _entities_sql("u"),
         # Same five regexes over a deterministically seeded corpus so the
         # driver row is NON-vacuous (every pattern yields >=1 row per doc).
-        "doc_entities_seeded": r"""
-            WITH seeded AS (
-              SELECT doc_id,
-                     text || ' Contact user' || doc_id
-                          || '@example.com on 12/05/2024 or 2024-05-12 '
-                          || 'or Jan 5, 2024; call +1 (555) 123-4567; '
-                          || 'see https://d' || doc_id || '.example.com' AS text
-              FROM documents)
-            SELECT doc_id, 'date' entity_type,
-                   unnest(regexp_extract_all(text, '\b\d{1,2}[/-]\d{1,2}[/-]\d{2,4}\b')) entity FROM seeded
-            UNION ALL SELECT doc_id, 'date',
-                   unnest(regexp_extract_all(text, '\b\d{4}[/-]\d{1,2}[/-]\d{1,2}\b')) FROM seeded
-            UNION ALL SELECT doc_id, 'date',
-                   unnest(regexp_extract_all(text, '(?i)\b(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)[a-z]* \d{1,2},? \d{4}\b')) FROM seeded
-            UNION ALL SELECT doc_id, 'email',
-                   unnest(regexp_extract_all(text, '\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b')) FROM seeded
-            UNION ALL SELECT doc_id, 'phone',
-                   unnest(regexp_extract_all(text, '\b(?:\+\d{1,3}[- ]?)?\(?\d{3}\)?[- ]?\d{3}[- ]?\d{4}\b')) FROM seeded
-            UNION ALL SELECT doc_id, 'url',
-                   unnest(regexp_extract_all(text, 'https?://(?:[-\w.]|(?:%[\da-fA-F]{2}))+')) FROM seeded""",
+        "doc_entities_seeded": _ENTITY_SEEDED + _entities_sql("seeded"),
         # PII redaction: identical seeded text, identical replace chain
         # (email -> phone -> url, 'g' flag = Spark's replace-all default),
         # counts taken pre-redaction. Value-exact masking certification.
-        "doc_redact": r"""
-            WITH seeded AS (
-              SELECT doc_id,
-                     text || ' Contact user' || doc_id
-                          || '@example.com on 12/05/2024 or 2024-05-12 '
-                          || 'or Jan 5, 2024; call +1 (555) 123-4567; '
-                          || 'see https://d' || doc_id || '.example.com' AS text
-              FROM documents)
+        "doc_redact": f"""{_ENTITY_SEEDED}
             SELECT doc_id,
                    regexp_replace(
                      regexp_replace(
                        regexp_replace(text,
-                         '\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b',
+                         '{_RX_EMAIL}',
                          '[EMAIL]', 'g'),
-                       '\b(?:\+\d{1,3}[- ]?)?\(?\d{3}\)?[- ]?\d{3}[- ]?\d{4}\b',
+                       '{_RX_PHONE}',
                        '[PHONE]', 'g'),
-                     'https?://(?:[-\w.]|(?:%[\da-fA-F]{2}))+',
+                     '{_RX_URL}',
                      '[URL]', 'g') redacted_text,
                    cast(len(regexp_extract_all(text,
-                     '\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Z|a-z]{2,}\b')) as bigint) n_email,
+                     '{_RX_EMAIL}')) as bigint) n_email,
                    cast(len(regexp_extract_all(text,
-                     '\b(?:\+\d{1,3}[- ]?)?\(?\d{3}\)?[- ]?\d{3}[- ]?\d{4}\b')) as bigint) n_phone,
+                     '{_RX_PHONE}')) as bigint) n_phone,
                    cast(len(regexp_extract_all(text,
-                     'https?://(?:[-\w.]|(?:%[\da-fA-F]{2}))+')) as bigint) n_url
+                     '{_RX_URL}')) as bigint) n_url
             FROM seeded""",
-        "doc_lang": r"""
-            SELECT doc_id, CASE
-                WHEN length(text) < 20 THEN 'en'
-                WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-                WHEN regexp_matches(text, '[\x{3040}-\x{30ff}]') THEN 'ja'
-                WHEN regexp_matches(text, '[\x{ac00}-\x{d7af}]') THEN 'ko'
-                WHEN regexp_matches(text, '[\x{0600}-\x{06ff}]') THEN 'ar'
-                WHEN regexp_matches(text, '[\x{0400}-\x{04ff}]') THEN 'ru'
-                ELSE 'en' END lang_detected
+        "doc_lang": f"""
+            SELECT doc_id, {_LANG_CASCADE} lang_detected
             FROM documents""",
         "doc_lang_agreement": f"""
             WITH sdocs AS (
@@ -1166,14 +1314,7 @@ def oracle_sql() -> dict[str, str]:
                 ELSE '' END AS text
               FROM documents),
             a AS (
-              SELECT doc_id, CASE
-                WHEN length(text) < 20 THEN 'en'
-                WHEN regexp_matches(text, '[\\x{{4e00}}-\\x{{9fff}}]') THEN 'zh'
-                WHEN regexp_matches(text, '[\\x{{3040}}-\\x{{30ff}}]') THEN 'ja'
-                WHEN regexp_matches(text, '[\\x{{ac00}}-\\x{{d7af}}]') THEN 'ko'
-                WHEN regexp_matches(text, '[\\x{{0600}}-\\x{{06ff}}]') THEN 'ar'
-                WHEN regexp_matches(text, '[\\x{{0400}}-\\x{{04ff}}]') THEN 'ru'
-                ELSE 'en' END lang_cascade
+              SELECT doc_id, {_LANG_CASCADE} lang_cascade
               FROM sdocs),
             b AS ({_lang_ngram_sql(src="sdocs")})
             SELECT a.lang_cascade, b.lang_detected AS lang_ngram,
@@ -1347,29 +1488,12 @@ def oracle_sql() -> dict[str, str]:
             FROM jac WHERE jacc_x1000 >= 100""",
         "dedup_apply_minhash": f"""
             WITH RECURSIVE {_SHINGLES},
-            sig AS (SELECT doc_id,
-          {sigs}
-                FROM shl),
-            bands AS (
-  {bands}),
-            cand AS (SELECT DISTINCT x.doc_id da, y.doc_id db
-                     FROM bands x JOIN bands y
-                     ON x.band = y.band AND x.band_key = y.band_key
-                        AND x.doc_id < y.doc_id),
+            {_MINHASH_CANDS},
             p AS (SELECT cand.da, cand.db
                   FROM cand JOIN jac
                     ON cand.da = jac.da AND cand.db = jac.db
                   WHERE jac.jacc_x1000 >= 100),
-            e AS (SELECT da src, db dst FROM p
-                  UNION ALL SELECT db, da FROM p),
-            reach AS (
-                SELECT src AS doc_id, src AS lbl FROM e
-                UNION
-                SELECT e.dst, reach.lbl
-                FROM reach JOIN e ON e.src = reach.doc_id
-            ),
-            asg AS (SELECT doc_id, min(lbl) cluster_id
-                    FROM reach GROUP BY doc_id),
+            {_COMPONENTS},
             tot AS (SELECT cast(count(*) as bigint) n_docs FROM documents),
             st AS (SELECT cast(count(*) as bigint) n_near_dup_docs,
                           cast(coalesce(sum(CASE WHEN doc_id <> cluster_id
@@ -1380,115 +1504,39 @@ def oracle_sql() -> dict[str, str]:
             FROM tot, st""",
         "dedup_minhash_lsh": f"""
             WITH {_SHINGLES},
-            sig AS (SELECT doc_id,
-          {sigs}
-                FROM shl),
-            bands AS (
-  {bands}),
-            cand AS (SELECT DISTINCT x.doc_id da, y.doc_id db
-                     FROM bands x JOIN bands y
-                     ON x.band = y.band AND x.band_key = y.band_key
-                        AND x.doc_id < y.doc_id)
+            {_MINHASH_CANDS}
             SELECT cast(cand.da as bigint) doc_a, cast(cand.db as bigint) doc_b, jac.jacc_x1000
             FROM cand JOIN jac ON cand.da = jac.da AND cand.db = jac.db
             WHERE jac.jacc_x1000 >= 100""",
         "doc_simhash": f"""
-            WITH t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 8)) hs
-                FROM documents)
-            SELECT doc_id, {simhash_expr_sql("duckdb")} simhash FROM t""",
+            WITH {_simhash_words_sql()}
+            {_simhash_sig_sql()}""",
         "ann_cosine_topk": f"""
             WITH {_EMB_NORM},
-            j AS (SELECT q.vec_id query_id, b.vec_id neighbor_id,
-                    round(list_sum(list_transform(generate_series(1, len(b.e)),
-                          i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
-                  FROM n b, n q WHERE q.vec_id < 20 AND b.vec_id != q.vec_id)
-            SELECT cast(query_id as bigint) query_id, cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos_r DESC, neighbor_id) rank FROM j)
-            WHERE rank <= 3""",
+            {_EXACT_SCAN}{_cos_topk_sql()}""",
         "ann_lsh_topk": f"""
             WITH {_EMB_NORM},
             sig AS (SELECT vec_id, e, nrm, {_lsh_sig_sql()} bucket FROM n),
             j AS (SELECT q.vec_id query_id, b.vec_id neighbor_id,
-                    round(list_sum(list_transform(generate_series(1, len(b.e)),
-                          i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
+                    {_cos_sql("b", "q")} cos_r
                   FROM sig b JOIN sig q ON b.bucket = q.bucket
-                  WHERE q.vec_id < 20 AND b.vec_id != q.vec_id)
-            SELECT cast(query_id as bigint) query_id, cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos_r DESC, neighbor_id) rank FROM j)
-            WHERE rank <= 3""",
+                  WHERE q.vec_id < 20 AND b.vec_id != q.vec_id){_cos_topk_sql()}""",
         "ann_ivf_topk": f"""
             WITH {_EMB_NORM},
             c AS (SELECT vec_id cid, e ce FROM n WHERE vec_id < 16),
-            ad AS (SELECT b.vec_id, c.cid,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> (b.e[i] - c.ce[i]) * (b.e[i] - c.ce[i]))), 9) d
-                   FROM n b, c),
-            asn AS (SELECT vec_id, cid cell FROM
-                      (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                              ORDER BY d, cid) rn FROM ad)
-                    WHERE rn = 1),
-            probe AS (SELECT vec_id query_id, cid cell FROM
-                        (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                                ORDER BY d, cid) rn FROM ad WHERE vec_id < 20)
-                      WHERE rn <= 4),
-            j AS (SELECT p.query_id, b.vec_id neighbor_id,
-                    round(list_sum(list_transform(generate_series(1, len(b.e)),
-                          i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
-                  FROM probe p JOIN asn a ON a.cell = p.cell
-                  JOIN n b ON b.vec_id = a.vec_id
-                  JOIN n q ON q.vec_id = p.query_id
-                  WHERE b.vec_id != p.query_id)
-            SELECT cast(query_id as bigint) query_id, cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos_r DESC, neighbor_id) rank FROM j)
-            WHERE rank <= 3""",
+            {_ivf_sql("n", "c")},
+            {_ivf_scan_sql()}{_cos_topk_sql()}""",
         # Recall@k of IVF vs the exact scan: both searches restated, then
         # a per-query LEFT JOIN hit count (count(matched) keeps 0-recall
         # queries as rows).
         "ann_ivf_recall": f"""
             WITH {_EMB_NORM},
-            ej AS (SELECT q.vec_id query_id, b.vec_id neighbor_id,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
-                   FROM n b, n q WHERE q.vec_id < 20 AND b.vec_id != q.vec_id),
-            et AS (SELECT query_id, neighbor_id FROM
-                     (SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY cos_r DESC, neighbor_id) rank FROM ej)
-                   WHERE rank <= 3),
+            {_EXACT_SCAN},
+            et AS (SELECT query_id, neighbor_id FROM ({_cos_topk_sql()})),
             c AS (SELECT vec_id cid, e ce FROM n WHERE vec_id < 16),
-            ad AS (SELECT b.vec_id, c.cid,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> (b.e[i] - c.ce[i]) * (b.e[i] - c.ce[i]))), 9) d
-                   FROM n b, c),
-            asn AS (SELECT vec_id, cid cell FROM
-                      (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                              ORDER BY d, cid) rn FROM ad)
-                    WHERE rn = 1),
-            probe AS (SELECT vec_id query_id, cid cell FROM
-                        (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                                ORDER BY d, cid) rn FROM ad WHERE vec_id < 20)
-                      WHERE rn <= 4),
-            ij AS (SELECT p.query_id, b.vec_id neighbor_id,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
-                   FROM probe p JOIN asn a ON a.cell = p.cell
-                   JOIN n b ON b.vec_id = a.vec_id
-                   JOIN n q ON q.vec_id = p.query_id
-                   WHERE b.vec_id != p.query_id),
-            it AS (SELECT query_id, neighbor_id FROM
-                     (SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY cos_r DESC, neighbor_id) rank FROM ij)
-                   WHERE rank <= 3)
+            {_ivf_sql("n", "c")},
+            {_ivf_scan_sql("ij")},
+            it AS (SELECT query_id, neighbor_id FROM ({_cos_topk_sql("ij")}))
             SELECT cast(et.query_id as bigint) query_id,
                    cast(count(it.neighbor_id) as bigint) n_hits,
                    cast(floor(1000.0 * count(it.neighbor_id) / 3) as bigint)
@@ -1502,14 +1550,7 @@ def oracle_sql() -> dict[str, str]:
         "ann_ivf_lloyd_topk": f"""
             WITH {_EMB_NORM},
             seed AS (SELECT vec_id cid, e ce FROM n WHERE vec_id < 16),
-            ad0 AS (SELECT b.vec_id, s.cid,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> (b.e[i] - s.ce[i]) * (b.e[i] - s.ce[i]))), 9) d
-                    FROM n b, seed s),
-            asn0 AS (SELECT vec_id, cid cell FROM
-                       (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                               ORDER BY d, cid) rn FROM ad0)
-                     WHERE rn = 1),
+            {_ivf_sql("n", "seed", "0", n_probe=0)},
             ex AS (SELECT a.cell, unnest(generate_series(1, len(b.e))) i, b.e
                    FROM asn0 a JOIN n b USING (vec_id)),
             cs AS (SELECT cell, i, sum(cast(floor(e[i] * 1000000.0) as bigint)) s,
@@ -1519,50 +1560,19 @@ def oracle_sql() -> dict[str, str]:
                      FROM cs GROUP BY cell),
             c AS (SELECT seed.cid, coalesce(newc.ce, seed.ce) ce
                   FROM seed LEFT JOIN newc USING (cid)),
-            ad AS (SELECT b.vec_id, c.cid,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> (b.e[i] - c.ce[i]) * (b.e[i] - c.ce[i]))), 9) d
-                   FROM n b, c),
-            asn AS (SELECT vec_id, cid cell FROM
-                      (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                              ORDER BY d, cid) rn FROM ad)
-                    WHERE rn = 1),
-            probe AS (SELECT vec_id query_id, cid cell FROM
-                        (SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-                                ORDER BY d, cid) rn FROM ad WHERE vec_id < 20)
-                      WHERE rn <= 4),
-            j AS (SELECT p.query_id, b.vec_id neighbor_id,
-                    round(list_sum(list_transform(generate_series(1, len(b.e)),
-                          i -> b.e[i] * q.e[i])) / (b.nrm * q.nrm), 9) cos_r
-                  FROM probe p JOIN asn a ON a.cell = p.cell
-                  JOIN n b ON b.vec_id = a.vec_id
-                  JOIN n q ON q.vec_id = p.query_id
-                  WHERE b.vec_id != p.query_id)
-            SELECT cast(query_id as bigint) query_id, cast(rank as bigint) rank,
-                   cast(neighbor_id as bigint) neighbor_id,
-                   cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos_r DESC, neighbor_id) rank FROM j)
-            WHERE rank <= 3""",
+            {_ivf_sql("n", "c")},
+            {_ivf_scan_sql()}{_cos_topk_sql()}""",
         # SemDeDup (Abbas et al. 2023): same deterministic centroids /
         # rounded folds as the IVF twin; within-cell keep order is
         # (dist-to-centroid DESC, vec_id) per the paper's keep-hard rule.
         "semdedup_prune": f"""
             WITH {_EMB_NORM},
             c AS (SELECT vec_id cid, e ce FROM n WHERE vec_id < 16),
-            ad AS (SELECT b.vec_id, c.cid,
-                     round(list_sum(list_transform(generate_series(1, len(b.e)),
-                           i -> (b.e[i] - c.ce[i]) * (b.e[i] - c.ce[i]))), 9) d
-                   FROM n b, c),
-            asn AS (SELECT vec_id, cid cell, d dcent FROM
-                      (SELECT vec_id, cid, d, row_number() OVER (PARTITION BY vec_id
-                              ORDER BY d, cid) rn FROM ad)
-                    WHERE rn = 1),
-            m AS (SELECT n.vec_id, n.e, n.nrm, a.cell, a.dcent
+            {_ivf_sql("n", "c", n_probe=0)},
+            m AS (SELECT n.vec_id, n.e, n.nrm, a.cell, a.d dcent
                   FROM n JOIN asn a USING (vec_id)),
             p AS (SELECT a.vec_id, b.vec_id partner,
-                    round(list_sum(list_transform(generate_series(1, len(a.e)),
-                          i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm), 9) cos_r
+                    {_cos_sql("a", "b")} cos_r
                   FROM m a JOIN m b ON a.cell = b.cell
                   WHERE (b.dcent > a.dcent
                          OR (b.dcent = a.dcent AND b.vec_id < a.vec_id))),
@@ -1657,51 +1667,15 @@ def oracle_sql() -> dict[str, str]:
                    cast(coalesce(r.n_dup_spans, 0) as bigint) n_dup_spans,
                    cast(coalesce(r.n_removed, 0) as bigint) n_removed
             FROM documents d LEFT JOIN r USING (doc_id)""",
-        "dedup_simhash_pairs_narrow": f"""
-            WITH t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 8)) hs
-                FROM documents),
-            s AS (SELECT doc_id, {simhash_expr_sql("duckdb")} simhash FROM t)
-            SELECT cast(a.doc_id as bigint) doc_a, cast(b.doc_id as bigint) doc_b,
-                   cast(bit_count(xor(a.simhash, b.simhash)) as bigint) hamming
-            FROM s a, s b
-            WHERE a.doc_id < b.doc_id
-              AND bit_count(xor(a.simhash, b.simhash)) <= 3""",
+        "dedup_simhash_pairs_narrow": _simhash_pairs_sql(),
         "doc_simhash64": f"""
-            WITH t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 16)) hs
-                FROM documents)
-            SELECT doc_id, {simhash_expr_sql("duckdb", bits=64)} simhash FROM t""",
-        "dedup_simhash_pairs": f"""
-            WITH t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 16)) hs
-                FROM documents),
-            s AS (SELECT doc_id, {simhash_expr_sql("duckdb", bits=64)} simhash FROM t)
-            SELECT cast(a.doc_id as bigint) doc_a, cast(b.doc_id as bigint) doc_b,
-                   cast(bit_count(xor(a.simhash, b.simhash)) as bigint) hamming
-            FROM s a, s b
-            WHERE a.doc_id < b.doc_id
-              AND bit_count(xor(a.simhash, b.simhash)) <= 3""",
+            WITH {_simhash_words_sql(64)}
+            {_simhash_sig_sql(64)}""",
+        "dedup_simhash_pairs": _simhash_pairs_sql(64),
         "dedup_clusters": f"""
-            WITH RECURSIVE t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 8)) hs
-                FROM documents),
-            s AS (SELECT doc_id, {simhash_expr_sql("duckdb")} simhash FROM t),
-            p AS (SELECT a.doc_id da, b.doc_id db FROM s a, s b
-                  WHERE a.doc_id < b.doc_id
-                    AND bit_count(xor(a.simhash, b.simhash)) <= 3),
-            e AS (SELECT da src, db dst FROM p
-                  UNION ALL SELECT db, da FROM p),
-            reach AS (
-                SELECT src AS doc_id, src AS lbl FROM e
-                UNION
-                SELECT e.dst, reach.lbl FROM reach JOIN e ON e.src = reach.doc_id
-            ),
-            asg AS (SELECT doc_id, min(lbl) cluster_id FROM reach GROUP BY doc_id)
+            WITH RECURSIVE p AS (
+              SELECT doc_a da, doc_b db FROM ({_simhash_pairs_sql()})),
+            {_COMPONENTS}
             SELECT cast(doc_id as bigint) doc_id,
                    cast(cluster_id as bigint) cluster_id,
                    cast(count(*) OVER (PARTITION BY cluster_id) as bigint) n_docs
@@ -1739,78 +1713,16 @@ def oracle_sql() -> dict[str, str]:
             LIMIT 100""",
         # Gopher/C4 quality gate: every metric restated; fractions are
         # floor(1000·x) so both engines hash bit-identically.
-        "doc_quality_gopher": r"""
-            WITH m AS (
-              SELECT doc_id,
-                     cast(CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\s+'))
-                          END as bigint) n_words,
-                     cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                          as bigint) alpha,
-                     cast(len(string_split(text, chr(10))) as bigint) n_lines,
-                     cast(len(string_split(text, chr(10)))
-                          - len(list_distinct(string_split(text, chr(10))))
-                          as bigint) n_dup_lines,
-                     cast(len(list_filter(
-                            ['the','a','and','of','to','is','in','that','it'],
-                            w -> list_contains(
-                              list_distinct(regexp_extract_all(lower(text), '\w+')),
-                              w))) as bigint) n_stopwords
-              FROM documents),
-            x AS (
-              SELECT doc_id, n_words,
-                     cast(CASE WHEN n_words = 0 THEN 0
-                          ELSE floor(1000.0 * alpha / n_words)
-                          END as bigint) mean_word_len_x1000,
-                     cast(floor(1000.0 * n_dup_lines / n_lines) as bigint)
-                          dup_line_frac_x1000,
-                     n_stopwords
-              FROM m)
-            SELECT doc_id, n_words, mean_word_len_x1000,
-                   dup_line_frac_x1000, n_stopwords,
-                   (n_words >= 50
-                    AND mean_word_len_x1000 BETWEEN 3000 AND 10000
-                    AND dup_line_frac_x1000 <= 300
-                    AND n_stopwords >= 2) keep
-            FROM x""",
+        "doc_quality_gopher": _gopher_sql(),
         # C4 §2.2 line-level cleaning: the per-line predicate (terminal
         # punctuation, ≥5 words, no "javascript") and page gate restated
         # verbatim as list_filter lambdas.
-        "doc_c4_page_filter": r"""
-            WITH b AS (
-              SELECT doc_id, string_split(text, chr(10)) l,
-                     contains(lower(text), 'lorem ipsum') has_lorem,
-                     contains(text, '{') has_brace
-              FROM documents),
-            k AS (
-              SELECT doc_id, len(l) n_lines,
-                     list_filter(l, x ->
-                       regexp_matches(rtrim(x), '[.!?"]$')
-                       AND len(regexp_split_to_array(trim(x), '\s+')) >= 5
-                       AND NOT contains(lower(x), 'javascript')) kept,
-                     has_lorem, has_brace
-              FROM b),
-            c AS (
-              SELECT doc_id, n_lines, len(kept) n_kept_lines,
-                     -- DuckDB: array_to_string([]) is NULL, Spark
-                     -- concat_ws gives '' — coalesce to match
-                     coalesce(array_to_string(kept, chr(10)), '') clean_text,
-                     has_lorem, has_brace
-              FROM k)
-            SELECT cast(doc_id as bigint) doc_id,
-                   cast(n_lines as bigint) n_lines,
-                   cast(n_kept_lines as bigint) n_kept_lines,
-                   cast(len(regexp_extract_all(clean_text, '[.!?]'))
-                        as bigint) n_sentences,
-                   (len(regexp_extract_all(clean_text, '[.!?]')) >= 3
-                    AND NOT has_lorem AND NOT has_brace) keep_doc,
-                   clean_text
-            FROM c""",
+        "doc_c4_page_filter": _c4_page_sql(_c4_ctes("documents", _C4_NOTE)),
         # Seeded C4 oracle: rebuild the identical paged text (8-word
         # '.\n' sentences + per-doc_id seed lines from the SAME
         # queries.py constants) then apply the same rules — certifies
         # every rule's positive and negative path at driver level.
-        "doc_c4_page_filter_seeded": _c4_seeded_sql(),
+        "doc_c4_page_filter_seeded": _c4_page_sql(_c4_seeded_ctes()),
         # RefinedWeb-shaped composition: C4 clean -> Gopher gate on the
         # cleaned text -> exact dedup -> DSIR top-N; all four stages
         # restated from the same shared fragments/constants.
@@ -1883,98 +1795,26 @@ def oracle_sql() -> dict[str, str]:
         # Full pretraining-prep composition: gopher gate -> benchmark
         # decontamination -> exact dedup -> greedy packing, all four
         # stages restated (packing as the recursive greedy fold).
-        "corpus_pipeline_v2": r"""
-            WITH RECURSIVE m AS (
-              SELECT doc_id, text,
-                     cast(CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\s+'))
-                          END as bigint) n_words,
-                     cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                          as bigint) alpha,
-                     cast(len(string_split(text, chr(10))) as bigint) n_lines,
-                     cast(len(string_split(text, chr(10)))
-                          - len(list_distinct(string_split(text, chr(10))))
-                          as bigint) n_dup_lines,
-                     cast(len(list_filter(
-                            ['the','a','and','of','to','is','in','that','it'],
-                            w -> list_contains(
-                              list_distinct(regexp_extract_all(lower(text), '\w+')),
-                              w))) as bigint) n_stopwords
-              FROM documents),
-            gated AS (
-              SELECT doc_id, text, n_words FROM (
-                SELECT doc_id, text, n_words, n_stopwords,
-                       cast(CASE WHEN n_words = 0 THEN 0
-                            ELSE floor(1000.0 * alpha / n_words)
-                            END as bigint) mwl,
-                       cast(floor(1000.0 * n_dup_lines / n_lines) as bigint) dupf
-                FROM m)
-              WHERE n_words >= 50 AND mwl BETWEEN 3000 AND 10000
-                AND dupf <= 300 AND n_stopwords >= 2),
-            shw AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') ws
-                    FROM documents),
-            grams AS (SELECT doc_id,
-                        unnest(list_distinct(list_transform(
-                          generate_series(1, greatest(len(ws) - 2, 1)),
-                          i -> array_to_string(list_slice(ws, i, i + 2), ' ')))) gram
-                      FROM shw),
-            bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 47 = 0),
-            corp AS (SELECT doc_id, text, n_words FROM gated
-                     WHERE doc_id % 47 != 0),
-            contaminated AS (
-              SELECT DISTINCT gr.doc_id
-              FROM grams gr
-              JOIN corp c ON gr.doc_id = c.doc_id
-              JOIN bench b ON gr.gram = b.gram),
-            clean AS (SELECT * FROM corp
-                      WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-            dd AS (SELECT doc_id, n_words FROM (
-                     SELECT doc_id, n_words,
-                            row_number() OVER (PARTITION BY md5(text)
-                                               ORDER BY doc_id) rn
-                     FROM clean)
-                   WHERE rn = 1),
-            toks AS (SELECT doc_id, n_words n_tokens, doc_id % 16 bucket,
-                            row_number() OVER (PARTITION BY doc_id % 16
-                                               ORDER BY doc_id) rn
-                     FROM dd),
-            g AS (
-              SELECT bucket, rn, doc_id, n_tokens,
-                     cast(0 as bigint) pack_seq, n_tokens cur
-              FROM toks WHERE rn = 1
-              UNION ALL
-              SELECT t.bucket, t.rn, t.doc_id, t.n_tokens,
-                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
-                          THEN g.pack_seq + 1 ELSE g.pack_seq END,
-                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
-                          THEN t.n_tokens ELSE g.cur + t.n_tokens END
-              FROM g JOIN toks t ON t.bucket = g.bucket AND t.rn = g.rn + 1)
-            SELECT doc_id, n_tokens, bucket, pack_seq FROM g""",
+        "corpus_pipeline_v2": f"""
+            WITH RECURSIVE {_SHINGLES},
+            {_BENCH_HIT},
+            clean AS (
+              SELECT * FROM ({_gated_sql("documents", "doc_id, text, n_words")})
+              WHERE doc_id % 47 != 0
+                AND doc_id NOT IN (SELECT doc_id FROM bench_hit)),
+            toks AS ({_exact_dedup_sql("clean", "doc_id, n_words n_tokens")}),
+            {_PACK}""",
         # Sequence packing: the greedy first-fit fold restated as a
         # recursive CTE stepping row_number within each bucket — the
         # serial-within-shard semantics the applyInPandas pass implements.
-        "corpus_pack_sequences": r"""
+        "corpus_pack_sequences": rf"""
             WITH RECURSIVE toks AS (
               SELECT doc_id,
                      cast(CASE WHEN length(trim(text)) = 0 THEN 0
                           ELSE len(regexp_split_to_array(trim(text), '\s+'))
-                          END as bigint) n_tokens,
-                     doc_id % 16 bucket,
-                     row_number() OVER (PARTITION BY doc_id % 16
-                                        ORDER BY doc_id) rn
+                          END as bigint) n_tokens
               FROM documents),
-            g AS (
-              SELECT bucket, rn, doc_id, n_tokens,
-                     cast(0 as bigint) pack_seq, n_tokens cur
-              FROM toks WHERE rn = 1
-              UNION ALL
-              SELECT t.bucket, t.rn, t.doc_id, t.n_tokens,
-                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
-                          THEN g.pack_seq + 1 ELSE g.pack_seq END,
-                     CASE WHEN g.cur > 0 AND g.cur + t.n_tokens > 256
-                          THEN t.n_tokens ELSE g.cur + t.n_tokens END
-              FROM g JOIN toks t ON t.bucket = g.bucket AND t.rn = g.rn + 1)
-            SELECT doc_id, n_tokens, bucket, pack_seq FROM g""",
+            {_PACK}""",
         # Decontamination: same shingle construction as _SHINGLES, split
         # into benchmark (doc_id % 47 = 0) vs corpus sides.
         "corpus_decontaminate": r"""
@@ -1992,22 +1832,14 @@ def oracle_sql() -> dict[str, str]:
                    cast(count(distinct bench_id) as bigint) n_bench_docs
             FROM corp JOIN bench USING (gram)
             GROUP BY corp.doc_id""",
-        "corpus_decontaminate_anti": r"""
-            WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') ws
-                       FROM documents),
-            shl AS (SELECT doc_id,
-                      list_distinct(list_transform(generate_series(1, greatest(len(ws) - 2, 1)),
-                                    i -> array_to_string(list_slice(ws, i, i + 2), ' '))) shs
-                    FROM w),
-            sh AS (SELECT doc_id, unnest(shs) gram FROM shl),
-            bench AS (SELECT DISTINCT gram FROM sh WHERE doc_id % 47 = 0)
+        "corpus_decontaminate_anti": f"""
+            WITH {_SHINGLES},
+            {_BENCH_HIT}
             SELECT cast(d.doc_id as bigint) doc_id,
                    cast(length(d.text) as bigint) n_chars
             FROM documents d
             WHERE d.doc_id % 47 != 0
-              AND NOT EXISTS (
-                SELECT 1 FROM sh JOIN bench USING (gram)
-                WHERE sh.doc_id = d.doc_id)""",
+              AND d.doc_id NOT IN (SELECT doc_id FROM bench_hit)""",
         # Bloom-filter decontamination: the occupied-position set IS the
         # bit array; same md5 position hashes, all-k membership per gram.
         "corpus_decontaminate_bloom": _bloom_decontaminate_sql(),
@@ -2016,29 +1848,13 @@ def oracle_sql() -> dict[str, str]:
                 cast(floor((CASE WHEN length(text) = 0 THEN 0.0
                             ELSE {_SCORE_V2.format(c="text")} END)
                      * 1000000 + 0.5) as bigint) score_x1e6,
-                CASE
-                    WHEN length(text) < 20 THEN 'en'
-                    WHEN regexp_matches(text, '[\\x{{4e00}}-\\x{{9fff}}]') THEN 'zh'
-                    WHEN regexp_matches(text, '[\\x{{3040}}-\\x{{30ff}}]') THEN 'ja'
-                    WHEN regexp_matches(text, '[\\x{{ac00}}-\\x{{d7af}}]') THEN 'ko'
-                    WHEN regexp_matches(text, '[\\x{{0600}}-\\x{{06ff}}]') THEN 'ar'
-                    WHEN regexp_matches(text, '[\\x{{0400}}-\\x{{04ff}}]') THEN 'ru'
-                    ELSE 'en' END lang
+                {_LANG_CASCADE} lang
                 FROM documents),
             kept AS (SELECT * FROM scored
                      WHERE score_x1e6 >= 13000000 AND lang = 'en'),
-            ded AS (SELECT doc_id, text, score_x1e6, lang FROM
-                      (SELECT *, row_number() OVER (PARTITION BY md5(text)
-                              ORDER BY doc_id) rn FROM kept)
-                    WHERE rn = 1),
-            t AS (SELECT doc_id,
-                list_transform(list_distinct(regexp_extract_all(lower(text), '\\w+')),
-                               w -> substr(md5(w), 1, 8)) hs
-                FROM ded),
-            s AS (SELECT doc_id, {simhash_expr_sql("duckdb")} simhash FROM t),
-            nd AS (SELECT DISTINCT b.doc_id FROM s a, s b
-                   WHERE a.doc_id < b.doc_id
-                     AND bit_count(xor(a.simhash, b.simhash)) <= 1)
+            ded AS ({_exact_dedup_sql("kept", "doc_id, text, score_x1e6, lang")}),
+            nd AS (SELECT DISTINCT doc_b doc_id
+                   FROM ({_simhash_pairs_sql(src="ded", k=1)}))
             SELECT cast(d.doc_id as bigint) doc_id, score_x1e6, lang
             FROM ded d ANTI JOIN nd USING (doc_id)""",
         "chunk_l2_topk": chunk_l2_sql_duckdb(_g("chunks"), CHUNK_RETRIEVAL_QUERY, k=5),
@@ -2046,8 +1862,7 @@ def oracle_sql() -> dict[str, str]:
         "emb_dup_pairs": f"""
             WITH {_EMB_NORM},
             j AS (SELECT a.vec_id va, b.vec_id vb,
-                    round(list_sum(list_transform(generate_series(1, len(a.e)),
-                          i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm), 9) cos_r
+                    {_cos_sql("a", "b")} cos_r
                   FROM n a, n b WHERE a.vec_id < b.vec_id)
             SELECT cast(va as bigint) vec_a, cast(vb as bigint) vec_b,
                    cast(floor(cos_r * 1000000000 + 0.5) as bigint) cos_x1e9
@@ -2117,14 +1932,8 @@ def oracle_sql() -> dict[str, str]:
         "corpus_vocab_hll": _vocab_hll_sql(),
         # Corpus TF-IDF top-k: idf rounded once per token to the 1e6
         # grid, per-doc scores integer-exact, token-asc tie order.
-        "doc_tfidf_topk": r"""
-            WITH t AS (SELECT doc_id,
-                              unnest(regexp_extract_all(lower(text), '\w+'))
-                                  token
-                       FROM documents),
-            tf AS (SELECT cast(doc_id as bigint) doc_id, token,
-                          cast(count(*) as bigint) tf
-                   FROM t GROUP BY doc_id, token),
+        "doc_tfidf_topk": rf"""
+            WITH {_TOKEN_TF},
             nd AS (SELECT cast(count(*) as bigint) n FROM documents),
             idf AS (SELECT token,
                            cast(floor(1000000.0 * ln(nd.n / cast(df as
@@ -2328,14 +2137,8 @@ def oracle_sql() -> dict[str, str]:
             FROM r WHERE rnk <= 20""",
         # CCNet-style unigram log-prob: ln p rounded once per token,
         # per-doc integer sums, exact-integer floored mean.
-        "doc_unigram_logprob": r"""
-            WITH t AS (SELECT doc_id,
-                              unnest(regexp_extract_all(lower(text), '\w+'))
-                                  token
-                       FROM documents),
-            tf AS (SELECT cast(doc_id as bigint) doc_id, token,
-                          cast(count(*) as bigint) tf
-                   FROM t GROUP BY doc_id, token),
+        "doc_unigram_logprob": rf"""
+            WITH {_TOKEN_TF},
             c AS (SELECT token, cast(sum(tf) as bigint) cnt
                   FROM tf GROUP BY token),
             tot AS (SELECT cast(sum(cnt) as bigint) n_total FROM c),
@@ -2363,37 +2166,10 @@ def oracle_sql() -> dict[str, str]:
         # correctly rounded the same way; one 1e6-grid round per BUCKET,
         # integer sums per doc.
         "corpus_dsir_weights": f"""
-            WITH w AS (SELECT doc_id, doc_id % 31 = 0 is_t,
-                              regexp_extract_all(lower(text), '\\w+') ws
-                       FROM documents),
-            g0 AS (SELECT doc_id, is_t,
-                          unnest(ws || list_transform(
-                            range(1, len(ws)),
-                            i -> ws[i] || ' ' || ws[i+1])) gram
-                   FROM w),
-            b AS (SELECT doc_id, is_t,
-                         {_md5_prefix_int_sql("gram")} % 256 bucket
-                  FROM g0),
-            c AS (SELECT bucket,
-                         sum(CASE WHEN is_t THEN 1 ELSE 0 END) cnt_t,
-                         sum(CASE WHEN is_t THEN 0 ELSE 1 END) cnt_r
-                  FROM b GROUP BY bucket),
-            t AS (SELECT sum(cnt_t) n_t, sum(cnt_r) n_r FROM c),
-            lr AS (SELECT bucket,
-                          cast(floor(1000000.0 * ln(
-                            ((cnt_t + 1.0) / (n_t + 256))
-                            * ((n_r + 256) / (cnt_r + 1.0))) + 0.5)
-                            as bigint) lr_x1e6
-                   FROM c, t),
-            r AS (SELECT b.doc_id, cast(count(*) as bigint) n_grams,
-                         cast(sum(lr.lr_x1e6) as bigint) s
-                  FROM b JOIN lr USING (bucket)
-                  WHERE NOT b.is_t GROUP BY b.doc_id)
-            SELECT cast(d.doc_id as bigint) doc_id,
-                   cast(coalesce(r.n_grams, 0) as bigint) n_grams,
-                   cast(coalesce(r.s, 0) as bigint) dsir_logw_x1e6
-            FROM documents d LEFT JOIN r USING (doc_id)
-            WHERE d.doc_id % 31 <> 0""",
+            WITH raw AS (SELECT doc_id, text FROM documents
+                         WHERE doc_id % 31 <> 0),
+            {_dsir_sql("raw")}
+            SELECT * FROM wts""",
         # Pipeline v4: boilerplate strip → Gopher gate → A-ES sample,
         # every stage restated from its certified fragment.
         "corpus_pipeline_v4": f"""
@@ -2406,43 +2182,9 @@ def oracle_sql() -> dict[str, str]:
                        x -> NOT list_contains(bls, trim(lower(x)))),
                        chr(10)), '') AS text
               FROM seeded, bset),
-            gm AS (
-              SELECT doc_id, text,
-                     cast(CASE WHEN length(trim(text)) = 0 THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                          END as bigint) n_words,
-                     cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                          as bigint) alpha,
-                     cast(len(string_split(text, chr(10))) as bigint) nl,
-                     cast(len(string_split(text, chr(10)))
-                          - len(list_distinct(string_split(text, chr(10))))
-                          as bigint) ndl,
-                     cast(len(list_filter(
-                            ['the','a','and','of','to','is','in','that','it'],
-                            w -> list_contains(
-                              list_distinct(regexp_extract_all(lower(text),
-                                                               '\\w+')),
-                              w))) as bigint) n_stop
-              FROM cleaned),
-            gated AS (
-              SELECT doc_id, text FROM gm
-              WHERE n_words >= 50
-                AND (CASE WHEN n_words = 0 THEN 0
-                     ELSE floor(1000.0 * alpha / n_words) END)
-                    BETWEEN 3000 AND 10000
-                AND floor(1000.0 * ndl / nl) <= 300
-                AND n_stop >= 2),
-            keyed AS (
-              SELECT cast(doc_id as bigint) doc_id,
-                     greatest(1, len(regexp_extract_all(lower(text),
-                                                        '\\w+'))) n_tokens,
-                     (({_md5_prefix_int_sql("cast(doc_id as varchar)")})
-                      % 1000000 + 1) / 1000000.0 u
-              FROM gated)
-            SELECT doc_id, cast(n_tokens as bigint) n_tokens,
-                   cast(floor(1000000.0 * ln(u) / n_tokens) as bigint)
-                       key_x1e6
-            FROM keyed ORDER BY key_x1e6 DESC, doc_id ASC LIMIT 50""",
+            gated AS ({_gated_sql("cleaned")})
+            {_aes_sql("gated")}
+            ORDER BY key_x1e6 DESC, doc_id ASC LIMIT 50""",
         # Product quantization: generated per-subspace twins.
         "emb_pq_encode": _pq_sql(),
         "ann_pq_adc_topk": _pq_adc_sql(),
@@ -2452,15 +2194,7 @@ def oracle_sql() -> dict[str, str]:
         # shingle/jaccard/signature fragments; LEFT JOIN counts misses).
         "dedup_minhash_recall": f"""
             WITH {_SHINGLES},
-            sig AS (SELECT doc_id,
-          {sigs}
-                FROM shl),
-            bands AS (
-  {bands}),
-            cand AS (SELECT DISTINCT x.doc_id da, y.doc_id db
-                     FROM bands x JOIN bands y
-                     ON x.band = y.band AND x.band_key = y.band_key
-                        AND x.doc_id < y.doc_id),
+            {_MINHASH_CANDS},
             l AS (SELECT cand.da, cand.db
                   FROM cand JOIN jac ON cand.da = jac.da AND cand.db = jac.db
                   WHERE jac.jacc_x1000 >= 100),
@@ -2475,46 +2209,20 @@ def oracle_sql() -> dict[str, str]:
         # A-ES weighted sampling: same md5 coin, division-first ln on
         # the 1e6 grid, top-k with doc_id tiebreak.
         "corpus_sample_weighted": f"""
-            WITH b AS (
-              SELECT cast(doc_id as bigint) doc_id,
-                     greatest(1, len(regexp_extract_all(lower(text),
-                                                        '\\w+'))) n_tokens,
-                     (({_md5_prefix_int_sql("cast(doc_id as varchar)")})
-                      % 1000000 + 1) / 1000000.0 u
-              FROM documents)
-            SELECT doc_id, cast(n_tokens as bigint) n_tokens,
-                   cast(floor(1000000.0 * ln(u) / n_tokens) as bigint)
-                       key_x1e6
-            FROM b ORDER BY key_x1e6 DESC, doc_id ASC LIMIT 100""",
+            {_aes_sql("documents")}
+            ORDER BY key_x1e6 DESC, doc_id ASC LIMIT 100""",
         "corpus_sample_weighted_stratified": f"""
-            WITH b AS (
-              SELECT source, cast(doc_id as bigint) doc_id,
-                     greatest(1, len(regexp_extract_all(lower(text),
-                                                        '\\w+'))) n_tokens,
-                     (({_md5_prefix_int_sql("cast(doc_id as varchar)")})
-                      % 1000000 + 1) / 1000000.0 u
-              FROM documents),
-            kx AS (
-              SELECT source, doc_id, cast(n_tokens as bigint) n_tokens,
-                     cast(floor(1000000.0 * ln(u) / n_tokens) as bigint)
-                         key_x1e6
-              FROM b)
+            WITH kx AS ({_aes_sql("documents", "source, ")})
             SELECT source, doc_id, n_tokens, key_x1e6,
                    cast(row_number() OVER (
                      PARTITION BY source
                      ORDER BY key_x1e6 DESC, doc_id ASC) as bigint) rk
             FROM kx
             QUALIFY rk <= 20""",
-        "doc_quality_deciles": r"""
+        "doc_quality_deciles": f"""
             WITH b AS (
               SELECT source, cast(doc_id as bigint) doc_id,
-                     cast(floor(
-                       (CASE WHEN length(text) = 0 THEN 0.0 ELSE
-                           least(1.0, length(text) / 100.0)
-                           * (length(regexp_replace(text, '[^A-Za-z0-9\s]',
-                                                    '', 'g'))
-                              / cast(length(text) as double))
-                        END) * 1000000 + 0.5) as bigint) q_x1e6
+                     {_Q_X1E6}
               FROM documents),
             d AS (
               SELECT source, q_x1e6,
@@ -2528,15 +2236,9 @@ def oracle_sql() -> dict[str, str]:
                    cast(max(q_x1e6) as bigint) max_q_x1e6,
                    cast(sum(q_x1e6) as bigint) sum_q_x1e6
             FROM d GROUP BY source, decile""",
-        "doc_quality_decile_bounds": r"""
+        "doc_quality_decile_bounds": f"""
             WITH d AS (
-              SELECT source, cast(floor(
-                       (CASE WHEN length(text) = 0 THEN 0.0 ELSE
-                           least(1.0, length(text) / 100.0)
-                           * (length(regexp_replace(text, '[^A-Za-z0-9\s]',
-                                                    '', 'g'))
-                              / cast(length(text) as double))
-                        END) * 1000000 + 0.5) as bigint) q_x1e6
+              SELECT source, {_Q_X1E6}
               FROM documents),
             bo AS (
               SELECT source,
@@ -2641,17 +2343,11 @@ def oracle_sql() -> dict[str, str]:
             FROM h""",
         # Per-source curation telemetry (exact-dup share via md5 group
         # sizes; quality = per-doc floored x1e6 ints so means are exact).
-        "corpus_source_stats": r"""
+        "corpus_source_stats": f"""
             WITH b AS (
               SELECT source, lang, md5(text) h,
                      cast(length(text) as bigint) n_chars,
-                     cast(floor(
-                       (CASE WHEN length(text) = 0 THEN 0.0 ELSE
-                           least(1.0, length(text) / 100.0)
-                           * (length(regexp_replace(text, '[^A-Za-z0-9\s]',
-                                                    '', 'g'))
-                              / cast(length(text) as double))
-                        END) * 1000000 + 0.5) as bigint) q_x1e6
+                     {_Q_X1E6}
               FROM documents),
             g AS (SELECT h, cast(count(*) as bigint) group_sz
                   FROM b GROUP BY h)

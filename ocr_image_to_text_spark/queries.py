@@ -3240,9 +3240,11 @@ def corpus_bpe_encode(spark, sf_dir, n_merges: int = 3):
     each document's token count under the learned tokenizer. Scale: the
     trainer loop runs entirely on the compacted word-TYPE frame
     (weighted by count — O(vocab) per iteration, never O(corpus)); each
-    chosen merge is a 1-row broadcast; greedy left-to-right
-    non-overlapping application IS literal string `replace` in both
-    engines (the r4-proven rule); the encoded vocabulary is a
+    chosen merge is a 1-row broadcast; a merge applies symbol-wise,
+    greedy left to right: with every symbol padded by a space on each
+    side, literal `replace` (non-overlapping in both engines) never
+    joins 'h e' inside 'x th e' and merges both halves of 'h e h e';
+    the encoded vocabulary is a
     vocab-sized dimension the occurrence stream equi-joins on the word
     key (hint-free — broadcastable when the vocab fits, shuffle-join at
     10^7-type corpus scale). Output: (doc_id, n_words, n_bpe_tokens)."""
@@ -3272,9 +3274,10 @@ def corpus_bpe_encode(spark, sf_dir, n_merges: int = 3):
              .groupBy("pair").agg(F.sum("n").alias("c"))
              .orderBy(F.desc("c"), F.asc("pair")).limit(1)
              .select("pair"))
-        cur = cur.crossJoin(F.broadcast(p)).select(
-            "w",
-            F.expr("replace(sw, pair, replace(pair, ' ', ''))")
+        cur = cur.crossJoin(F.broadcast(p)).select("w", F.expr(
+            "replace(trim(replace(concat(' ', replace(sw, ' ', '  '), ' '),"
+            " concat(' ', replace(pair, ' ', '  '), ' '),"
+            " concat(' ', replace(pair, ' ', ''), ' '))), '  ', ' ')")
             .alias("sw"), "n")
     enc = cur.select(
         "w", F.size(F.split("sw", " ")).cast("long").alias("n_sym"))

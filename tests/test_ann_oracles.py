@@ -1,7 +1,8 @@
 """The ANN family against its DuckDB twins: exact cosine, LSH, IVF, IVF
 recall, SemDeDup, PQ and IVFPQ each equal `oracle_sql()[name]` — the
 same columns and, ignoring order, the same rows (the comparison
-tools/check_queries.py makes)."""
+tools/check_queries.py makes). The dedup and curation queries whose
+twins are built from the same shared SQL fragments get the same check."""
 
 from __future__ import annotations
 
@@ -18,6 +19,16 @@ ANN_QUERIES = [
     "ann_ivfpq_residual_topk",
 ]
 
+# Twins built from the shared MinHash, SimHash, components, Gopher, dedup,
+# packing, A-ES and DSIR fragments.
+CURATION_QUERIES = [
+    "dedup_clusters", "dedup_clusters_star", "dedup_apply_minhash",
+    "corpus_dsir_weights", "corpus_pack_sequences",
+    "corpus_curation_pipeline", "corpus_pipeline_v2", "corpus_pipeline_v3",
+    "corpus_pipeline_v4", "corpus_sample_weighted",
+    "corpus_sample_weighted_stratified", "corpus_decontaminate_anti",
+]
+
 
 def _by_name(cols, rows):
     """Rows with their columns in name order, sorted (NULLs last)."""
@@ -31,14 +42,15 @@ def duck():
     import duckdb
 
     con = duckdb.connect()
-    con.sql("create view embeddings as select * from read_parquet("
-            f"'{os.path.join(SF, 'embeddings.parquet')}')")
+    for t in ("embeddings", "documents"):
+        con.sql(f"create view {t} as select * from read_parquet("
+                f"'{os.path.join(SF, t + '.parquet')}')")
     yield con
     con.close()
 
 
 @needs_testdata
-@pytest.mark.parametrize("name", ANN_QUERIES)
+@pytest.mark.parametrize("name", ANN_QUERIES + CURATION_QUERIES)
 def test_ann_query_matches_duckdb_oracle(spark, duck, name):
     import __spark_entry__ as entrymod
     from ocr_image_to_text_spark.cachectl import release_caches

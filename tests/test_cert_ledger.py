@@ -57,3 +57,30 @@ def test_never_certified_queries_sit_in_certified_prefix():
              and n not in front]
     assert not stale, (
         f"never-driver-certified queries outside the prefix: {stale}")
+
+
+def test_hash_is_independent_of_checkout_root(monkeypatch):
+    """An oracle reading golden parquet (extract_rollup) or the transcripts
+    (conversation_salted_join) names absolute paths; the ledger hash must
+    not change when the same oracle names another checkout root, or a
+    warehouse dir set by SPARK_GRAFT_WAREHOUSE."""
+    import __spark_entry__ as entrymod
+    from ocr_image_to_text_spark.transcripts import warehouse_dir
+
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    transcripts, root = os.path.join(warehouse_dir(), "transcripts"), cert_ledger.REPO
+    for name in ("extract_rollup", "conversation_salted_join"):
+        fn, oracle = qs[name], oracles[name]
+        assert root in oracle or transcripts in oracle
+        h = cert_ledger.query_hash(fn, oracle)
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_WAREHOUSE", "/data/warehouse")
+            moved = oracle.replace(transcripts, "/data/warehouse/transcripts")
+            assert cert_ledger.query_hash(fn, moved) == h, name
+        with monkeypatch.context() as m:
+            # another checkout, with its default warehouse dir
+            other = "/srv/other/checkout"
+            m.setattr(cert_ledger, "REPO", other)
+            m.setenv("SPARK_GRAFT_WAREHOUSE", other + "/warehouse")
+            moved = oracle.replace(root, other)
+            assert cert_ledger.query_hash(fn, moved) == h, name

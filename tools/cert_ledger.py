@@ -8,7 +8,9 @@ ledger records, per query, the last certification round and a source
 hash of the query function plus everything it transitively references
 (same-package functions/classes at FUNCTION granularity — so an edit to
 an unrelated function in the same module does not flag it — plus
-UPPERCASE constants and the DuckDB oracle string). A pytest
+UPPERCASE constants and the DuckDB oracle string, with the checkout root
+and the warehouse dir replaced by fixed placeholders so the hash does not
+depend on where the repo is checked out). A pytest
 (tests/test_cert_ledger.py) asserts that any query whose current hash
 differs from its ledger hash sits inside the driver's certified prefix
 (the first BUDGET entries of queries()), i.e. drifted code must rejoin
@@ -173,11 +175,25 @@ def _walk(fn, seen: set, sources: list) -> None:
                 sources.append(f"{mod_name}.{item}={v!r}")
 
 
+def _portable(oracle: str) -> str:
+    """The oracle text with the warehouse dir (SPARK_GRAFT_WAREHOUSE or the
+    checkout's warehouse/) and the checkout root replaced by placeholders:
+    golden and transcript paths then hash the same from any checkout."""
+    from ocr_image_to_text_spark.transcripts import warehouse_dir
+
+    for path, tag in ((warehouse_dir(), "<warehouse>"),
+                      (os.path.join(REPO, "warehouse"), "<warehouse>"),
+                      (REPO, "<repo>")):
+        oracle = oracle.replace(path, tag)
+    return oracle
+
+
 def query_hash(fn, oracle: str | None) -> str:
     seen: set = set()
     sources: list[str] = []
     _walk(fn, seen, sources)
-    blob = "\n<<::>>\n".join(sources) + "\n<<oracle>>\n" + (oracle or "<none>")
+    blob = ("\n<<::>>\n".join(sources) + "\n<<oracle>>\n"
+            + _portable(oracle or "<none>"))
     return hashlib.md5(blob.encode("utf-8")).hexdigest()
 
 
