@@ -84,3 +84,23 @@ def test_hash_is_independent_of_checkout_root(monkeypatch):
             m.setenv("SPARK_GRAFT_WAREHOUSE", other + "/warehouse")
             moved = oracle.replace(root, other)
             assert cert_ledger.query_hash(fn, moved) == h, name
+
+
+def test_walk_reaches_udf_kernels_and_locally_imported_modules():
+    """A `@pandas_udf` is hashed through the function it wraps (not
+    PySpark's wrapper), and a function-local `from . import multimodal as
+    mm` walks the `mm.<name>` attributes the query calls: an edit to the
+    kernel must drift the query."""
+    import inspect
+
+    import __spark_entry__ as entrymod
+    from ocr_image_to_text_spark import multimodal
+    from ocr_image_to_text_spark.operators import angle, overlap
+
+    qs = entrymod.queries()
+    for name, kernel in (("extract_angle_mode", angle.angle_kernel),
+                         ("extract_box_overlaps", overlap.overlap_kernel),
+                         ("media_image_features", multimodal.image_features)):
+        sources: list[str] = []
+        cert_ledger._walk(qs[name], set(), sources)
+        assert inspect.getsource(kernel) in sources, name

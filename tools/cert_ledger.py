@@ -29,7 +29,10 @@ Lifecycle (per round):
 
 Hash granularity notes: module references (`dedup.foo(...)`) resolve the
 attribute actually named in the caller's code; function-local
-`from .mod import name` imports are caught by a source regex; values of
+`from .mod import name` imports are caught by a source regex, and an
+imported package module (`from . import multimodal as mm`) is walked like
+a module-level one; a decorated function (`@pandas_udf`) is walked as the
+function it wraps (`inspect.unwrap`); values of
 UPPERCASE module constants are hashed by repr (lowercase/underscore
 names are runtime caches, skipped).
 """
@@ -90,7 +93,27 @@ def _is_pkg_obj(v) -> bool:
     return mod == PKG or mod.startswith(PKG + ".")
 
 
+def _walk_obj(v, name: str, owner: str, seen: set, sources: list) -> None:
+    """Hash one referenced package function, class or UPPERCASE constant;
+    `owner` prefixes a constant read off another module."""
+    if inspect.isfunction(v) and _is_pkg_obj(v):
+        _walk(v, seen, sources)
+    elif inspect.isclass(v) and _is_pkg_obj(v):
+        ckey = (v.__qualname__, v.__module__)
+        if ckey not in seen:
+            seen.add(ckey)
+            try:
+                sources.append(inspect.getsource(v))
+            except (OSError, TypeError):
+                sources.append(repr(v))
+    elif isinstance(v, _CONST_TYPES + (dict, list)) and _is_const_name(name):
+        sources.append(f"{owner}{name}={v!r}")
+
+
 def _walk(fn, seen: set, sources: list) -> None:
+    # a decorated kernel (`@pandas_udf`, `functools.wraps`) is walked as
+    # the function it wraps: the wrapper's code and globals are PySpark's
+    fn = inspect.unwrap(fn)
     key = getattr(fn, "__qualname__", None), getattr(fn, "__module__", None)
     if key in seen:
         return
@@ -116,39 +139,14 @@ def _walk(fn, seen: set, sources: list) -> None:
     pkg_modules = []
     for n in names:
         v = g.get(n)
-        if v is None:
-            continue
         if isinstance(v, types.ModuleType):
             if v.__name__.startswith(PKG):
                 pkg_modules.append(v)
-        elif inspect.isfunction(v) and _is_pkg_obj(v):
-            _walk(v, seen, sources)
-        elif inspect.isclass(v) and _is_pkg_obj(v):
-            ckey = (v.__qualname__, v.__module__)
-            if ckey not in seen:
-                seen.add(ckey)
-                try:
-                    sources.append(inspect.getsource(v))
-                except (OSError, TypeError):
-                    sources.append(repr(v))
-        elif isinstance(v, _CONST_TYPES) and _is_const_name(n):
-            sources.append(f"{n}={v!r}")
-        elif isinstance(v, (dict, list)) and _is_const_name(n):
-            sources.append(f"{n}={v!r}")
-    # module-attribute references: `dedup.minhash_lsh_pairs` names both
-    # "dedup" and "minhash_lsh_pairs" in co_names
-    for m in pkg_modules:
-        for n in names:
-            v = getattr(m, n, None)
-            if v is None:
-                continue
-            if inspect.isfunction(v) and _is_pkg_obj(v):
-                _walk(v, seen, sources)
-            elif (isinstance(v, _CONST_TYPES + (dict, list))
-                    and _is_const_name(n)):
-                sources.append(f"{m.__name__}.{n}={v!r}")
-    # function-local `from .mod import name` imports (parenthesized
-    # multi-line import lists supported; names never cross a newline)
+        elif v is not None:
+            _walk_obj(v, n, "", seen, sources)
+    # function-local `from .mod import name [as alias]` imports
+    # (parenthesized multi-line import lists supported; names never cross
+    # a newline); an imported package module joins the module walk below
     for mod_suffix, imported in _LOCAL_IMPORT_RE.findall(src):
         mod_name = PKG + ("." + mod_suffix if mod_suffix else "")
         try:
@@ -156,23 +154,20 @@ def _walk(fn, seen: set, sources: list) -> None:
         except ImportError:
             continue
         imported = imported.strip("()").replace("\n", ",")
-        for item in (i.strip() for i in imported.split(",")):
+        for item in (i.split(" as ")[0].strip() for i in imported.split(",")):
             v = getattr(m, item, None)
-            if v is None:
-                continue
-            if inspect.isfunction(v) and _is_pkg_obj(v):
-                _walk(v, seen, sources)
-            elif inspect.isclass(v) and _is_pkg_obj(v):
-                ckey = (v.__qualname__, v.__module__)
-                if ckey not in seen:
-                    seen.add(ckey)
-                    try:
-                        sources.append(inspect.getsource(v))
-                    except (OSError, TypeError):
-                        sources.append(repr(v))
-            elif (isinstance(v, _CONST_TYPES + (dict, list))
-                    and _is_const_name(item)):
-                sources.append(f"{mod_name}.{item}={v!r}")
+            if isinstance(v, types.ModuleType):
+                if v.__name__.startswith(PKG):
+                    pkg_modules.append(v)
+            elif v is not None:
+                _walk_obj(v, item, mod_name + ".", seen, sources)
+    # module-attribute references: `dedup.minhash_lsh_pairs` names both
+    # "dedup" and "minhash_lsh_pairs" in co_names
+    for m in pkg_modules:
+        for n in names:
+            v = getattr(m, n, None)
+            if v is not None:
+                _walk_obj(v, n, m.__name__ + ".", seen, sources)
 
 
 def _portable(oracle: str) -> str:
