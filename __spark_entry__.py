@@ -54,8 +54,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 47 queries whose code drifted
-    # since r5; (B) the 3 oldest remaining certificates, which push the
+    # The current prefix, in order: (A) the 49 queries whose code drifted
+    # since r5; (B) the oldest remaining certificate, which pushes the
     # next 25 just past the prefix.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
@@ -120,14 +120,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_decontaminate_anti": q.corpus_decontaminate_anti,
         #     ... plus the BPE encoder (merges applied symbol-wise) ---
         "corpus_bpe_encode": q.corpus_bpe_encode,
-        # --- (B) the oldest remaining certificates: three of the r2 ones ---
-        "events_hourly": q.events_hourly,
-        "events_sessions": q.events_sessions,
+        #     ... plus the image and audio features (decode or fail: a
+        #     payload mmref rejects raises, no stub decode) ---
         "media_image_features": q.media_image_features,
+        "media_audio_features": q.media_audio_features,
+        # --- (B) the oldest remaining certificate: one of the r2 ones ---
+        "events_hourly": q.events_hourly,
         # ---- end of the 50-entry certified prefix ----
         # --- (B) continued: the last r2 certificate and the r3 ones
         #     displaced by the drifted block, in registry order ---
-        "media_audio_features": q.media_audio_features,
+        "events_sessions": q.events_sessions,
         "extract_angle_mode": q.extract_angle_mode,
         "doc_token_counts": q.doc_token_counts,
         "doc_fingerprints": q.doc_fingerprints,

@@ -1,24 +1,21 @@
 """Multimodal (image/audio/video) columns as opaque binary + typed metadata.
 
 Training-data-pipeline components (build mandate): media payloads travel
-as `binary` columns with a typed metadata struct; decode / feature-extract
-/ resize / frame-sample run as Arrow-batched pandas UDFs via mapInPandas.
+as `binary` columns with a typed metadata struct; decode + feature-extract
+run as Arrow-batched pandas UDFs via mapInPandas.
 
-Decode status (this container ships no codec libraries, so only formats
-decodable from first principles are real):
+Decode or fail: only formats decodable from first principles (no codec
+libraries) are read, and any other payload raises, as the numpy-free
+oracle (mmref.py) does:
 
-  * image — REAL decode for uncompressed 24-bit BMP (BITMAPINFOHEADER)
-    and binary PPM (P6): both are public, header+raster formats parsed
-    here with struct/numpy. Unknown magics fall back to the clearly
-    marked deterministic stub.
-  * audio — REAL decode for PCM16 WAV via the stdlib `wave` module.
-  * video — REAL decode for RIFF/AVI parsed from first principles like
-    the BMP/WAV codecs: uncompressed 'vids'/'DIB ' 24-bit BI_RGB '00db'
-    frames AND BI_RLE8-compressed 8-bit palette frames ('MRLE' '00dc'
-    chunks — run-length encoding decoded in pure numpy/stdlib, no
-    ffmpeg). Codecs beyond those (H.264 etc., which genuinely need
-    ffmpeg) fall back to the clearly marked deterministic stub in
-    frame_sample.
+  * image — uncompressed 24-bit BMP (BITMAPINFOHEADER) and binary PPM
+    (P6): both are public, header+raster formats parsed here with
+    struct/numpy.
+  * audio — PCM16 WAV via the stdlib `wave` module.
+  * video — RIFF/AVI parsed from first principles like the BMP/WAV
+    codecs: uncompressed 'vids'/'DIB ' 24-bit BI_RGB '00db' frames AND
+    BI_RLE8-compressed 8-bit palette frames ('MRLE' '00dc' chunks —
+    run-length encoding decoded in pure numpy/stdlib, no ffmpeg).
 
 Scale notes: payloads dominate row size, so batches are kept small via a
 pre-UDF repartition on media_id and `spark.sql.execution.arrow.
@@ -72,11 +69,6 @@ def _rng_bytes(seed: bytes, n: int) -> np.ndarray:
         pos += take
         counter += 1
     return out
-
-
-def _decode_image_stub(payload: bytes, width: int, height: int) -> np.ndarray:
-    """STUB — deterministic fake decode (unknown codecs / video frames)."""
-    return _rng_bytes(payload[:64], width * height * 3).reshape(height, width, 3)
 
 
 # --- REAL image codecs (public header+raster formats, no libraries) ---------
@@ -156,13 +148,13 @@ def decode_ppm(payload: bytes) -> np.ndarray:
                          offset=pos).reshape(h, w, 3).copy()
 
 
-def decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Dispatch on magic bytes; unknown codecs fall back to the stub."""
+def decode_image(payload: bytes) -> np.ndarray:
+    """Dispatch on magic bytes; any other codec raises."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:2] == b"P6":
         return decode_ppm(payload)
-    return _decode_image_stub(payload, width, height)
+    raise ValueError(f"unsupported image codec (magic {payload[:2]!r})")
 
 
 # --- REAL audio codec (PCM16 WAV via stdlib wave) ---------------------------
@@ -180,33 +172,14 @@ def encode_wav(pcm: np.ndarray, rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """Decode PCM16 WAV → (float32 samples in [-1, 1], sample rate)."""
+def decode_audio_i16(payload: bytes) -> np.ndarray:
+    """PCM16 WAV → int16 samples (as int64), the exact-arithmetic path for
+    feature extraction; a non-WAV or non-PCM16 payload raises."""
     with wave.open(io.BytesIO(payload), "rb") as wf:
         if wf.getsampwidth() != 2:
             raise ValueError("only PCM16 supported")
-        rate = wf.getframerate()
         raw = wf.readframes(wf.getnframes())
-    pcm = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32767.0
-    return pcm, rate
-
-
-def _decode_audio_stub(payload: bytes, duration_ms: int,
-                       rate: int = 8000) -> np.ndarray:
-    """STUB — deterministic fake PCM for non-WAV payloads."""
-    n = max(duration_ms * rate // 1000, 1)
-    raw = _rng_bytes(payload[:64], n)
-    return (raw.astype(np.float32) - 127.5) / 127.5
-
-
-def decode_audio_i16(payload: bytes, duration_ms: int) -> np.ndarray:
-    """Int16 samples — the exact-arithmetic path for feature extraction."""
-    if payload[:4] == b"RIFF":
-        with wave.open(io.BytesIO(payload), "rb") as wf:
-            raw = wf.readframes(wf.getnframes())
-        return np.frombuffer(raw, dtype="<i2").astype(np.int64)
-    pcm = _decode_audio_stub(payload, duration_ms)
-    return np.round(pcm * 32767.0).astype(np.int64)
+    return np.frombuffer(raw, dtype="<i2").astype(np.int64)
 
 
 IMAGE_FEATURES_SCHEMA = (
@@ -225,9 +198,8 @@ def image_features(media: DataFrame, partitions: int | None = None) -> DataFrame
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                img = decode_image(bytes(payload), int(meta["width"]),
-                                   int(meta["height"]))
+            for mid, payload in zip(b["media_id"], b["payload"]):
+                img = decode_image(bytes(payload))
                 h, w = img.shape[:2]
                 # _frame_features: integer sums are exact in float64
                 # (< 2^53) and the 8x8 average hash is pure integer
@@ -243,45 +215,6 @@ def image_features(media: DataFrame, partitions: int | None = None) -> DataFrame
     if partitions:
         src = src.repartition(partitions, "media_id")
     return src.mapInPandas(gen, IMAGE_FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = "media_id long, width int, height int, payload binary"
-
-
-def resize_nn(img: np.ndarray, nw: int, nh: int) -> np.ndarray:
-    """Nearest-neighbor resample (pure numpy, deterministic)."""
-    h, w = img.shape[:2]
-    yi = np.minimum((np.arange(nh) * (h / nh)).astype(np.int64), h - 1)
-    xi = np.minimum((np.arange(nw) * (w / nw)).astype(np.int64), w - 1)
-    return img[yi][:, xi]
-
-
-def image_resize(media: DataFrame, max_side: int = 256,
-                 partitions: int | None = None) -> DataFrame:
-    """Ratio-preserving resize cap (analog of src/ocr/nanonets_ocr.py:59-65).
-
-    REAL for BMP/PPM payloads: decode → nearest-neighbor resample →
-    re-encode BMP. Unknown codecs resize the stub-decoded array (shape
-    contract identical)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                img = decode_image(bytes(payload), int(meta["width"]),
-                                   int(meta["height"]))
-                h, w = img.shape[:2]
-                scale = min(1.0, max_side / max(w, h))
-                nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                out = encode_bmp(resize_nn(img, nw, nh))
-                rows.append((int(mid), nw, nh, out))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height",
-                                              "payload"])
-
-    src = media.filter(F.col("kind") == "image")
-    if partitions:
-        src = src.repartition(partitions, "media_id")
-    return src.mapInPandas(gen, RESIZE_SCHEMA)
 
 
 # --- REAL video container (uncompressed RIFF/AVI, 'DIB ' raw frames) --------
@@ -478,48 +411,6 @@ def decode_avi(payload: bytes) -> tuple[list[np.ndarray], int]:
     return frames, usec
 
 
-FRAMES_SCHEMA = "media_id long, frame_idx int, ts_ms int, frame binary"
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000,
-                 partitions: int | None = None) -> DataFrame:
-    """Sample video frames every `every_ms` — one output row per tick.
-
-    REAL decode for uncompressed RIFF/AVI payloads: the emitted frame is
-    the container frame covering the tick timestamp (idx = ts·1000 //
-    usec_per_frame, clamped). Unknown codecs keep the deterministic stub
-    frames; the explode shape (media_id, frame_idx, ts_ms, frame) is the
-    contract either way.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                w, h = int(meta["width"]), int(meta["height"])
-                dur = int(meta["duration_ms"])
-                payload = bytes(payload)
-                avi = None
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    avi = decode_avi(payload)
-                for i, ts in enumerate(range(0, max(dur, 1), every_ms)):
-                    if avi is not None:
-                        frames, usec = avi
-                        idx = min(ts * 1000 // usec, len(frames) - 1)
-                        frame = frames[idx]
-                    else:
-                        frame = _decode_image_stub(
-                            payload + ts.to_bytes(4, "big"), w, h)
-                    rows.append((int(mid), i, ts, frame.tobytes()))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "ts_ms",
-                                              "frame"])
-
-    src = media.filter(F.col("kind") == "video")
-    if partitions:
-        src = src.repartition(partitions, "media_id")
-    return src.mapInPandas(gen, FRAMES_SCHEMA)
-
-
 VIDEO_FRAMES_SCHEMA = (
     "media_id long, frame_idx int, ts_ms int, "
     "mean_r double, mean_g double, mean_b double, phash long"
@@ -573,7 +464,7 @@ AUDIO_FEATURES_SCHEMA = "media_id long, duration_ms int, rms double, zero_cross 
 
 
 def audio_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Decode PCM (stub) → RMS energy + zero-crossing count."""
+    """Decode PCM16 WAV → RMS energy + zero-crossing count."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -583,7 +474,7 @@ def audio_features(media: DataFrame, partitions: int | None = None) -> DataFrame
                 # exact path: int16 squared sums are exact integers, so
                 # rms = sqrt(ssq / (n·32767²)) is bit-identical to the
                 # numpy-free oracle (mmref.py)
-                i16 = decode_audio_i16(bytes(payload), dur)
+                i16 = decode_audio_i16(bytes(payload))
                 ssq = int((i16 * i16).sum())
                 n = len(i16)
                 rms = float(np.sqrt(ssq / (n * 32767.0 * 32767.0)))

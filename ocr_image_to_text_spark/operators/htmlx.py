@@ -197,13 +197,11 @@ def _finish(c: "_Collector") -> tuple[str, int, int]:
 
 
 def extract_html_stdlib(html_text: str) -> tuple[str, int, int]:
-    """Stdlib-HTMLParser path — the arbiter the fast scan must equal."""
+    """Stdlib-HTMLParser path — the arbiter the fast scan must equal. A
+    parser error (e.g. `<![foo]>`) raises, as it does in pyref."""
     c = _Collector()
-    try:
-        c.feed(html_text)
-        c.close()
-    except Exception:
-        pass
+    c.feed(html_text)
+    c.close()
     return _finish(c)
 
 

@@ -235,12 +235,10 @@ def _line_structure_counts(lines: list[str]) -> tuple[int, int, int]:
 def layout_analysis_json(payload: str) -> tuple[int, int, int, int, int, int]:
     """Parse a boxes payload and produce the layout_analysis summary:
     (total_elements, line_groups, n_columns, n_titles, n_bullets,
-    n_numbered)."""
-    try:
-        payload_obj = json.loads(payload)
-    except (ValueError, TypeError):
-        return 0, 0, 0, 0, 0, 0
-    boxes = payload_obj.get("boxes") or []
+    n_numbered). A payload pyref cannot read (malformed JSON, `"boxes":
+    null`) raises."""
+    payload_obj = json.loads(payload)
+    boxes = payload_obj.get("boxes", [])
     kept = [b for b in boxes if b[2] > CONF_THRESHOLD]
     if not kept:
         return 0, 0, 0, 0, 0, 0
@@ -262,13 +260,11 @@ def extract_boxes_json(payload: str, variant: str = "v2"
     sum/len fold, scaled to int).
 
     Returns (extracted_text, n_tokens_kept, n_tokens_dropped, table_flag,
-    flat_text, avg_conf_x1e9).
+    flat_text, avg_conf_x1e9). A payload pyref.extract_turn cannot read
+    (malformed JSON, `"boxes": null`) raises.
     """
-    try:
-        payload_obj = json.loads(payload)
-    except (ValueError, TypeError):
-        return "", 0, 0, False, "", 0
-    boxes = payload_obj.get("boxes") or []
+    payload_obj = json.loads(payload)
+    boxes = payload_obj.get("boxes", [])
     n_total = len(boxes)
     kept = [b for b in boxes if b[2] > CONF_THRESHOLD]
     n_kept = len(kept)

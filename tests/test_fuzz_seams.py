@@ -6,20 +6,29 @@ on ARBITRARY input:
 
   * HTML block extraction: operators/htmlx._Collector (incremental depth
     counters) vs pyref._BlockCollector (the spec) on malformed markup —
-    unclosed tags, stray end tags, nested drops, script soup;
+    unclosed tags, stray end tags, nested drops, script soup, and markup
+    HTMLParser rejects (both sides must raise);
+  * boxes payloads pyref cannot read (truncated JSON, `"boxes": null`):
+    the engine decoders raise, as the oracle does;
   * kind classification: the JVM rlike sniffers (kind_col) vs
     pyref.classify_kind on hostile strings (checked in one Spark pass).
 """
 
 from __future__ import annotations
 
+import json
 import random
 
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ocr_image_to_text_spark import pyref
 from ocr_image_to_text_spark.operators.htmlx import extract_html_one
+from ocr_image_to_text_spark.operators.layout import (
+    extract_boxes_json,
+    layout_analysis_json,
+)
 
 TAGS = ["p", "div", "a", "nav", "footer", "span", "li", "ul", "script",
         "style", "table", "h1", "br", "aside", "main", "b", "custom"]
@@ -43,22 +52,58 @@ def html_soup(draw):
             parts.append(rng.choice([
                 "hello world", "  ", "link text", "第",
                 "a" * rng.randint(1, 40), "&amp; &lt;", "\n\n",
-                "click <a href='#'>here</a> now",
+                "click <a href='#'>here</a> now", "<![foo bar]>",
             ]))
     return "".join(parts)
 
 
+def _outcome(fn, *args):
+    """fn's result, or the type of the exception it raised: an engine
+    kernel must equal its oracle or raise as the oracle does."""
+    try:
+        return fn(*args)
+    except Exception as e:  # noqa: BLE001 - the type is the outcome
+        return type(e)
+
+
+def _pyref_html(html):
+    exp = pyref.extract_turn(html, "", variant="v2")
+    return exp["extracted_text"], exp["n_blocks_kept"], exp["n_blocks_dropped"]
+
+
 @given(html_soup())
+@example("<div>a<![foo bar]>b</div>")
 @settings(max_examples=300, deadline=None)
 def test_html_extractor_matches_pyref_on_soup(html):
-    got = extract_html_one(html)
-    exp = pyref.extract_turn(html, "", variant="v2")
     # pyref.extract_turn classifies first; force the html path comparison
-    if exp["kind"] != "html":
+    if pyref.classify_kind(html, "") != "html":
         return
-    assert got[0] == exp["extracted_text"]
-    assert got[1] == exp["n_blocks_kept"]
-    assert got[2] == exp["n_blocks_dropped"]
+    assert _outcome(extract_html_one, html) == _outcome(_pyref_html, html)
+
+
+_BOX = [[[10, 10], [60, 10], [60, 30], [10, 30]], "word", 0.9]
+MALFORMED_BOXES = [
+    json.dumps({"h": 600, "boxes": [_BOX, _BOX]})[:-9],  # truncated
+    '{"h": 600, "boxes": [',
+    '{"h": 600, "boxes": null}',
+]
+
+
+@pytest.mark.parametrize("payload", MALFORMED_BOXES)
+def test_unreadable_boxes_payload_raises_like_pyref(payload):
+    """A boxes payload pyref rejects makes both engine decoders raise the
+    same error, instead of returning an empty page."""
+    def turn(p):
+        return pyref.extract_turn("", p, variant="v2")["extracted_text"]
+
+    def analysis(p):
+        obj = json.loads(p)
+        return pyref.layout_analysis(obj.get("boxes", []), obj.get("h", 0))
+
+    want = _outcome(turn, payload)
+    assert isinstance(want, type) and issubclass(want, Exception)
+    assert _outcome(extract_boxes_json, payload) == want
+    assert _outcome(layout_analysis_json, payload) == _outcome(analysis, payload)
 
 
 ADVERSARIAL_PAYLOADS = [

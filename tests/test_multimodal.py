@@ -4,7 +4,8 @@ Image (BMP/PPM), audio (WAV) and video (AVI: BI_RGB 24-bit + BI_RLE8
 8-bit palette) decode are REAL — pinned by byte-exact encode→decode
 roundtrips below, plus a hand-built raster covering the RLE8 escape
 modes our encoder never emits. The Spark-side tests pin schemas,
-per-kind filtering, and run-to-run determinism across partitionings.
+per-kind filtering, run-to-run determinism across partitionings, and
+that a payload the oracle rejects makes the operator raise.
 """
 
 from __future__ import annotations
@@ -30,16 +31,10 @@ def test_ppm_roundtrip_and_comments():
 
 def test_wav_roundtrip():
     pcm = np.sin(np.linspace(0, 40, 4000)).astype(np.float32) * 0.7
-    out, rate = mm.decode_wav(mm.encode_wav(pcm, rate=8000))
-    assert rate == 8000
+    out = mm.decode_audio_i16(mm.encode_wav(pcm, rate=8000))
     assert out.shape == pcm.shape
-    assert np.abs(out - pcm).max() < 1.0 / 32000  # 16-bit quantization only
-
-
-def test_resize_nn_exact_on_integer_factor():
-    img = mm.synthetic_image(b"r", 32, 32)
-    half = mm.resize_nn(img, 16, 16)
-    assert (half == img[::2, ::2]).all()
+    # 16-bit quantization only
+    assert np.abs(out / 32767.0 - pcm).max() < 1.0 / 32000
 
 
 def test_image_features_schema_and_determinism(spark):
@@ -54,29 +49,6 @@ def test_image_features_schema_and_determinism(spark):
                                "mean_g", "mean_b", "phash"}
     assert 0.0 <= r.mean_r <= 255.0
     assert isinstance(r.phash, int)
-
-
-def test_image_resize_caps_max_side(spark):
-    media = mm.synthetic_media(spark, n=30)
-    out = mm.image_resize(media, max_side=40).collect()
-    for r in out:
-        assert max(r.width, r.height) <= 40
-        # output payload is a real BMP of the reported dimensions
-        img = mm.decode_bmp(bytes(r.payload))
-        assert img.shape == (r.height, r.width, 3)
-
-
-def test_frame_sample_fanout(spark):
-    media = mm.synthetic_media(spark, n=30)
-    frames = mm.frame_sample(media, every_ms=1000)
-    per = {r.media_id: r.n for r in
-           frames.groupBy("media_id").count().withColumnRenamed("count", "n")
-           .collect()}
-    metas = {r.media_id: r.meta.duration_ms
-             for r in media.filter("kind = 'video'").collect()}
-    assert per.keys() == metas.keys()
-    for mid, dur in metas.items():
-        assert per[mid] == len(range(0, max(dur, 1), 1000))
 
 
 def test_avi_roundtrip_exact():
@@ -134,23 +106,6 @@ def test_video_frame_features_real_decode(spark):
                 f["mean_r"], f["mean_g"], f["mean_b"], f["phash"])
             n_rows += 1
     assert n_rows == len(got)
-
-
-def test_frame_sample_real_avi_frames(spark):
-    """frame_sample now emits REAL container frames for AVI payloads:
-    the tick's frame equals the decoded container frame covering it."""
-    import numpy as np
-
-    media = mm.synthetic_media(spark, n=12)
-    sampled = {(r.media_id, r.frame_idx, r.ts_ms): bytes(r.frame)
-               for r in mm.frame_sample(media, every_ms=1000).collect()}
-    for mid, _k, payload, (_w, _h, dur, _c) in mm.synthetic_media_rows(12):
-        if _k != "video":
-            continue
-        frames, usec = mm.decode_avi(bytes(payload))
-        for i, ts in enumerate(range(0, max(dur, 1), 1000)):
-            idx = min(ts * 1000 // usec, len(frames) - 1)
-            assert sampled[(mid, i, ts)] == frames[idx].tobytes()
 
 
 def test_audio_features(spark):
@@ -243,3 +198,38 @@ def test_rle8_roundtrip_hypothesis():
         assert rows == [[tuple(px) for px in row] for row in img]
 
     check()
+
+
+def test_undecodable_payloads_raise_like_the_oracle(spark):
+    """Decode or fail: a payload mmref rejects (an unknown image magic, a
+    non-WAV audio payload, a PCM8 WAV) makes the Spark operator raise too,
+    instead of yielding features of made-up samples."""
+    import io
+    import wave
+
+    import pytest
+
+    from ocr_image_to_text_spark import mmref
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(1)
+        wf.setframerate(8000)
+        wf.writeframes(bytes(range(256)))
+    cases = [
+        (mm.image_features, mmref.image_features_py, "image",
+         b"GIF89a" + bytes(64), "unsupported image codec"),
+        (mm.audio_features, mmref.audio_features_py, "audio",
+         b"OggS" + bytes(64), "RIFF"),
+        (mm.audio_features, mmref.audio_features_py, "audio",
+         buf.getvalue(), "only PCM16"),
+    ]
+    for op, oracle, kind, payload, msg in cases:
+        with pytest.raises(Exception):
+            oracle(payload)
+        media = spark.createDataFrame(
+            [(1, kind, bytearray(payload), (8, 8, 500, "x"))], mm.MEDIA_SCHEMA)
+        with pytest.raises(Exception, match=msg):
+            op(media).collect()
+

@@ -3,7 +3,9 @@
 north_rule: "checkpoints per-partition completion with lineage + extraction
 metrics ... to a manifest table for resumable restarts". The test kills the
 job after one committed wave, resumes, and proves the union equals a
-single-shot run — and that the manifest records both runs' lineage.
+single-shot run — and that the manifest records both runs' lineage. The
+same holds for a crash inside a wave: after its rollup write, and after
+its spans write but before its manifest commit.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_image_to_text_spark.jobs import manifest
+from ocr_image_to_text_spark.jobs import extract_job, manifest
 from ocr_image_to_text_spark.jobs.extract_job import run_extract_job
 from ocr_image_to_text_spark.transcripts import ensure_transcripts
 
@@ -35,9 +37,16 @@ def tpath():
     return ensure_transcripts("t1")
 
 
-def test_kill_and_resume_matches_single_shot(spark, tmp_path_factory, tpath):
+@pytest.fixture(scope="module")
+def single_shot(spark, tmp_path_factory, tpath):
+    out = str(tmp_path_factory.mktemp("single_shot"))
+    run_extract_job(spark, tpath, out, n_buckets=N_BUCKETS, wave_size=N_BUCKETS)
+    return out
+
+
+def test_kill_and_resume_matches_single_shot(spark, tmp_path_factory, tpath,
+                                            single_shot):
     out_a = str(tmp_path_factory.mktemp("resume"))
-    out_b = str(tmp_path_factory.mktemp("single"))
 
     # Run A: crash after the first committed wave.
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -53,11 +62,10 @@ def test_kill_and_resume_matches_single_shot(spark, tmp_path_factory, tpath):
     assert summary["resumed_parts"] == len(done_parts)
     assert summary["processed_parts"] == N_BUCKETS - len(done_parts)
 
-    # Run B: fresh single-shot.
-    run_extract_job(spark, tpath, out_b, n_buckets=N_BUCKETS, wave_size=N_BUCKETS)
-
+    # Run B (the fixture): fresh single-shot.
     for sub in ("rollup", "spans"):
-        assert _collect_sorted(spark, out_a, sub) == _collect_sorted(spark, out_b, sub)
+        assert _collect_sorted(spark, out_a, sub) == \
+            _collect_sorted(spark, single_shot, sub)
 
     # Manifest: every bucket done exactly once, two distinct run lineages.
     m = spark.read.parquet(os.path.join(out_a, "_manifest"))
@@ -72,6 +80,47 @@ def test_kill_and_resume_matches_single_shot(spark, tmp_path_factory, tpath):
     got = done.agg(F.sum("n_turns"), F.sum("chars_out")).collect()[0]
     exp = roll.agg(F.count("*"), F.sum("chars_out")).collect()[0]
     assert (got[0], got[1]) == (exp[0], exp[1])
+
+
+def _manifest_totals(spark, out_dir):
+    done = spark.read.parquet(os.path.join(out_dir, "_manifest")) \
+        .filter("status = 'done'")
+    stats = [c for c, _ in extract_job._STATS] + ["n_oversized"]
+    return done.agg(*(F.sum(c).alias(c) for c in stats)).collect()[0].asDict()
+
+
+def _fail_on_call(target, n):
+    """``target`` wrapped to raise on its n-th call."""
+    calls = []
+
+    def wrapped(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == n:
+            raise RuntimeError("crash point")
+        return target(*args, **kwargs)
+    return wrapped
+
+
+@pytest.mark.parametrize("module, name", [
+    (extract_job, "spans_table"),  # after wave 2's rollup write
+    (manifest, "commit"),          # after wave 2's spans write
+], ids=["after_rollup_write", "before_manifest_commit"])
+def test_crash_inside_a_wave_resumes_row_exact(
+        spark, tmp_path, tpath, single_shot, monkeypatch, module, name):
+    out = str(tmp_path / "job")
+    with monkeypatch.context() as m:
+        m.setattr(module, name, _fail_on_call(getattr(module, name), 2))
+        with pytest.raises(RuntimeError, match="crash point"):
+            run_extract_job(spark, tpath, out, n_buckets=N_BUCKETS,
+                            wave_size=WAVE)
+    mdir = os.path.join(out, "_manifest")
+    assert manifest.done_parts(mdir) == set(range(WAVE))  # wave 1 only
+    s = run_extract_job(spark, tpath, out, n_buckets=N_BUCKETS, wave_size=WAVE)
+    assert (s["resumed_parts"], s["processed_parts"]) == (WAVE, N_BUCKETS - WAVE)
+    for sub in ("rollup", "spans"):
+        assert _collect_sorted(spark, out, sub) == \
+            _collect_sorted(spark, single_shot, sub)
+    assert _manifest_totals(spark, out) == _manifest_totals(spark, single_shot)
 
 
 def test_idempotent_rerun_no_op(spark, tmp_path_factory, tpath):
@@ -151,3 +200,18 @@ def test_waves_without_turns_commit_zero_rows(spark, tmp_path):
     assert {r.part_id: r.n_turns for r in m.collect()} == {0: 0, 1: 1, 2: 2, 3: 0}
     spans = spark.read.parquet(os.path.join(out, "spans"))
     assert spans.count() == 2  # the empty turn has no span
+
+
+def test_unreadable_boxes_payload_fails_its_wave(spark, tmp_path):
+    """A boxes payload the oracle cannot read fails the wave loudly:
+    no empty page is published and no manifest row is committed for it,
+    while earlier waves stay committed (c1 → bucket 2, c2 → bucket 1)."""
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [("c1", 0, "", '{"h": 600, "boxes": ['), ("c2", 0, "x", None)],
+        "conv_id string, turn_idx int, text string, tool string",
+    ).write.parquet(inp)
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="JSONDecodeError"):
+        run_extract_job(spark, inp, out, n_buckets=4, wave_size=1)
+    assert manifest.done_parts(os.path.join(out, "_manifest")) == {0, 1}

@@ -10,13 +10,16 @@ for the markers that matter at 100 TB:
   * ArrowEvalPython / MapInPandas — Python appears ONLY where a UDF is
     architecturally required (the extraction dispatch, X3 chunker, X14)
 
-Writes PLANS.md at the repo root. Usage: python tools/explain_audit.py [sf_dir]
+Writes PLANS.md at the repo root, each plan through `normalize_plan` so a
+rerun changes only plans that changed. Usage:
+python tools/explain_audit.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -29,6 +32,60 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# an operator's field line: `Output [2]: [a#1, f(b#2) AS c#3]`,
+# `Arguments: [g(a#1)#4], [pythonUDF0#5], 200`
+_FIELD = re.compile(r"^[A-Z][\w ]*(?: \[\d+\])?: (.*)$", re.M)
+_ITEM_ID = re.compile(r"#(\d+)L?$")
+
+
+def _items(field: str):
+    """The comma-separated items of a field line and of its top-level
+    [...] lists (commas inside parentheses do not split)."""
+    stack, start = "", 0
+    for i, ch in enumerate(field + ","):
+        if ch in "([":
+            stack += ch
+            if stack == "[":
+                start = i + 1
+        elif ch in ")]":
+            stack = stack[:-1]
+            if not stack and ch == "]":
+                yield field[start:i].strip()
+                start = i + 1
+        elif ch == "," and stack in ("", "["):
+            yield field[start:i].strip()
+            start = i + 1
+
+
+def _renumber(text: str, pattern: str, keep=None) -> str:
+    """Replace group 2 of each `pattern` match by its first-appearance
+    rank; a number outside `keep` (when given) stays as it is."""
+    ranks: dict[str, int] = {}
+
+    def sub(m):
+        if keep is not None and m.group(2) not in keep:
+            return m.group(0)
+        return m.group(1) + str(ranks.setdefault(m.group(2), len(ranks)))
+    return re.sub(pattern, sub, text)
+
+
+def normalize_plan(plan: str) -> str:
+    """A formatted plan without the session counters that change from run
+    to run: expression ids, `plan_id`s, RDD ids and lambda-variable
+    suffixes are renumbered in order of first appearance, and the checkout
+    root becomes `<repo>`. An expression id is a number that ends an item
+    of some operator's attribute list (or names a lambda variable), so a
+    literal such as `Brand#12` keeps its text."""
+    ids = {m.group(1) for f in _FIELD.finditer(plan)
+           for item in _items(f.group(1)) if (m := _ITEM_ID.search(item))}
+    ids |= set(re.findall(r"lambda \w+#(\d+)", plan))
+    plan = plan.replace(REPO, "<repo>")
+    plan = _renumber(plan, r"((?<=[\w)])#)(\d+)", ids)
+    plan = _renumber(plan, r"(plan_id=)(\d+)")
+    plan = _renumber(plan, r"(RDD\[)(\d+)")
+    return _renumber(plan, r"(lambda \w+?_)(\d+)")
 
 
 AUDITS = [
@@ -528,7 +585,7 @@ def main() -> None:
             failures.append(name)
         lines += [f"## {name} — {'OK' if ok else 'FAIL'}", "",
                   *[f"- {v}" for v in verdicts], "", "```",
-                  plan.strip()[:4000], "```", ""]
+                  normalize_plan(plan).strip()[:4000], "```", ""]
         print(f"{'OK  ' if ok else 'FAIL'} {name}", flush=True)
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
