@@ -104,3 +104,20 @@ def test_walk_reaches_udf_kernels_and_locally_imported_modules():
         sources: list[str] = []
         cert_ledger._walk(qs[name], set(), sources)
         assert inspect.getsource(kernel) in sources, name
+
+
+def test_hash_does_not_depend_on_what_was_imported_before():
+    """`from . import mmref` (in golden.ensure_media_golden) finds mmref on
+    the package only once some code imported it: the walker imports it
+    itself, so a hash reads the same in a fresh process and after a test
+    run that loaded every module."""
+    import subprocess
+
+    code = ("import sys; sys.path.insert(0, 'tools'); {pre}"
+            "import cert_ledger, __spark_entry__ as e; "
+            "print(cert_ledger.query_hash(e.queries()['media_video_frames'], None))")
+    out = [subprocess.run([sys.executable, "-c", code.format(pre=pre)],
+                          cwd=REPO, capture_output=True, text=True,
+                          check=True).stdout
+           for pre in ("", "import ocr_image_to_text_spark.mmref; ")]
+    assert out[0] == out[1]

@@ -62,7 +62,7 @@ def _outcome(fn, *args):
     kernel must equal its oracle or raise as the oracle does."""
     try:
         return fn(*args)
-    except Exception as e:  # noqa: BLE001 - the type is the outcome
+    except Exception as e:
         return type(e)
 
 

@@ -156,6 +156,13 @@ def _walk(fn, seen: set, sources: list) -> None:
         imported = imported.strip("()").replace("\n", ",")
         for item in (i.split(" as ")[0].strip() for i in imported.split(",")):
             v = getattr(m, item, None)
+            if v is None and hasattr(m, "__path__"):
+                # a submodule is bound on its package only once something
+                # imported it: import it, or the hash depends on that
+                try:
+                    v = importlib.import_module(f"{mod_name}.{item}")
+                except ImportError:
+                    continue
             if isinstance(v, types.ModuleType):
                 if v.__name__.startswith(PKG):
                     pkg_modules.append(v)
