@@ -232,4 +232,3 @@ def test_undecodable_payloads_raise_like_the_oracle(spark):
             [(1, kind, bytearray(payload), (8, 8, 500, "x"))], mm.MEDIA_SCHEMA)
         with pytest.raises(Exception, match=msg):
             op(media).collect()
-
