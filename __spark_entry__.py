@@ -54,9 +54,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lists as judge-verified but never certified by a CORRECTNESS run
     # (cheapest-first) and (C) 7 flagship re-certs; CORRECTNESS_r05
     # certified all 50, and they now follow the prefix in those blocks.
-    # The current prefix, in order: (A) the 49 queries whose code drifted
-    # since r5; (B) the oldest remaining certificate, which pushes the
-    # next 25 just past the prefix.
+    # The current prefix is (A), the 50 queries whose code drifted since
+    # r5; (B), the oldest remaining certificates, follows it.
     # tests/test_cert_ledger.py enforces that drifted/uncertified queries
     # sit inside this prefix.
     return {
@@ -124,11 +123,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #     payload mmref rejects raises, no stub decode) ---
         "media_image_features": q.media_image_features,
         "media_audio_features": q.media_audio_features,
-        # --- (B) the oldest remaining certificate: one of the r2 ones ---
-        "events_hourly": q.events_hourly,
+        #     ... plus the box-overlap telemetry (decode or fail: an
+        #     unreadable payload raises, no silent NULL row) ---
+        "extract_box_overlaps": q.extract_box_overlaps,
         # ---- end of the 50-entry certified prefix ----
-        # --- (B) continued: the last r2 certificate and the r3 ones
-        #     displaced by the drifted block, in registry order ---
+        # --- (B) the oldest remaining certificates: the two r2 ones and
+        #     the r3 ones displaced by the drifted block, in registry order ---
+        "events_hourly": q.events_hourly,
         "events_sessions": q.events_sessions,
         "extract_angle_mode": q.extract_angle_mode,
         "doc_token_counts": q.doc_token_counts,
@@ -217,7 +218,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_simhash64": q.doc_simhash64,
         "dedup_minhash_recall": q.dedup_minhash_recall,
         "doc_lang_agreement": q.doc_lang_agreement,
-        "extract_box_overlaps": q.extract_box_overlaps,
         "doc_quality_decile_bounds": q.doc_quality_decile_bounds,
         "tpch_nation_volume": q.tpch_nation_volume,
         "tpch_market_share": q.tpch_market_share,

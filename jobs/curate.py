@@ -34,8 +34,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=16)
     ap.add_argument("--wave-size", type=int, default=4)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ap.add_argument("--fail-after-waves", type=int, default=None,
-                    help="inject a crash after N waves (resume testing)")
     args = ap.parse_args()
 
     from ocr_image_to_text_spark.jobs.curate_job import run_curate_job
@@ -47,7 +45,7 @@ def main() -> None:
                       shuffle_partitions=int(args.cpus))
     summary = run_curate_job(
         spark, input_path, args.out, n_buckets=args.n_buckets,
-        wave_size=args.wave_size, fail_after_waves=args.fail_after_waves)
+        wave_size=args.wave_size)
     print(json.dumps(summary))
     spark.stop()
 

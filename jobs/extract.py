@@ -31,13 +31,7 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--wave-size", type=int, default=8)
-    ap.add_argument("--variant", default="v2",
-                choices=["v1", "v2", "v3", "xycut"])
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    ap.add_argument("--fail-after-waves", type=int, default=None,
-                    help="inject a crash after N waves (resume testing)")
-    ap.add_argument("--extras", action="store_true",
-                    help="include A5 flat_text + A9 avg_conf_x1e9 in the rollup")
     ap.add_argument("--max-payload-chars", type=int, default=None,
                     help="drop oversized payloads (count logged to manifest)")
     args = ap.parse_args()
@@ -51,8 +45,7 @@ def main() -> None:
     summary = run_extract_job(
         spark, input_path, args.out,
         n_buckets=args.n_buckets, wave_size=args.wave_size,
-        variant=args.variant, fail_after_waves=args.fail_after_waves,
-        max_payload_chars=args.max_payload_chars, extras=args.extras)
+        max_payload_chars=args.max_payload_chars)
     print(json.dumps(summary))
     spark.stop()
 

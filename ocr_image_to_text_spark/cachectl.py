@@ -10,16 +10,19 @@ tools/check_queries.py, tests) call `release_caches()` between queries
 — after the consuming action has materialized, so the unpersist never
 forces a recompute mid-query.
 
-The session-scoped extraction cache in queries._EXT_CACHE is a separate,
-deliberate cross-query reuse (one UDF pass per session); `release_all`
-releases that too for tests that assert a fully-bounded block store.
+`session_cached` is a separate, deliberate cross-query reuse: a frame
+several queries consume (the per-turn extraction) is persisted once per
+session, so its UDF pass runs once. `release_all` releases those frames
+too, for tests that assert a fully-bounded block store.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LIVE: list[DataFrame] = []
+# (Spark application id, *key) -> the frame session_cached persisted
+_SESSION: dict[tuple, DataFrame] = {}
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:
@@ -50,16 +53,33 @@ def release_caches() -> int:
     return n
 
 
-def release_all() -> int:
-    """release_caches() plus the session-scoped extraction cache."""
-    n = release_caches()
-    from . import queries
-
-    for k in list(queries._EXT_CACHE):
+def _evict(stale) -> int:
+    """Unpersist and forget the session-cached frames for whose key
+    `stale(key)` is true. Returns the number released."""
+    n = 0
+    for k in [k for k in _SESSION if stale(k)]:
         try:
-            queries._EXT_CACHE[k].unpersist()
+            _SESSION.pop(k).unpersist()
             n += 1
         except Exception:
-            pass
-        del queries._EXT_CACHE[k]
+            pass  # session already stopped
     return n
+
+
+def session_cached(spark: SparkSession, key: tuple, build) -> DataFrame:
+    """`build()` persisted once per Spark application and `key`."""
+    app_id = spark.sparkContext.applicationId
+    # Evict entries from previous sessions: their persisted blocks are gone
+    # with the old context, and long-lived processes cycling sessions would
+    # otherwise accumulate dead entries (and live ones leak block-store
+    # memory across tiers a restarted session never touches again).
+    _evict(lambda k: k[0] != app_id)
+    k = (app_id, *key)
+    if k not in _SESSION:
+        _SESSION[k] = build().persist()
+    return _SESSION[k]
+
+
+def release_all() -> int:
+    """release_caches() plus every session-cached frame."""
+    return release_caches() + _evict(lambda k: True)

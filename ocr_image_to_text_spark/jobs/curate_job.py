@@ -56,7 +56,6 @@ def run_curate_job(
     out_dir: str,
     n_buckets: int = 16,
     wave_size: int = 4,
-    fail_after_waves: int | None = None,
 ) -> dict:
     """Run (or resume) the curation job. Returns a summary dict."""
     from ..functions import textfn
@@ -109,4 +108,4 @@ def run_curate_job(
         spark, "curate_job", out_dir,
         {"input": input_path, "n_buckets": n_buckets},
         tuple(name for name, _ in stats), "n_kept", run_wave,
-        n_buckets, wave_size, fail_after_waves)
+        n_buckets, wave_size)

@@ -41,10 +41,10 @@ Output writes use **dynamic partition overwrite** per wave, so a wave that
 died mid-write (or before its manifest file was renamed into place) is
 cleanly re-written — the manifest row is the commit marker (write-ahead
 ordering: data first, then manifest). A resume must match the committed
-lineage on input, variant, extras, n_buckets, max_payload_chars and the
-rollup format (its schema); a manifest without one of those keys is
-refused too. This is the Parquet-warehouse emulation of Iceberg
-``MERGE INTO`` + snapshot commit
+lineage on input, variant (always ``v2``: the job writes the canonical
+rollup), n_buckets, max_payload_chars and the rollup format (its schema);
+a manifest without one of those keys is refused too. This is the
+Parquet-warehouse emulation of Iceberg ``MERGE INTO`` + snapshot commit
 (SURVEY.md §7: no Iceberg runtime jar is available here; on a real
 cluster the same logic targets an Iceberg manifest table and the data
 write becomes a single atomic ``overwritePartitions``).
@@ -81,16 +81,9 @@ def run_extract_job(
     out_dir: str,
     n_buckets: int = 32,
     wave_size: int = 8,
-    variant: str = "v2",
-    fail_after_waves: int | None = None,
     max_payload_chars: int | None = None,
-    extras: bool = False,
 ) -> dict:
-    """Run (or resume) the extraction job. Returns a summary dict.
-
-    ``fail_after_waves`` injects a crash after N committed waves — used by
-    the kill-and-resume test to prove checkpoint semantics.
-    """
+    """Run (or resume) the extraction job. Returns a summary dict."""
     rollup_dir = os.path.join(out_dir, "rollup")
     spans_dir = os.path.join(out_dir, "spans")
     salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -99,11 +92,11 @@ def run_extract_job(
             .withColumn("part_id", part_id_col(n_buckets)))
     # the rollup's schema as written (analysis only, no Spark job): it is
     # the rollup format of the lineage and the schema of the re-reads
-    rollup_schema = extract_turns(base, variant=variant, extras=extras) \
+    rollup_schema = extract_turns(base) \
         .withColumn("part_id", part_id_col(n_buckets)).schema
     lineage = {
-        "input": input_path, "variant": variant, "n_buckets": n_buckets,
-        "extras": extras, "max_payload_chars": max_payload_chars,
+        "input": input_path, "variant": "v2", "n_buckets": n_buckets,
+        "max_payload_chars": max_payload_chars,
         "rollup_format": rollup_schema.simpleString(),
     }
     observed = [(stat, F.lit(1) if src is None else F.col(src))
@@ -132,8 +125,7 @@ def run_extract_job(
         # the publish crash-consistent. No persist: caching span arrays in
         # the JVM heap measured 3x GC wall at 32 tasks, and disk-backed
         # re-reads ride the page cache.)
-        ext = (extract_turns(sub, variant=variant, partitions=salt_partitions,
-                             extras=extras)
+        ext = (extract_turns(sub, partitions=salt_partitions)
                .withColumn("part_id", part_id_col(n_buckets)))
         (ext.repartition("part_id")
          .sortWithinPartitions("conv_id", "turn_idx")
@@ -155,4 +147,4 @@ def run_extract_job(
     return manifest.run_waves(
         spark, "extract_job", out_dir, lineage,
         (*(stat for stat, _ in _STATS), "n_oversized"), "n_turns", run_wave,
-        n_buckets, wave_size, fail_after_waves)
+        n_buckets, wave_size)

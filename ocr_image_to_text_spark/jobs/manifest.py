@@ -7,10 +7,9 @@ calls the job's callback, which writes the wave's data (dynamic partition
 overwrite, so a re-run wave replaces its partitions) and returns the
 per-bucket stats it observed. Only THEN does the driver commit one
 manifest row per bucket (write-ahead ordering: data first, the manifest
-row is the commit marker). It can inject a crash after N waves, and
-returns the run summary. The manifest is a directory of small parquet
-files under ``<out>/_manifest``, with rows ``(part_id, status,
-<the job's stats>, wall_ms, run_id, lineage)``.
+row is the commit marker). It returns the run summary. The manifest is
+a directory of small parquet files under ``<out>/_manifest``, with rows
+``(part_id, status, <the job's stats>, wall_ms, run_id, lineage)``.
 
 The job's own process writes a commit's rows with pyarrow — no Spark job
 for a handful of rows — to a hidden temp file in the manifest directory
@@ -116,7 +115,6 @@ def run_waves(
     run_wave,
     n_buckets: int,
     wave_size: int,
-    fail_after_waves: int | None = None,
 ) -> dict:
     """Run (or resume) ``job``'s buckets ``0..n_buckets-1`` in waves of
     ``wave_size``. Returns the summary dict.
@@ -125,8 +123,7 @@ def run_waves(
     a mapping with ``<stat>_<part>`` for every stat of ``stats`` (the
     manifest's stat columns, in order) and part (a missing or NULL value
     commits 0). A resume must match the committed ``lineage`` on every
-    key. ``fail_after_waves`` injects a crash after N committed waves.
-    The summary's ``total`` is that stat summed over every committed
+    key. The summary's ``total`` is that stat summed over every committed
     bucket, this run's and earlier runs'.
     """
     schema = StructType([
@@ -151,7 +148,7 @@ def run_waves(
         {**lineage, "app_id": spark.sparkContext.applicationId})
 
     t_job0 = time.perf_counter()
-    for n_waves, i in enumerate(range(0, len(todo), wave_size), 1):
+    for i in range(0, len(todo), wave_size):
         parts = todo[i:i + wave_size]
         t0 = time.perf_counter()
         got = run_wave(parts)
@@ -162,9 +159,6 @@ def run_waves(
                  wall_ms, run_id, lineage_json) for p in parts])
         print(f"{job}: wave {parts[0]}..{parts[-1]} wall={wall_ms}ms "
               f"commit={time.perf_counter() - t1:.2f}s", flush=True)
-        if fail_after_waves is not None and n_waves >= fail_after_waves:
-            raise RuntimeError(
-                f"{job}: injected failure after {n_waves} waves")
 
     return {
         "run_id": run_id,

@@ -70,10 +70,7 @@ def overlap_kernel(payload_json: str):
 def overlap_udf(tool: pd.Series) -> pd.DataFrame:
     rows = []
     for payload in tool.to_numpy():
-        try:
-            r = overlap_kernel(payload)
-        except (ValueError, TypeError):
-            r = None
+        r = overlap_kernel(payload)
         rows.append(r if r is not None else (None, None, None))
     return pd.DataFrame(rows, columns=["n_boxes", "n_overlap_pairs",
                                        "max_iou_x1e6"])

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from . import dedup, similarity
 from .functions import textfn
 from .golden import ensure_goldens_for_sf_dir
-from .cachectl import tracked_cache
+from .cachectl import session_cached, tracked_cache
 from .operators.extract import extract_turns, spans_table
 from .transcripts import ensure_transcripts_for_sf_dir
 
@@ -43,28 +43,11 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per query. Of the spans only the int span_starts array is cached; the
 # line texts are re-split by spans_table (caching the string arrays in the
 # block store measured 3x GC wall at high concurrency).
-_EXT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _extracted(spark: SparkSession, sf_dir: str, variant: str = "v2") -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # Evict entries from previous sessions: their persisted blocks are gone
-    # with the old context, and long-lived processes cycling sessions would
-    # otherwise accumulate dead entries (and live ones leak block-store
-    # memory across tiers a restarted session never touches again).
-    for k in [k for k in _EXT_CACHE if k[0] != app_id]:
-        try:
-            _EXT_CACHE[k].unpersist()
-        except Exception:
-            pass  # old context already stopped
-        del _EXT_CACHE[k]
-    key = (app_id, os.path.normpath(sf_dir), variant)
-    cached = _EXT_CACHE.get(key)
-    if cached is None:
-        cached = extract_turns(_transcripts(spark, sf_dir), variant=variant,
-                               extras=True).persist()
-        _EXT_CACHE[key] = cached
-    return cached
+    return session_cached(
+        spark, (os.path.normpath(sf_dir), variant),
+        lambda: extract_turns(_transcripts(spark, sf_dir), variant=variant,
+                              extras=True))
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -1240,9 +1223,6 @@ def corpus_top_tokens_cms(spark, sf_dir, k: int = 100,
         e_r = F.coalesce(F.col(f"n{r}"), F.lit(0))
         est = e_r if est is None else F.least(est, e_r)
     return probe.select("token", "n", est.cast("long").alias("cms_est"))
-
-
-SQ_LEVELS = 255  # int8 scalar-quantization levels
 
 
 def emb_quantize_sq(spark, sf_dir):

@@ -24,10 +24,10 @@ def test_ledger_exists_and_covers_registry():
     import __spark_entry__ as entrymod
 
     ledger = cert_ledger.load_ledger()
-    assert ledger, "tools/cert_ledger.json missing — run cert_ledger.py init"
+    assert ledger, "tools/cert_ledger.json missing"
     reg = set(entrymod.queries().keys())
     # every registry query has a ledger row (new queries are added by
-    # init/sync; a missing row is treated as drifted by the guard below,
+    # sync; a missing row is treated as drifted by the guard below,
     # but the ledger file should still be regenerated when queries land)
     missing = reg - set(ledger)
     assert not missing, f"ledger missing rows for {sorted(missing)}"

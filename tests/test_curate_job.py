@@ -38,13 +38,13 @@ def _curated_sorted(spark, out_dir):
 
 
 def test_curate_kill_and_resume_matches_single_shot(
-        spark, tmp_path_factory, seeded_input):
+        spark, tmp_path_factory, seeded_input, crash_after_first_wave):
     out_a = str(tmp_path_factory.mktemp("curate_resume"))
     out_b = str(tmp_path_factory.mktemp("curate_single"))
 
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash_after_first_wave():
         run_curate_job(spark, seeded_input, out_a, n_buckets=N_BUCKETS,
-                       wave_size=WAVE, fail_after_waves=1)
+                       wave_size=WAVE)
     resumed = run_curate_job(spark, seeded_input, out_a,
                              n_buckets=N_BUCKETS, wave_size=WAVE)
     assert resumed["resumed_parts"] == WAVE
@@ -69,11 +69,11 @@ def test_curate_kill_and_resume_matches_single_shot(
 
 
 def test_curate_resume_refuses_changed_buckets(
-        spark, tmp_path_factory, seeded_input):
+        spark, tmp_path_factory, seeded_input, crash_after_first_wave):
     out = str(tmp_path_factory.mktemp("curate_mismatch"))
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash_after_first_wave():
         run_curate_job(spark, seeded_input, out, n_buckets=N_BUCKETS,
-                       wave_size=WAVE, fail_after_waves=1)
+                       wave_size=WAVE)
     with pytest.raises(ValueError, match="resume mismatch"):
         run_curate_job(spark, seeded_input, out, n_buckets=N_BUCKETS * 2,
                        wave_size=WAVE)

@@ -1,11 +1,16 @@
-"""Dilated box-overlap: numpy kernel == naive pyref twin, and the
-dilation actually bites (raw synthetic boxes rarely touch)."""
+"""Dilated box-overlap: numpy kernel == naive pyref twin, the dilation
+actually bites (raw synthetic boxes rarely touch), and a payload the twin
+cannot read fails the Spark pass instead of vanishing as a NULL row."""
 
 import json
 import random
 
+import pytest
+from pyspark.sql import functions as F
+
 from ocr_image_to_text_spark import pyref
-from ocr_image_to_text_spark.operators.overlap import overlap_kernel
+from ocr_image_to_text_spark.operators.overlap import (overlap_kernel,
+                                                       overlap_udf)
 from ocr_image_to_text_spark.transcripts import (
     BOX_FIXTURES,
     _boxes_fixture,
@@ -43,3 +48,18 @@ def test_scatter_match_twin():
                  f"t{i}", 0.9])
         payload = json.dumps({"h": 600, "w": 800, "boxes": boxes})
         assert overlap_kernel(payload) == pyref.box_overlap_stats(payload)
+
+
+@pytest.mark.parametrize("payload", [
+    '{"h": 600, "w": 800, "boxes": [',    # truncated JSON
+    '{"h": 600, "w": 800, "boxes": null}',
+], ids=["truncated", "null_boxes"])
+def test_unreadable_payload_raises_like_the_twin(spark, payload):
+    with pytest.raises((ValueError, TypeError)) as twin:
+        pyref.box_overlap_stats(payload)
+    # the extract_box_overlaps plan: the UDF, then the empty-page filter
+    rows = (spark.createDataFrame([(payload,)], "tool string")
+            .select(overlap_udf(F.col("tool")).alias("o"))
+            .filter(F.col("o.n_boxes").isNotNull()))
+    with pytest.raises(Exception, match=type(twin.value).__name__):
+        rows.collect()

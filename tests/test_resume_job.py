@@ -2,15 +2,15 @@
 
 north_rule: "checkpoints per-partition completion with lineage + extraction
 metrics ... to a manifest table for resumable restarts". The test kills the
-job after one committed wave, resumes, and proves the union equals a
-single-shot run — and that the manifest records both runs' lineage. The
-same holds for a crash inside a wave: after its rollup write, and after
-its spans write but before its manifest commit.
+job after one committed wave (its second manifest commit raises), resumes,
+and proves the union equals a single-shot run — and that the manifest
+records both runs' lineage. The same holds for a crash inside a wave:
+after its rollup write, and after its spans write but before its manifest
+commit.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyarrow as pa
@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from ocr_image_to_text_spark.jobs import extract_job, manifest
 from ocr_image_to_text_spark.jobs.extract_job import run_extract_job
 from ocr_image_to_text_spark.transcripts import ensure_transcripts
+
+from conftest import fail_on_call, rewrite_lineage
 
 N_BUCKETS = 8
 WAVE = 3
@@ -45,13 +47,14 @@ def single_shot(spark, tmp_path_factory, tpath):
 
 
 def test_kill_and_resume_matches_single_shot(spark, tmp_path_factory, tpath,
-                                            single_shot):
+                                            single_shot,
+                                            crash_after_first_wave):
     out_a = str(tmp_path_factory.mktemp("resume"))
 
     # Run A: crash after the first committed wave.
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with crash_after_first_wave():
         run_extract_job(spark, tpath, out_a, n_buckets=N_BUCKETS,
-                        wave_size=WAVE, fail_after_waves=1)
+                        wave_size=WAVE)
     m1 = spark.read.parquet(os.path.join(out_a, "_manifest"))
     done_parts = {r.part_id for r in m1.filter("status = 'done'").collect()}
     assert 0 < len(done_parts) < N_BUCKETS  # partial progress committed
@@ -89,18 +92,6 @@ def _manifest_totals(spark, out_dir):
     return done.agg(*(F.sum(c).alias(c) for c in stats)).collect()[0].asDict()
 
 
-def _fail_on_call(target, n):
-    """``target`` wrapped to raise on its n-th call."""
-    calls = []
-
-    def wrapped(*args, **kwargs):
-        calls.append(1)
-        if len(calls) == n:
-            raise RuntimeError("crash point")
-        return target(*args, **kwargs)
-    return wrapped
-
-
 @pytest.mark.parametrize("module, name", [
     (extract_job, "spans_table"),  # after wave 2's rollup write
     (manifest, "commit"),          # after wave 2's spans write
@@ -109,7 +100,7 @@ def test_crash_inside_a_wave_resumes_row_exact(
         spark, tmp_path, tpath, single_shot, monkeypatch, module, name):
     out = str(tmp_path / "job")
     with monkeypatch.context() as m:
-        m.setattr(module, name, _fail_on_call(getattr(module, name), 2))
+        m.setattr(module, name, fail_on_call(getattr(module, name), 2))
         with pytest.raises(RuntimeError, match="crash point"):
             run_extract_job(spark, tpath, out, n_buckets=N_BUCKETS,
                             wave_size=WAVE)
@@ -132,15 +123,15 @@ def test_idempotent_rerun_no_op(spark, tmp_path_factory, tpath):
     assert m.filter("status = 'done'").count() == 4  # nothing re-appended
 
 
-def test_leftover_manifest_temp_file_is_not_a_commit(spark, tmp_path, tpath):
+def test_leftover_manifest_temp_file_is_not_a_commit(spark, tmp_path, tpath,
+                                                    crash_after_first_wave):
     """A crash between the manifest file write and its rename leaves a
     hidden temp file: Spark, resume and the summary all ignore it, and
     its parts run again."""
     out = str(tmp_path / "job")
     mdir = os.path.join(out, "_manifest")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
-                        fail_after_waves=1)
+    with crash_after_first_wave():
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
     done = manifest.done_parts(mdir)
     assert len(done) == 2
     # the uncommitted wave: the committed rows, relabelled to its parts
@@ -159,27 +150,15 @@ def test_leftover_manifest_temp_file_is_not_a_commit(spark, tmp_path, tpath):
     assert s["n_turns"] == roll.count() == spark.read.parquet(tpath).count()
 
 
-def test_resume_refuses_manifest_without_rollup_format(spark, tmp_path, tpath):
+def test_resume_refuses_manifest_without_rollup_format(
+        spark, tmp_path, tpath, crash_after_first_wave):
     """A manifest written before the lineage recorded the rollup format
     may describe a rollup this code cannot read back: refuse to resume."""
     out = str(tmp_path / "job")
-    mdir = os.path.join(out, "_manifest")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
-                        fail_after_waves=1)
-    for name in os.listdir(mdir):
-        if name.startswith((".", "_")):
-            continue
-        path = os.path.join(mdir, name)
-        t = pq.read_table(path)
-        lineage = []
-        for raw in t.column("lineage").to_pylist():
-            d = json.loads(raw)
-            del d["rollup_format"]
-            lineage.append(json.dumps(d))
-        t = t.set_column(t.schema.get_field_index("lineage"), "lineage",
-                         pa.array(lineage, pa.string()))
-        pq.write_table(t, path)
+    with crash_after_first_wave():
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
+    rewrite_lineage(os.path.join(out, "_manifest"),
+                    lambda d: d.pop("rollup_format"))
     with pytest.raises(ValueError, match="resume mismatch"):
         run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
 

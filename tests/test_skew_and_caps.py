@@ -88,25 +88,21 @@ def test_oversized_payload_cap_logged_not_silent(spark, tmp_path):
     assert roll.count() == n_keep
 
 
-def test_resume_rejects_changed_settings(spark, tmp_path):
-    """Resuming into an existing --out with a different extras/variant
-    would mix schemas in the committed stage/rollup dirs, and a different
-    input or payload cap would mix rows of two runs — must refuse."""
+def test_resume_rejects_changed_settings(spark, tmp_path,
+                                        crash_after_first_wave):
+    """Resuming into an existing --out under a different input or payload
+    cap would mix rows of two runs, and a manifest committed under another
+    layout variant would mix rollups of two layouts — must refuse."""
     import shutil
 
     import pytest
 
+    from conftest import rewrite_lineage
+
     tpath = ensure_transcripts("t1")
     out = str(tmp_path / "job")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
-                        fail_after_waves=1)  # leaves a partial manifest
-    with pytest.raises(ValueError, match="resume mismatch"):
-        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
-                        extras=True)
-    with pytest.raises(ValueError, match="resume mismatch"):
-        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
-                        variant="v1")
+    with crash_after_first_wave():  # leaves a partial manifest
+        run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
     with pytest.raises(ValueError, match="resume mismatch"):
         run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2,
                         max_payload_chars=800)
@@ -114,6 +110,14 @@ def test_resume_rejects_changed_settings(spark, tmp_path):
     shutil.copy(tpath, moved)
     with pytest.raises(ValueError, match="resume mismatch"):
         run_extract_job(spark, moved, out, n_buckets=4, wave_size=2)
+    partial = str(tmp_path / "partial")
+    shutil.copytree(out, partial)
     # unchanged settings resume fine
     s = run_extract_job(spark, tpath, out, n_buckets=4, wave_size=2)
     assert s["resumed_parts"] == 2
+    # the job writes the v2 layout only: a partial manifest committed
+    # under another variant is refused, not resumed in v2
+    rewrite_lineage(os.path.join(partial, "_manifest"),
+                    lambda d: d.update(variant="v1"))
+    with pytest.raises(ValueError, match="resume mismatch"):
+        run_extract_job(spark, tpath, partial, n_buckets=4, wave_size=2)

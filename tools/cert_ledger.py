@@ -22,10 +22,12 @@ Lifecycle (per round):
                 recorded from the HEAD the driver certified
   during      : edit code freely; the pytest forces drifted queries into
                 the front block
-  (init)      : `init` bootstrapped the ledger at r5 HEAD — historical
-                hashes are unrecoverable, so drift detection applies
-                from r5 onward; every query changed during r5 was placed
-                in the r5 front block by hand.
+
+The ledger was bootstrapped at r5 HEAD (historical hashes are
+unrecoverable), so drift detection applies from r5 onward. There is no
+command that re-records every hash: that would certify code no
+CORRECTNESS run has checked. Only `sync` records a hash, and only for a
+query its artifact certified.
 
 Hash granularity notes: module references (`dedup.foo(...)`) resolve the
 attribute actually named in the caller's code; function-local
@@ -56,25 +58,6 @@ LEDGER_PATH = os.path.join(REPO, "tools", "cert_ledger.json")
 # Driver prefix budget: 40/46/50/50 in r1-r4; 50 is the planning figure.
 BUDGET = 50
 
-# The 31 queries VERDICT r4 verified with the driver-simulation harness
-# (check_queries.py full-value comparison) but that never appeared in a
-# CORRECTNESS_r*.json artifact — certified "judge-only" until a driver
-# artifact covers them.
-JUDGE_R04 = [
-    "tpch_local_supplier_revenue", "tpch_promo_revenue",
-    "media_video_frames", "events_asof_join", "dedup_clusters",
-    "semdedup_prune", "dedup_dup_spans", "dedup_c4_spans",
-    "doc_length_histogram", "corpus_length_quantiles",
-    "corpus_sample_stratified", "corpus_dsir_weights", "corpus_mix_budget",
-    "corpus_curation_pipeline", "corpus_decontaminate",
-    "corpus_decontaminate_bloom", "corpus_pack_sequences",
-    "corpus_pipeline_v2", "corpus_pipeline_v3", "doc_quality_gopher",
-    "doc_repetition_signals", "doc_c4_page_filter",
-    "doc_c4_page_filter_seeded", "corpus_top_tokens", "corpus_top_tokens_cms",
-    "corpus_vocab_hll", "doc_tfidf_topk", "doc_unigram_logprob",
-    "doc_bigram_logprob", "doc_bm25_topk", "chunk_cosine_topk",
-]
-
 _LOCAL_IMPORT_RE = re.compile(
     rf"from\s+(?:\.|{PKG}\.?)([\w.]*)\s+import\s+(\([^)]*\)|[\w, ]+)")
 
@@ -83,7 +66,7 @@ _CONST_TYPES = (int, float, str, bool, bytes, tuple, frozenset)
 
 def _is_const_name(n: str) -> bool:
     """UPPERCASE public names are hashed as constants; underscore-prefixed
-    uppercase names (_LIVE, _EXT_CACHE, ...) are runtime caches whose live
+    uppercase names (_LIVE, _SESSION, ...) are runtime caches whose live
     repr depends on what already executed in the process — never hash."""
     return n.isupper() and not n.startswith("_")
 
@@ -220,35 +203,6 @@ def save_ledger(ledger: dict) -> None:
         f.write("\n")
 
 
-def _artifact_rounds() -> dict[str, str]:
-    """query → last round with a fully-green CORRECTNESS artifact row."""
-    rounds: dict[str, str] = {}
-    for fname in sorted(os.listdir(REPO)):
-        m = re.fullmatch(r"CORRECTNESS_(r\d+)\.json", fname)
-        if not m:
-            continue
-        with open(os.path.join(REPO, fname)) as f:
-            art = json.load(f)
-        for name, rec in art.items():
-            if (rec.get("rows_match") and rec.get("schema_match")
-                    and rec.get("hash_match") and rec.get("err") is None):
-                rounds[name] = m.group(1)
-    return rounds
-
-
-def cmd_init() -> None:
-    rounds = _artifact_rounds()
-    for name in JUDGE_R04:
-        rounds.setdefault(name, "r04-judge")
-    hashes = current_hashes()
-    ledger = {}
-    for name, h in hashes.items():
-        ledger[name] = {"round": rounds.get(name), "hash": h}
-    save_ledger(ledger)
-    uncert = [n for n, r in ledger.items() if r["round"] is None]
-    print(f"init: {len(ledger)} queries, {len(uncert)} never certified: {uncert}")
-
-
 def cmd_sync(rnd: str) -> None:
     """Ingest CORRECTNESS_<rnd>.json. Run at ROUND START, before editing
     code, so the recorded hash is the HEAD the driver certified."""
@@ -302,9 +256,7 @@ def cmd_check() -> int:
 
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "check"
-    if cmd == "init":
-        cmd_init()
-    elif cmd == "sync":
+    if cmd == "sync":
         cmd_sync(sys.argv[2])
     elif cmd == "check":
         sys.exit(cmd_check())
