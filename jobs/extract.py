@@ -10,6 +10,12 @@ Sandbox (local mode, session built here):
     python jobs/extract.py --sf-dir /root/testdata/sf0.001 --out /tmp/exout
 
 Re-running with the same --out resumes from the manifest checkpoint.
+
+JVM start-up: when this script builds the session itself, get_spark starts
+the driver JVM from a class-data archive it keeps in
+~/.cache/ocr_image_to_text_spark/cds (ocr_image_to_text_spark/session.py).
+Under spark-submit the JVM is already running, so pass the archive
+yourself: --driver-java-options "-XX:SharedArchiveFile=<key>.jsa -Xshare:auto".
 """
 
 from __future__ import annotations

@@ -8,10 +8,13 @@ pandas+pyarrow import in each of 32 workers simultaneously on first UDF
 use (a measured multi-second cold-start storm on the bench tier).
 
 The preload is best-effort: a missing module must never kill the daemon
-(workers would just re-import lazily as before).
+(workers would just re-import lazily as before). A module that fails to
+import is named on stderr; stdout carries the daemon's handshake with the
+JVM.
 """
 
 import importlib
+import sys
 
 for _mod in (
     "numpy",
@@ -29,8 +32,9 @@ for _mod in (
 ):
     try:
         importlib.import_module(_mod)
-    except Exception:
-        pass  # best-effort warm-up only
+    except Exception as e:  # best-effort warm-up only
+        print(f"daemon_preload: cannot import {_mod}: {type(e).__name__}: {e}",
+              file=sys.stderr, flush=True)
 
 from pyspark.daemon import manager  # noqa: E402
 
